@@ -193,9 +193,10 @@ object IndexBuilder {
     val maxDocId = scalars.getLong(0)
     val totalTokens = scalars.getLong(1)
     val avgdl = totalTokens.toDouble / nDocs.toDouble
-    // bucket ids must fit an Int: bucket = docId div bucketSize is
-    // computed as a saturating SQL cast here but a WRAPPING .toInt in
-    // the searcher — past Int.Max the two silently disagree. 2³¹
+    // bucket ids must fit an Int: bucket = docId div bucketSize is a
+    // BIGINT → INT cast here and a .toInt in the searcher, and BOTH wrap
+    // past Int.Max — a wrapped id would alias another bucket, so this
+    // require is the only guard. 2³¹
     // buckets × the default 2²⁰ width covers 2⁵¹ ≈ 2.3·10¹⁵ docs; the
     // realistic trip is a SMALL fixedBucketSize on a generation at a
     // large id offset (late in a 10¹²-doc streamed ingest) — pin a
@@ -335,25 +336,38 @@ object IndexBuilder {
     Meta.readStats(root)
   }
 
-  /** Submit thunks to [[stagePool]] and await them in input order,
-    * rethrowing a failed thunk's ORIGINAL exception instead of the
-    * pool's ExecutionException wrapper — concurrent callers keep the
-    * exact error contract of the sequential map they replaced (e.g. a
+  /** Submit thunks to [[stagePool]] and await EVERY one of them in input
+    * order, rethrowing the first failed thunk's ORIGINAL exception
+    * instead of the pool's ExecutionException wrapper, with any later
+    * failures attached as suppressed — concurrent callers keep the exact
+    * error contract of the sequential map they replaced (e.g. a
     * missing-positions-sidecar require must still surface as
-    * IllegalArgumentException with its remediation message).
+    * IllegalArgumentException with its remediation message), and no
+    * submitted thunk is left running unobserved.
     */
-  private[graft] def awaitAll[T](fs: Seq[() => T]): Seq[T] =
-    fs.map { f =>
+  private[graft] def awaitAll[T](fs: Seq[() => T]): Seq[T] = {
+    val futures = fs.map { f =>
       stagePool.submit(new java.util.concurrent.Callable[T] {
         override def call(): T = f()
       })
-    }.map { fu =>
+    }
+    var first: Throwable = null
+    val out = futures.map { fu =>
       try fu.get()
       catch {
-        case e: java.util.concurrent.ExecutionException if e.getCause != null =>
-          throw e.getCause
+        case e: Throwable =>
+          val cause = e match {
+            case ee: java.util.concurrent.ExecutionException if ee.getCause != null => ee.getCause
+            case other => other
+          }
+          if (first == null) first = cause
+          else if (cause ne first) first.addSuppressed(cause)
+          null.asInstanceOf[T]
       }
     }
+    if (first != null) throw first
+    out
+  }
 
   /** Shared pool for the overlapped build stage (daemon threads — a
     * crashed driver must not hang on pool shutdown). Concurrent builds

@@ -1,9 +1,11 @@
 package graft.index
 
 import scala.collection.mutable
+import scala.reflect.ClassTag
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.util.SerializableConfiguration
 
 import graft.analyze.Tokenizer
 import graft.codec.PostingCodec
@@ -16,14 +18,19 @@ import graft.query.Bm25
   * `merge_into` /root/reference/include/usearch/index.hpp:2650-2670):
   *
   *   1. tokenize query → sorted unique terms
-  *   2. ONE dictionary lookup (tiny filtered Parquet read) → idf, term
-  *      UBs, and the per-term bucket lists (all query planning, one job)
+  *   2. ONE dictionary point read on the driver ([[ParquetPointReader]]:
+  *      footer key ranges pick the file, the page index and a record
+  *      filter the rows — no Spark job) → idf, term UBs, and the per-term
+  *      bucket lists: all query planning
   *   3. postings scan pruned by `term IN (...)` pushdown + bucket
-  *      partition filter; doclen read pruned to the same buckets
+  *      partition filter, grouped by the `bucket` column (one exchange)
   *   4. per-bucket WAND (doc-at-a-time, term-UB pivoting, block skipping)
-  *      inside `cogroup` — emits each bucket's top-k
+  *      in [[perBucket]]: each bucket task point-reads its own doclens
+  *      row and emits the bucket's top-k
   *   5. global ordered merge: orderBy(score desc, docId asc).limit(k)
   *      (Catalyst `TakeOrderedAndProject` = partial top-k + final merge)
+  *
+  * A search is two Spark jobs: the postings shuffle and the merge.
   *
   * `exact = true` disables pruning (θ stays -∞) but keeps the identical
   * accumulation order, so exact and WAND results are bit-identical —
@@ -39,24 +46,24 @@ final class Searcher(spark: SparkSession, root: String, cacheHot: Boolean = fals
   val stats: IndexStats = Meta.readStats(root)
 
   // Default: every dictionary/doclen access is a PRUNED Parquet read —
-  // `term IN (...)` pushdown against the range-partitioned term-sorted
-  // dictionary touches one file + one row group, and at 10¹² docs the
+  // a footer-indexed point read of the range-partitioned term-sorted
+  // dictionary touches one file and a few pages, and at 10¹² docs the
   // dictionary never needs to fit in RAM. `cacheHot = true` is the
   // opt-in repeated-query serving mode (the usearch `view`/in-RAM
-  // analog): the dictionary loads ONCE into a driver-side map — query
-  // planning then costs ZERO Spark jobs — and the norms pin in executor
-  // memory. For bounded indexes served hot, not the scale default.
+  // analog): the dictionary loads ONCE into a driver-side map and the
+  // norms pin in executor memory. For bounded indexes served hot, not
+  // the scale default.
   private lazy val dictDS = {
     val raw = spark.read.parquet(layout.dict)
-    // round-2 format change: DictRow gained per-term bucket lists. An
-    // index written by the old format would otherwise die inside an
-    // AnalysisException — surface the actionable message instead.
-    if (!raw.columns.contains("buckets"))
-      throw new IllegalStateException(
-        s"index at $root was built by an older graft version (dictionary has " +
-          "no per-term bucket lists) — delete the index root and rebuild")
+    if (!raw.columns.contains("buckets")) throw oldDictFormat
     raw.as[DictRow]
   }
+  // round-2 format change: DictRow gained per-term bucket lists. An index
+  // written by the old format would otherwise die inside a schema error —
+  // surface the actionable message instead.
+  private def oldDictFormat = new IllegalStateException(
+    s"index at $root was built by an older graft version (dictionary has " +
+      "no per-term bucket lists) — delete the index root and rebuild")
   private lazy val hotDict: Map[String, DictRow] =
     dictDS.collect().map(d => d.term -> d).toMap
   private lazy val doclensDS = {
@@ -64,14 +71,64 @@ final class Searcher(spark: SparkSession, root: String, cacheHot: Boolean = fals
     if (cacheHot) { val c = d.cache(); c.count(); c } else d
   }
 
-  // ONE file-listing/schema resolution per Searcher for the big tables:
-  // index roots are immutable once their stages commit (merges write new
-  // roots; tombstoning is a read-time anti-join), so the cached relation
-  // cannot go stale. Re-running `spark.read.parquet` per query re-listed
-  // the partitioned segments dir and re-read footers on every search —
-  // a measured share of the per-query job floor on the sequential path.
+  // ONE file listing per Searcher for every table: index roots are
+  // immutable once their stages commit (merges write new roots;
+  // tombstoning is a read-time anti-join), so cached listings cannot go
+  // stale. The session's Hadoop configuration ships to the executors
+  // once per Searcher, as one broadcast both point readers share.
+  private lazy val hadoopConf = spark.sparkContext.broadcast(new SerializableConfiguration(
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionState.newHadoopConf()))
+  private lazy val dictReader = {
+    val r = new ParquetPointReader[String](layout.dict, "term", hadoopConf)
+    if (r.columns.nonEmpty && !r.columns.contains("buckets")) throw oldDictFormat
+    r
+  }
+  private lazy val doclensReader = new ParquetPointReader[Int](layout.doclens, "bucket", hadoopConf)
   private lazy val segmentsDS = spark.read.parquet(layout.segments).as[PostingRow]
-  private lazy val positionsDS = spark.read.parquet(layout.positions).as[PosRow]
+  // resolved only once the positions stage has committed, so a Searcher
+  // opened before buildPositions sees the sidecar it later writes
+  @volatile private var positionsRel: Dataset[PosRow] = _
+  private def positionsDS: Dataset[PosRow] = {
+    if (positionsRel == null) {
+      require(hasPositions,
+        s"index at $root has no positions sidecar — run IndexBuilder.buildPositions first")
+      positionsRel = spark.read.parquet(layout.positions).as[PosRow]
+    }
+    positionsRel
+  }
+
+  /** `f(bucket, rows)` once per bucket of `rows` (postings or
+    * positions), grouped by their `bucket` COLUMN: one hash exchange and
+    * no per-row deserialization just to compute the key, which
+    * `groupByKey(_.bucket)` pays. Closures must not capture the
+    * Searcher: per-query values ride them as locals.
+    */
+  private def byBucket[R: Encoder: ClassTag, U: Encoder](rows: Dataset[R])(
+      f: (Int, Array[R]) => Iterator[U]): Dataset[U] =
+    rows.groupBy(col("bucket")).as[Int, R].flatMapGroups((bucket, it) => f(bucket, it.toArray))
+
+  /** A user `allow` predicate can be large: it ships as a broadcast, and
+    * the common unfiltered search creates none.
+    */
+  private def broadcastAllow(allow: Option[Long => Boolean]) =
+    allow.map(spark.sparkContext.broadcast(_))
+
+  /** The per-bucket seam of every scoring path: [[byBucket]] with the
+    * bucket's doclens row point-read inside its task. Postings without a
+    * norms row are index corruption (e.g. a bucketSize mismatch from a
+    * bad resume): fail loudly instead of dropping the bucket's hits.
+    */
+  private def perBucket[R: Encoder: ClassTag, U: Encoder](rows: Dataset[R], buckets: Seq[Int])(
+      kernel: (Int, Array[R], DocLenRow) => Iterator[U]): Dataset[U] = {
+    val norms = doclensReader.covering(buckets)
+    val rootLocal = root
+    byBucket(rows) { (bucket, posts) =>
+      val dl = norms.read(Seq(bucket))(Searcher.docLenRow).headOption.getOrElse(
+        throw new IllegalStateException(
+          s"index invariant violated: bucket $bucket has postings but no doclens row ($rootLocal)"))
+      kernel(bucket, posts, dl)
+    }
+  }
 
   // ---- hot serving path (driver-side, cacheHot only) -------------------
   // The usearch in-RAM serving analog taken to its conclusion: once the
@@ -240,6 +297,9 @@ final class Searcher(spark: SparkSession, root: String, cacheHot: Boolean = fals
     * the driver holds one row.
     */
   def integrityReport(checkPositions: Boolean = false): DataFrame = {
+    // resolved on the caller's thread, before any job: an uncommitted
+    // sidecar fails with its remediation message
+    val positions = if (checkPositions) Some(positionsDS) else None
     val bs = stats.bucketSize
     // decoded per-(term, bucket) facts
     val perRow = segmentsDS
@@ -303,9 +363,8 @@ final class Searcher(spark: SparkSession, root: String, cacheHot: Boolean = fals
         .head()
     }
     val badPosF = submit {
-      if (!checkPositions) 0L
-      else {
-        val posFlat = positionsDS
+      positions.fold(0L) { pos =>
+        val posFlat = pos
           .flatMap { r =>
             val p = graft.codec.PositionCodec.decodeBlocks(r.blocks.map(_.bytes).toSeq)
             p.docIds.iterator.zip(p.positions.iterator).map { case (d, ps) =>
@@ -360,11 +419,7 @@ final class Searcher(spark: SparkSession, root: String, cacheHot: Boolean = fals
     if (cacheHot)
       terms.iterator.flatMap(t => hotDict.get(t).map(t -> _)).toMap
     else
-      dictDS
-        .where($"term".isin(terms: _*))
-        .collect()
-        .map(d => d.term -> d)
-        .toMap
+      dictReader.read(terms)(Searcher.dictRow).map(d => d.term -> d).toMap
   }
 
   /** Decoded (term, doc_id) membership pairs for the given terms — ONE
@@ -465,27 +520,15 @@ final class Searcher(spark: SparkSession, root: String, cacheHot: Boolean = fals
     val buckets = phraseBuckets.values.flatten.toSeq.distinct
     if (buckets.isEmpty) return empty
     val liveTerms = live.flatMap(_._2).distinct
-    val qsB = spark.sparkContext.broadcast(live)
-    val pbB = spark.sparkContext.broadcast(phraseBuckets)
-    positionsDS
-      .where($"term".isin(liveTerms: _*) && $"bucket".isin(buckets: _*))
-      .groupByKey(_.bucket)
-      .flatMapGroups { (bucket, it) =>
-        val rows = it.toArray
-        // one row per (term, bucket) is the same index invariant the TAAT
-        // paths assert — a violating merge artifact must fail loudly
-        val byTerm = rows.iterator.map(r =>
-          r.term -> graft.codec.PositionCodec.decodeBlocks(r.blocks.map(_.bytes).toSeq)).toMap
-        if (byTerm.size != rows.length)
-          throw new IllegalStateException(
-            s"positions invariant violated in bucket $bucket: ${rows.length} rows, " +
-              s"${byTerm.size} terms")
-        qsB.value.iterator
-          .filter { case (id, _) => pbB.value(id).contains(bucket) }
+    byBucket(positionsDS.where($"term".isin(liveTerms: _*) && $"bucket".isin(buckets: _*))) {
+      (bucket, rows) =>
+        val byTerm = Searcher.decodePositions(bucket, rows)
+        live.iterator
+          .filter { case (id, _) => phraseBuckets(id).contains(bucket) }
           .flatMap { case (id, ts) =>
             Searcher.phraseHitsInBucket(ts, byTerm).map { case (d, n) => (id, d, n) }
           }
-      }
+    }
       .toDF("phrase_id", "doc_id", "phrase_tf")
       .orderBy(col("phrase_id"), col("doc_id"))
   }
@@ -529,26 +572,16 @@ final class Searcher(spark: SparkSession, root: String, cacheHot: Boolean = fals
     val buckets = queryBuckets.values.flatten.toSeq.distinct
     if (buckets.isEmpty) return empty
     val liveTerms = live.flatMap(_._2).distinct
-    val qsB = spark.sparkContext.broadcast(live)
-    val qbB = spark.sparkContext.broadcast(queryBuckets)
-    positionsDS
-      .where($"term".isin(liveTerms: _*) && $"bucket".isin(buckets: _*))
-      .groupByKey(_.bucket)
-      .flatMapGroups { (bucket, it) =>
-        val rows = it.toArray
-        val byTerm = rows.iterator.map(r =>
-          r.term -> graft.codec.PositionCodec.decodeBlocks(r.blocks.map(_.bytes).toSeq)).toMap
-        if (byTerm.size != rows.length)
-          throw new IllegalStateException(
-            s"positions invariant violated in bucket $bucket: ${rows.length} rows, " +
-              s"${byTerm.size} terms")
-        qsB.value.iterator
-          .filter { case (id, _, _) => qbB.value(id).contains(bucket) }
+    byBucket(positionsDS.where($"term".isin(liveTerms: _*) && $"bucket".isin(buckets: _*))) {
+      (bucket, rows) =>
+        val byTerm = Searcher.decodePositions(bucket, rows)
+        live.iterator
+          .filter { case (id, _, _) => queryBuckets(id).contains(bucket) }
           .flatMap { case (id, ts, w) =>
             Searcher.proximityHitsInBucket(ts, w, byTerm)
               .map { case (d, span, start) => (id, d, span, start) }
           }
-      }
+    }
       .toDF("query_id", "doc_id", "min_span", "span_start")
       .orderBy(col("query_id"), col("doc_id"))
   }
@@ -599,26 +632,16 @@ final class Searcher(spark: SparkSession, root: String, cacheHot: Boolean = fals
     val buckets = queryBuckets.values.flatten.toSeq.distinct
     if (buckets.isEmpty) return empty
     val liveTerms = live.flatMap(_._2).distinct
-    val qsB = spark.sparkContext.broadcast(live)
-    val qbB = spark.sparkContext.broadcast(queryBuckets)
-    positionsDS
-      .where($"term".isin(liveTerms: _*) && $"bucket".isin(buckets: _*))
-      .groupByKey(_.bucket)
-      .flatMapGroups { (bucket, it) =>
-        val rows = it.toArray
-        val byTerm = rows.iterator.map(r =>
-          r.term -> graft.codec.PositionCodec.decodeBlocks(r.blocks.map(_.bytes).toSeq)).toMap
-        if (byTerm.size != rows.length)
-          throw new IllegalStateException(
-            s"positions invariant violated in bucket $bucket: ${rows.length} rows, " +
-              s"${byTerm.size} terms")
-        qsB.value.iterator
-          .filter { case (id, _, _) => qbB.value(id).contains(bucket) }
+    byBucket(positionsDS.where($"term".isin(liveTerms: _*) && $"bucket".isin(buckets: _*))) {
+      (bucket, rows) =>
+        val byTerm = Searcher.decodePositions(bucket, rows)
+        live.iterator
+          .filter { case (id, _, _) => queryBuckets(id).contains(bucket) }
           .flatMap { case (id, ts, w) =>
             Searcher.orderedSpanHitsInBucket(ts, w, byTerm)
               .map { case (d, span, start) => (id, d, span, start) }
           }
-      }
+    }
       .toDF("query_id", "doc_id", "min_span", "span_start")
       .orderBy(col("query_id"), col("doc_id"))
   }
@@ -658,42 +681,38 @@ final class Searcher(spark: SparkSession, root: String, cacheHot: Boolean = fals
     }.toMap
     val buckets = queryBuckets.values.flatten.toSeq.distinct
     val liveTerms = live.flatMap(_._2).distinct
-    val qsB = spark.sparkContext.broadcast(live)
-    val qbB = spark.sparkContext.broadcast(queryBuckets)
-    val partials = segmentsDS
-      .where($"term".isin(liveTerms: _*) && $"bucket".isin(buckets: _*))
-      .groupByKey(_.bucket)
-      .flatMapGroups { (bucket, it) =>
-        val rows = it.toArray
-        val decoded = new java.util.HashMap[String, graft.codec.Postings]()
-        rows.foreach(r => decoded.put(r.term,
-          PostingCodec.decodeBlocks(r.blocks.map(_.bytes).toSeq)))
-        if (decoded.size != rows.length)
-          throw new IllegalStateException(
-            s"index invariant violated: bucket $bucket holds more than one " +
-              s"segment row per term (${rows.length} rows, ${decoded.size} terms)")
-        qsB.value.iterator
-          .filter { case (id, _) => qbB.value(id).contains(bucket) }
-          .map { case (id, ts) =>
-            val seen = new java.util.HashSet[Long]()
-            var tfSum = 0L
-            ts.foreach { t =>
-              val p = decoded.get(t)
-              if (p != null) {
-                var i = 0
-                while (i < p.size) {
-                  seen.add(p.docIds(i))
-                  tfSum += p.tfs(i)
-                  i += 1
+    val partials =
+      byBucket(segmentsDS.where($"term".isin(liveTerms: _*) && $"bucket".isin(buckets: _*))) {
+        (bucket, rows) =>
+          val decoded = new java.util.HashMap[String, graft.codec.Postings]()
+          rows.foreach(r => decoded.put(r.term,
+            PostingCodec.decodeBlocks(r.blocks.map(_.bytes).toSeq)))
+          if (decoded.size != rows.length)
+            throw new IllegalStateException(
+              s"index invariant violated: bucket $bucket holds more than one " +
+                s"segment row per term (${rows.length} rows, ${decoded.size} terms)")
+          live.iterator
+            .filter { case (id, _) => queryBuckets(id).contains(bucket) }
+            .map { case (id, ts) =>
+              val seen = new java.util.HashSet[Long]()
+              var tfSum = 0L
+              ts.foreach { t =>
+                val p = decoded.get(t)
+                if (p != null) {
+                  var i = 0
+                  while (i < p.size) {
+                    seen.add(p.docIds(i))
+                    tfSum += p.tfs(i)
+                    i += 1
+                  }
                 }
               }
+              (id, seen.size.toLong, tfSum)
             }
-            (id, seen.size.toLong, tfSum)
-          }
       }
-      .toDF("query_id", "n_docs", "total_tf")
-      .groupBy(col("query_id"))
-      .agg(sum(col("n_docs")).as("n_docs"), sum(col("total_tf")).as("total_tf"))
+        .toDF("query_id", "n_docs", "total_tf")
+        .groupBy(col("query_id"))
+        .agg(sum(col("n_docs")).as("n_docs"), sum(col("total_tf")).as("total_tf"))
     // dead / bucket-empty queries still owe a (0, 0) row
     zeros.select(col("query_id"))
       .join(partials, Seq("query_id"), "left")
@@ -723,41 +742,27 @@ final class Searcher(spark: SparkSession, root: String, cacheHot: Boolean = fals
     val live = ts.filter(t => local.get(t).exists(_.df > 0L))
     if (live.isEmpty) return empty
     val buckets = live.flatMap(t => local(t).buckets).distinct
-    val kLocal = k
     val postings = segmentsDS
       .where($"term".isin(live: _*) && $"bucket".isin(buckets.toSeq: _*))
-    val doclens = doclensDS.where($"bucket".isin(buckets.toSeq: _*))
-    val perBucket = postings
-      .groupByKey(_.bucket)
-      .cogroup(doclens.groupByKey(_.bucket)) { (bucket, posts, lens) =>
-        val postsArr = posts.toArray
-        val lensArr = lens.toArray
-        if (postsArr.isEmpty) Iterator.empty
-        else if (lensArr.isEmpty)
-          throw new IllegalStateException(
-            s"index invariant violated: bucket $bucket has postings but no doclens row ($root)")
-        else {
-          val dl = lensArr.head
-          val seen = new java.util.HashSet[Long]()
-          postsArr.foreach { r =>
-            val p = PostingCodec.decodeBlocks(r.blocks.map(_.bytes).toSeq)
-            var i = 0
-            while (i < p.size) { seen.add(p.docIds(i)); i += 1 }
-          }
-          val topk = new Searcher.TopK(kLocal)
-          val it = seen.iterator()
-          while (it.hasNext) {
-            val d = it.next()
-            val len = dl.lens(java.util.Arrays.binarySearch(dl.docIds, d))
-            topk.offer(d, len.toDouble)
-          }
-          topk.result
-        }
+    val byLen = perBucket(postings, buckets.toSeq) { (_, posts, dl) =>
+      val seen = new java.util.HashSet[Long]()
+      posts.foreach { r =>
+        val p = PostingCodec.decodeBlocks(r.blocks.map(_.bytes).toSeq)
+        var i = 0
+        while (i < p.size) { seen.add(p.docIds(i)); i += 1 }
       }
-      .toDF("doc_id", "len")
+      val topk = new Searcher.TopK(k)
+      val it = seen.iterator()
+      while (it.hasNext) {
+        val d = it.next()
+        val len = dl.lens(java.util.Arrays.binarySearch(dl.docIds, d))
+        topk.offer(d, len.toDouble)
+      }
+      topk.result
+    }.toDF("doc_id", "len")
     val w = org.apache.spark.sql.expressions.Window
       .orderBy(desc("len"), asc("doc_id"))
-    perBucket
+    byLen
       .orderBy(desc("len"), asc("doc_id")).limit(k)
       .select(row_number().over(w).as("rank"), col("doc_id"),
         col("len").cast("long").as("dl"))
@@ -1055,31 +1060,13 @@ final class Searcher(spark: SparkSession, root: String, cacheHot: Boolean = fals
 
     val postings = segmentsDS
       .where($"term".isin(liveTerms: _*) && $"bucket".isin(buckets: _*))
-    val doclens = doclensDS.where($"bucket".isin(buckets: _*))
-
-    val idfB = spark.sparkContext.broadcast(idfByTerm)
-    val qsB = spark.sparkContext.broadcast(live.toArray)
-    val qbB = spark.sparkContext.broadcast(queryBuckets)
-    val kLocal = k
-    val avgdlLocal = g.avgdl
-
-    postings
-      .groupByKey(_.bucket)
-      .cogroup(doclens.groupByKey(_.bucket)) { (bucket, posts, lens) =>
-        val postsArr = posts.toArray
-        val lensArr = lens.toArray
-        if (postsArr.isEmpty) Iterator.empty
-        else if (lensArr.isEmpty)
-          throw new IllegalStateException(
-            s"index invariant violated: bucket $bucket has postings but no doclens row ($root)")
-        else {
-          val active = qsB.value.filter { case (id, _) => qbB.value(id).contains(bucket) }
-          val cache = new java.util.HashMap[String, graft.codec.Postings]()
-          Searcher.conjunctiveBucket(postsArr, lensArr.head, idfB.value,
-            avgdlLocal, kLocal, active, cache)
-        }
-      }
-      .toDF("query_id", "doc_id", "score")
+    val qs = live.toArray
+    val avgdl = g.avgdl
+    perBucket(postings, buckets) { (bucket, posts, dl) =>
+      val active = qs.filter { case (id, _) => queryBuckets(id).contains(bucket) }
+      val cache = new java.util.HashMap[String, graft.codec.Postings]()
+      Searcher.conjunctiveBucket(posts, dl, idfByTerm, avgdl, k, active, cache)
+    }.toDF("query_id", "doc_id", "score")
   }
 
   /** Batched MINIMUM-SHOULD-MATCH top-k (the Lucene/Elasticsearch
@@ -1147,31 +1134,13 @@ final class Searcher(spark: SparkSession, root: String, cacheHot: Boolean = fals
 
     val postings = segmentsDS
       .where($"term".isin(liveTerms: _*) && $"bucket".isin(buckets: _*))
-    val doclens = doclensDS.where($"bucket".isin(buckets: _*))
-
-    val idfB = spark.sparkContext.broadcast(idfByTerm)
-    val qsB = spark.sparkContext.broadcast(live.toArray)
-    val qbB = spark.sparkContext.broadcast(queryBuckets)
-    val kLocal = k
-    val avgdlLocal = g.avgdl
-
-    postings
-      .groupByKey(_.bucket)
-      .cogroup(doclens.groupByKey(_.bucket)) { (bucket, posts, lens) =>
-        val postsArr = posts.toArray
-        val lensArr = lens.toArray
-        if (postsArr.isEmpty) Iterator.empty
-        else if (lensArr.isEmpty)
-          throw new IllegalStateException(
-            s"index invariant violated: bucket $bucket has postings but no doclens row ($root)")
-        else {
-          val active = qsB.value.filter { case (id, _, _) => qbB.value(id).contains(bucket) }
-          val cache = new java.util.HashMap[String, graft.codec.Postings]()
-          Searcher.minMatchBucket(postsArr, lensArr.head, idfB.value,
-            avgdlLocal, kLocal, active, cache)
-        }
-      }
-      .toDF("query_id", "doc_id", "score")
+    val qs = live.toArray
+    val avgdl = g.avgdl
+    perBucket(postings, buckets) { (bucket, posts, dl) =>
+      val active = qs.filter { case (id, _, _) => queryBuckets(id).contains(bucket) }
+      val cache = new java.util.HashMap[String, graft.codec.Postings]()
+      Searcher.minMatchBucket(posts, dl, idfByTerm, avgdl, k, active, cache)
+    }.toDF("query_id", "doc_id", "score")
   }
 
   /** PREFIX-expanded top-k search (the dictionary-driven `term*` wildcard
@@ -1328,22 +1297,13 @@ final class Searcher(spark: SparkSession, root: String, cacheHot: Boolean = fals
         docsByQuery.map { case (q, ds) => q -> ds.map(d => (d / bs).toInt) }
       val buckets = bucketsByQuery.values.flatten.toSeq.distinct
       val liveTerms = termsByQuery.values.flatten.toSeq.distinct
-      val qB = spark.sparkContext.broadcast(
-        termsByQuery.map { case (q, ts) =>
-          (q, ts, bucketsByQuery(q), docsByQuery(q))
-        }.toArray)
-      positionsDS
-        .where($"term".isin(liveTerms: _*) && $"bucket".isin(buckets: _*))
-        .groupByKey(_.bucket)
-        .flatMapGroups { (bucket, it) =>
-          val rows = it.toArray
-          val byTerm = rows.iterator.map(r =>
-            r.term -> graft.codec.PositionCodec.decodeBlocks(r.blocks.map(_.bytes).toSeq)).toMap
-          if (byTerm.size != rows.length)
-            throw new IllegalStateException(
-              s"positions invariant violated in bucket $bucket: ${rows.length} rows, " +
-                s"${byTerm.size} terms")
-          qB.value.iterator
+      val qs = termsByQuery.map { case (q, ts) =>
+        (q, ts, bucketsByQuery(q), docsByQuery(q))
+      }.toArray
+      byBucket(positionsDS.where($"term".isin(liveTerms: _*) && $"bucket".isin(buckets: _*))) {
+        (bucket, rows) =>
+          val byTerm = Searcher.decodePositions(bucket, rows)
+          qs.iterator
             .filter { case (_, _, bks, _) => bks.contains(bucket) }
             .flatMap { case (id, ts, _, ds) =>
               val only = new java.util.HashSet[Long](ds.size * 2)
@@ -1351,7 +1311,7 @@ final class Searcher(spark: SparkSession, root: String, cacheHot: Boolean = fals
               Searcher.proximityHitsInBucket(ts, Int.MaxValue, byTerm, only)
                 .map { case (d, span, start) => (id, d, start, span) }
             }
-        }
+      }
         .toDF("query_id", "doc_id", "snippet_start", "snippet_len")
     }
     // every conjunctive hit contains all terms, so the inner join is
@@ -1424,65 +1384,38 @@ final class Searcher(spark: SparkSession, root: String, cacheHot: Boolean = fals
     // negated terms: postings read alongside the positive ones (same
     // pruned scan — term IN over both lists, buckets only where a
     // positive term can produce a hit), decoded into a bucket-LOCAL
-    // exclusion array inside the cogroup. Nothing about the negation
+    // exclusion array inside the bucket task. Nothing about the negation
     // ever reaches the driver or a broadcast of doc ids: the excluded
     // set is built where the postings already live, bounded by the
     // bucket-width geometry like every other per-bucket structure.
     val negLive = negTerms.filter(t => local.get(t).exists(_.df > 0L))
+    val negSet = negLive.toSet
     val scanTerms = (termList ++ negLive).distinct
 
     val postings = segmentsDS
       .where($"term".isin(scanTerms: _*) && $"bucket".isin(touchedBuckets: _*))
-    val doclens = doclensDS
-      .where($"bucket".isin(touchedBuckets: _*))
-
-    val idfB = spark.sparkContext.broadcast(idfByTerm)
-    val allowB = spark.sparkContext.broadcast(allow)
-    val negB = spark.sparkContext.broadcast(negLive.toSet)
-    val kLocal = k
-    val exactLocal = exact
-    val avgdlLocal = g.avgdl
-    val ubScaleLocal = ubScale
+    val allowB = broadcastAllow(allow)
+    val avgdl = g.avgdl
     val countersLocal = counters.orNull
-    val afterLocal = after
 
-    val perBucket = postings
-      .groupByKey(_.bucket)
-      .cogroup(doclens.groupByKey(_.bucket)) { (bucket, posts, lens) =>
-        val postsArr = posts.toArray
-        val lensArr = lens.toArray
-        if (postsArr.isEmpty) Iterator.empty
-        else if (lensArr.isEmpty)
-          // postings without a norms row is index corruption (e.g. a
-          // bucketSize mismatch from a bad resume) — fail loudly instead
-          // of silently dropping the bucket's hits
-          throw new IllegalStateException(
-            s"index invariant violated: bucket $bucket has postings but no doclens row ($root)")
+    perBucket(postings, touchedBuckets) { (_, posts, dl) =>
+      val (negRows, posRows) =
+        if (negSet.isEmpty) (Array.empty[PostingRow], posts)
+        else posts.partition(r => negSet.contains(r.term))
+      val effAllow: Option[Long => Boolean] =
+        if (negRows.isEmpty) allowB.map(_.value)
         else {
-          val dl = lensArr.head
-          val negSet = negB.value
-          val (negRows, posRows) =
-            if (negSet.isEmpty) (Array.empty[PostingRow], postsArr)
-            else postsArr.partition(r => negSet.contains(r.term))
-          val effAllow: Option[Long => Boolean] =
-            if (negRows.isEmpty) allowB.value
-            else {
-              val excluded = negRows.flatMap(r =>
-                PostingCodec.decodeBlocks(r.blocks.map(_.bytes).toSeq).docIds)
-              java.util.Arrays.sort(excluded)
-              val user = allowB.value
-              Some((id: Long) =>
-                java.util.Arrays.binarySearch(excluded, id) < 0 &&
-                  user.forall(_(id)))
-            }
-          Searcher.wandBucket(
-            posRows, dl, idfB.value, avgdlLocal, ubScaleLocal,
-            kLocal, exactLocal, effAllow, counters = countersLocal,
-            after = afterLocal)
+          val excluded = negRows.flatMap(r =>
+            PostingCodec.decodeBlocks(r.blocks.map(_.bytes).toSeq).docIds)
+          java.util.Arrays.sort(excluded)
+          val user = allowB.map(_.value)
+          Some((id: Long) =>
+            java.util.Arrays.binarySearch(excluded, id) < 0 &&
+              user.forall(_(id)))
         }
-      }
-
-    perBucket
+      Searcher.wandBucket(posRows, dl, idfByTerm, avgdl, ubScale, k, exact, effAllow,
+        counters = countersLocal, after = after)
+    }
       .toDF("doc_id", "score")
       .orderBy(desc("score"), asc("doc_id"))
       .limit(k)
@@ -1521,26 +1454,13 @@ final class Searcher(spark: SparkSession, root: String, cacheHot: Boolean = fals
       .distinct
     val postings = segmentsDS
       .where($"term".isin(termList: _*) && $"bucket".isin(touchedBuckets: _*))
-    val doclens = doclensDS.where($"bucket".isin(touchedBuckets: _*))
-    val idfB = spark.sparkContext.broadcast(idfByTerm)
-    val avgdlLocal = stats.avgdl
-    postings
-      .groupByKey(_.bucket)
-      .cogroup(doclens.groupByKey(_.bucket)) { (bucket, posts, lens) =>
-        val postsArr = posts.toArray
-        val lensArr = lens.toArray
-        if (postsArr.isEmpty) Iterator.empty
-        else if (lensArr.isEmpty)
-          throw new IllegalStateException(
-            s"index invariant violated: bucket $bucket has postings but no doclens row ($root)")
-        else
-          // k = MaxValue keeps every scored doc: TopK's heap grows
-          // lazily, so memory is O(matched-in-bucket) ≤ bucket width
-          Searcher.wandBucket(
-            postsArr, lensArr.head, idfB.value, avgdlLocal, ubScale = 1.0,
-            k = Int.MaxValue, exact = true, allow = None)
-      }
-      .toDF("doc_id", "score")
+    val avgdl = stats.avgdl
+    // k = MaxValue keeps every scored doc: TopK's heap grows lazily, so
+    // memory is O(matched-in-bucket) ≤ bucket width
+    perBucket(postings, touchedBuckets) { (_, posts, dl) =>
+      Searcher.wandBucket(posts, dl, idfByTerm, avgdl, ubScale = 1.0,
+        k = Int.MaxValue, exact = true, allow = None)
+    }.toDF("doc_id", "score")
   }
 
   /** SEARCH-AFTER deep pagination (the Lucene `searchAfter` analog; the
@@ -1674,70 +1594,51 @@ final class Searcher(spark: SparkSession, root: String, cacheHot: Boolean = fals
     val scanTerms = live.flatten
     val postings = segmentsDS
       .where($"term".isin(scanTerms: _*) && $"bucket".isin(buckets: _*))
-    val doclens = doclensDS.where($"bucket".isin(buckets: _*))
-    val groupOfB = spark.sparkContext.broadcast(groupOf)
-    val idfsB = spark.sparkContext.broadcast(idfs)
-    val wsB = spark.sparkContext.broadcast(ws)
-    val kLocal = k
-    val avgdlLocal = stats.avgdl
+    val avgdl = stats.avgdl
     val isDisMax = disMaxTie.isDefined
-    val tieLocal = disMaxTie.getOrElse(1.0)
+    val tie = disMaxTie.getOrElse(1.0)
 
-    val perBucket = postings
-      .groupByKey(_.bucket)
-      .cogroup(doclens.groupByKey(_.bucket)) { (bucket, posts, lens) =>
-        val postsArr = posts.toArray
-        val lensArr = lens.toArray
-        if (postsArr.isEmpty) Iterator.empty
-        else if (lensArr.isEmpty)
-          throw new IllegalStateException(
-            s"index invariant violated: bucket $bucket has postings but no doclens row ($root)")
-        else {
-          val dl = lensArr.head
-          val nG = idfsB.value.length
-          // per-group doc → summed tf (int adds — merge order free)
-          val tfByGroup = Array.fill(nG)(new java.util.HashMap[Long, Int]())
-          postsArr.foreach { r =>
-            val gi = groupOfB.value(r.term)
-            val p = PostingCodec.decodeBlocks(r.blocks.map(_.bytes).toSeq)
-            var i = 0
-            while (i < p.size) {
-              tfByGroup(gi).merge(p.docIds(i), p.tfs(i), (a, b) => a + b)
-              i += 1
-            }
-          }
-          val union = new java.util.HashSet[Long]()
-          tfByGroup.foreach(m => union.addAll(m.keySet()))
-          val dIds = dl.docIds
-          val dLens = dl.lens
-          val topk = new Searcher.TopK(kLocal)
-          val it = union.iterator()
-          while (it.hasNext) {
-            val d = it.next()
-            val len = dLens(java.util.Arrays.binarySearch(dIds, d))
-            var s = 0.0
-            var mx = 0.0
-            var gi = 0
-            // fixed caller group order — deterministic accumulation;
-            // association w · (idf · tfNorm) exactly as the oracle writes it
-            while (gi < nG) {
-              val tf = tfByGroup(gi).getOrDefault(d, 0)
-              if (tf > 0) {
-                val part = wsB.value(gi) * (idfsB.value(gi) * Bm25.tfNorm(tf, len, avgdlLocal))
-                s += part
-                if (part > mx) mx = part
-              }
-              gi += 1
-            }
-            // dis-max: best + tie·(sum − best), three IEEE ops in this
-            // exact association (BM25 parts are > 0, so the 0.0 floor on
-            // `mx` never wins for a matched doc)
-            topk.offer(d, if (isDisMax) mx + tieLocal * (s - mx) else s)
-          }
-          topk.result
+    perBucket(postings, buckets) { (_, posts, dl) =>
+      val nG = idfs.length
+      // per-group doc → summed tf (int adds — merge order free)
+      val tfByGroup = Array.fill(nG)(new java.util.HashMap[Long, Int]())
+      posts.foreach { r =>
+        val gi = groupOf(r.term)
+        val p = PostingCodec.decodeBlocks(r.blocks.map(_.bytes).toSeq)
+        var i = 0
+        while (i < p.size) {
+          tfByGroup(gi).merge(p.docIds(i), p.tfs(i), (a, b) => a + b)
+          i += 1
         }
       }
-    perBucket
+      val union = new java.util.HashSet[Long]()
+      tfByGroup.foreach(m => union.addAll(m.keySet()))
+      val topk = new Searcher.TopK(k)
+      val it = union.iterator()
+      while (it.hasNext) {
+        val d = it.next()
+        val len = dl.lens(java.util.Arrays.binarySearch(dl.docIds, d))
+        var s = 0.0
+        var mx = 0.0
+        var gi = 0
+        // fixed caller group order — deterministic accumulation;
+        // association w · (idf · tfNorm) exactly as the oracle writes it
+        while (gi < nG) {
+          val tf = tfByGroup(gi).getOrDefault(d, 0)
+          if (tf > 0) {
+            val part = ws(gi) * (idfs(gi) * Bm25.tfNorm(tf, len, avgdl))
+            s += part
+            if (part > mx) mx = part
+          }
+          gi += 1
+        }
+        // dis-max: best + tie·(sum − best), three IEEE ops in this
+        // exact association (BM25 parts are > 0, so the 0.0 floor on
+        // `mx` never wins for a matched doc)
+        topk.offer(d, if (isDisMax) mx + tie * (s - mx) else s)
+      }
+      topk.result
+    }
       .toDF("doc_id", "score")
       .orderBy(desc("score"), asc("doc_id"))
       .limit(k)
@@ -1816,7 +1717,7 @@ final class Searcher(spark: SparkSession, root: String, cacheHot: Boolean = fals
     * (/root/reference/include/usearch/index_dense.hpp:774-779) with the
     * predicate itself derived from the index: negative postings are
     * decoded bucket-locally into an exclusion array inside the same
-    * cogroup that scores, so ranks come from the filtered set and no doc
+    * bucket task that scores, so ranks come from the filtered set and no doc
     * ids ever move to the driver. A term both offered and forbidden
     * resolves to the negation (SHOULD/MUST_NOT): it is dropped from
     * scoring at planning, exactly value-preserving since every doc
@@ -2030,96 +1931,64 @@ final class Searcher(spark: SparkSession, root: String, cacheHot: Boolean = fals
     if (buckets.isEmpty) return empty
     val negLive = negTerms.filter(t => local.get(t).exists(_.df > 0L))
 
-    val mustB = spark.sparkContext.broadcast(mustTerms)
-    val negB = spark.sparkContext.broadcast(negLive)
-    val scoringB = spark.sparkContext.broadcast(liveScoring)
-    val phraseB = spark.sparkContext.broadcast(phraseToks)
-    val idfB = spark.sparkContext.broadcast(idfByTerm)
-    val kLocal = k
-    val avgdlLocal = stats.avgdl
-    val rootLocal = root
-    val doclens = doclensDS.where($"bucket".isin(buckets: _*))
+    val avgdl = stats.avgdl
 
-    val perBucket =
+    val hits =
       if (phraseToks.isEmpty) {
         val scanTerms = (liveScoring ++ negLive).distinct
-        segmentsDS
+        val postings = segmentsDS
           .where($"term".isin(scanTerms.toSeq: _*) && $"bucket".isin(buckets: _*))
-          .groupByKey(_.bucket)
-          .cogroup(doclens.groupByKey(_.bucket)) { (bucket, posts, lens) =>
-            val postsArr = posts.toArray
-            val lensArr = lens.toArray
-            if (postsArr.isEmpty) Iterator.empty
-            else if (lensArr.isEmpty)
-              throw new IllegalStateException(
-                s"index invariant violated: bucket $bucket has postings but no doclens row ($rootLocal)")
-            else {
-              val byRow = postsArr.iterator.map(r => r.term -> r).toMap
-              if (byRow.size != postsArr.length)
-                throw new IllegalStateException(
-                  s"index invariant violated: bucket $bucket holds more than one " +
-                    s"segment row per term (${postsArr.length} rows, ${byRow.size} terms)")
-              val dec = new java.util.HashMap[String, graft.codec.Postings]()
-              def post(t: String): graft.codec.Postings = byRow.get(t) match {
-                case Some(r) => dec.computeIfAbsent(t,
-                  _ => PostingCodec.decodeBlocks(r.blocks.map(_.bytes).toSeq))
-                case None => null
-              }
-              val mustPosts = mustB.value.map(post)
-              if (mustPosts.exists(_ == null)) Iterator.empty
-              else {
-                val candidates =
-                  Searcher.intersectSorted(mustPosts.map(_.docIds).toSeq)
-                val excluded = Searcher.concatSorted(
-                  negB.value.iterator.map(post).filter(_ != null).map(_.docIds).toSeq)
-                Searcher.scoreBoolBucket(candidates, excluded, scoringB.value,
-                  t => { val p = post(t); if (p == null) null else (p.docIds, p.tfs) },
-                  idfB.value, lensArr.head, avgdlLocal, kLocal)
-              }
-            }
+        perBucket(postings, buckets) { (bucket, posts, dl) =>
+          val byRow = posts.iterator.map(r => r.term -> r).toMap
+          if (byRow.size != posts.length)
+            throw new IllegalStateException(
+              s"index invariant violated: bucket $bucket holds more than one " +
+                s"segment row per term (${posts.length} rows, ${byRow.size} terms)")
+          val dec = new java.util.HashMap[String, graft.codec.Postings]()
+          def post(t: String): graft.codec.Postings = byRow.get(t) match {
+            case Some(r) => dec.computeIfAbsent(t,
+              _ => PostingCodec.decodeBlocks(r.blocks.map(_.bytes).toSeq))
+            case None => null
           }
+          val mustPosts = mustTerms.map(post)
+          if (mustPosts.exists(_ == null)) Iterator.empty
+          else {
+            val candidates =
+              Searcher.intersectSorted(mustPosts.map(_.docIds).toSeq)
+            val excluded = Searcher.concatSorted(
+              negLive.iterator.map(post).filter(_ != null).map(_.docIds).toSeq)
+            Searcher.scoreBoolBucket(candidates, excluded, liveScoring,
+              t => { val p = post(t); if (p == null) null else (p.docIds, p.tfs) },
+              idfByTerm, dl, avgdl, k)
+          }
+        }
       } else {
         val scanTerms = (liveScoring ++ mustTerms ++ negLive ++ phraseToks).distinct
-        positionsDS
+        val positions = positionsDS
           .where($"term".isin(scanTerms.toSeq: _*) && $"bucket".isin(buckets: _*))
-          .groupByKey(_.bucket)
-          .cogroup(doclens.groupByKey(_.bucket)) { (bucket, posts, lens) =>
-            val rows = posts.toArray
-            val lensArr = lens.toArray
-            if (rows.isEmpty) Iterator.empty
-            else if (lensArr.isEmpty)
-              throw new IllegalStateException(
-                s"index invariant violated: bucket $bucket has positions but no doclens row ($rootLocal)")
-            else {
-              val byTerm = rows.iterator.map(r =>
-                r.term -> graft.codec.PositionCodec.decodeBlocks(r.blocks.map(_.bytes).toSeq)).toMap
-              if (byTerm.size != rows.length)
-                throw new IllegalStateException(
-                  s"positions invariant violated in bucket $bucket: ${rows.length} rows, " +
-                    s"${byTerm.size} terms")
-              val pts = phraseB.value
-              if (!pts.distinct.forall(byTerm.contains) ||
-                  !mustB.value.forall(byTerm.contains)) Iterator.empty
-              else {
-                val phraseDocs =
-                  Searcher.phraseHitsInBucket(pts, byTerm).map(_._1).toArray
-                java.util.Arrays.sort(phraseDocs)
-                val candidates = Searcher.intersectSorted(
-                  phraseDocs +: mustB.value.map(t => byTerm(t).docIds).toSeq)
-                val excluded = Searcher.concatSorted(
-                  negB.value.iterator.flatMap(byTerm.get).map(_.docIds).toSeq)
-                Searcher.scoreBoolBucket(candidates, excluded, scoringB.value,
-                  t => byTerm.get(t) match {
-                    case Some(pp) => (pp.docIds, pp.positions.map(_.length))
-                    case None => null
-                  },
-                  idfB.value, lensArr.head, avgdlLocal, kLocal)
-              }
-            }
+        perBucket(positions, buckets) { (bucket, rows, dl) =>
+          val byTerm = Searcher.decodePositions(bucket, rows)
+          if (!phraseToks.distinct.forall(byTerm.contains) ||
+              !mustTerms.forall(byTerm.contains)) Iterator.empty
+          else {
+            val phraseDocs =
+              Searcher.phraseHitsInBucket(phraseToks, byTerm).map(_._1).toArray
+            java.util.Arrays.sort(phraseDocs)
+            val candidates = Searcher.intersectSorted(
+              phraseDocs +: mustTerms.map(t => byTerm(t).docIds).toSeq)
+            val excluded = Searcher.concatSorted(
+              negLive.iterator.flatMap(byTerm.get).map(_.docIds).toSeq)
+            Searcher.scoreBoolBucket(candidates, excluded, liveScoring,
+              t => byTerm.get(t) match {
+                case Some(pp) => (pp.docIds, pp.positions.map(_.length))
+                case None => null
+              },
+              idfByTerm, dl, avgdl, k)
           }
+        }
       }
 
-    perBucket
+    hits
       .toDF("doc_id", "score")
       .orderBy(desc("score"), asc("doc_id"))
       .limit(k)
@@ -2128,10 +1997,11 @@ final class Searcher(spark: SparkSession, root: String, cacheHot: Boolean = fals
   /** Batch search: all queries answered in ONE distributed pass — the
     * per-row task fan-out of the reference's batched `search_many`
     * (/root/reference/python/lib.cpp:416-461, executor.dynamic), rendered
-    * as: one pruned postings scan over the union of query terms, one
-    * cogroup, per-bucket WAND per query, then a windowed global top-k per
-    * query. Returns (query_id, doc_id, score) ordered within each query
-    * by (score desc, doc_id asc), exactly what per-query [[search]] gives.
+    * as: one pruned postings scan over the union of query terms grouped
+    * by bucket, per-bucket term-at-a-time scoring of every query, then a
+    * bounded global top-k per query. Returns (query_id, doc_id, score)
+    * ordered within each query by (score desc, doc_id asc), exactly what
+    * per-query [[search]] gives.
     */
   def searchMany(
       queries: Seq[(Int, String)],
@@ -2184,54 +2054,53 @@ final class Searcher(spark: SparkSession, root: String, cacheHot: Boolean = fals
     val touched = liveTerms.flatMap(t => localRows(t).buckets.toSeq).distinct
     val postings = segmentsDS
       .where($"term".isin(liveTerms: _*) && $"bucket".isin(touched: _*))
-    val doclens = doclensDS
-      .where($"bucket".isin(touched: _*))
 
-    val idfB = spark.sparkContext.broadcast(idfByTerm)
-    val queriesB = spark.sparkContext.broadcast(livePerQuery)
-    val kLocal = k
-    val avgdlLocal = g.avgdl
+    val qs = livePerQuery.toArray
+    val avgdl = g.avgdl
     // stored block-max tf-norms came from THIS shard's avgdl; scale UBs
     // for the WAND fallback exactly as the single-query path does
-    val ubScaleLocal = math.max(1.0, g.avgdl / stats.avgdl)
-    val budgetLocal = taatBudgetBytes
+    val ubScale = math.max(1.0, g.avgdl / stats.avgdl)
     val countersLocal = counters.orNull
-    val allowB = spark.sparkContext.broadcast(allow)
+    val allowB = broadcastAllow(allow)
 
-    postings
-      .groupByKey(_.bucket)
-      .cogroup(doclens.groupByKey(_.bucket)) { (bucket, posts, lens) =>
-        val postsArr = posts.toArray
-        val lensArr = lens.toArray
-        if (postsArr.isEmpty) Iterator.empty
-        else if (lensArr.isEmpty)
-          throw new IllegalStateException(
-            s"index invariant violated: bucket $bucket has postings but no doclens row ($root)")
-        else {
-          // term-at-a-time: decode each term once per bucket task AND
-          // traverse it once for the whole batch (see Searcher.taatBucket
-          // — bit-identical to the per-query WAND loop, EngineSpec-pinned)
-          val cache = new java.util.HashMap[String, graft.codec.Postings]()
-          Searcher.taatBucket(postsArr, lensArr.head, idfB.value,
-            avgdlLocal, kLocal, queriesB.value.toArray, cache,
-            budgetLocal, ubScaleLocal, countersLocal, allowB.value)
-        }
-      }
-      .toDF("query_id", "doc_id", "score")
+    perBucket(postings, touched) { (_, posts, dl) =>
+      // term-at-a-time: decode each term once per bucket task AND
+      // traverse it once for the whole batch (see Searcher.taatBucket
+      // — bit-identical to the per-query WAND loop, EngineSpec-pinned)
+      val cache = new java.util.HashMap[String, graft.codec.Postings]()
+      Searcher.taatBucket(posts, dl, idfByTerm, avgdl, k, qs, cache,
+        taatBudgetBytes, ubScale, countersLocal, allowB.map(_.value))
+    }.toDF("query_id", "doc_id", "score")
   }
 }
 
 object Searcher {
 
-  /** Driver-side bounded edit distance for the hot-dictionary fuzzy
-    * expansion — the textbook two-row DP with the standard band cutoff,
-    * semantically identical to Spark's and DuckDB's `levenshtein` (the
-    * distributed path and the oracle both use those; this one only runs
-    * over the already-resident serving-mode dictionary).
+  /** One bucket's positional rows decoded by term. One row per (term,
+    * bucket) is the same index invariant the TAAT paths assert — a
+    * violating merge artifact must fail loudly.
     */
+  private[index] def decodePositions(
+      bucket: Int, rows: Array[PosRow]): Map[String, graft.codec.PosPostings] = {
+    val byTerm = rows.iterator.map(r =>
+      r.term -> graft.codec.PositionCodec.decodeBlocks(r.blocks.map(_.bytes).toSeq)).toMap
+    if (byTerm.size != rows.length)
+      throw new IllegalStateException(
+        s"positions invariant violated in bucket $bucket: ${rows.length} rows, " +
+          s"${byTerm.size} terms")
+    byTerm
+  }
+
+  /** Point-read rows of the dictionary and doclens tables. */
+  private[index] def dictRow(r: PointRow): DictRow =
+    DictRow(r("term"), r("df"), r("maxTfNorm"), r("buckets"))
+  private[index] def docLenRow(r: PointRow): DocLenRow =
+    DocLenRow(r("bucket"), r("docIds"), r("lens"))
+
   /** Bounded Levenshtein distance: the exact edit distance if ≤ maxDist,
-    * else -1 (same early-exit band as [[levWithin]]; semantically
-    * identical to Spark's and DuckDB's thresholded `levenshtein`).
+    * else -1 — the textbook two-row DP with the standard band cutoff,
+    * semantically identical to Spark's and DuckDB's thresholded
+    * `levenshtein`.
     */
   private[graft] def levDistWithin(a: String, b: String, maxDist: Int): Int = {
     if (math.abs(a.length - b.length) > maxDist) return -1
@@ -2255,27 +2124,8 @@ object Searcher {
     if (prev(b.length) <= maxDist) prev(b.length) else -1
   }
 
-  private[graft] def levWithin(a: String, b: String, maxDist: Int): Boolean = {
-    if (math.abs(a.length - b.length) > maxDist) return false
-    var prev = Array.tabulate(b.length + 1)(identity)
-    var cur = new Array[Int](b.length + 1)
-    var i = 1
-    while (i <= a.length) {
-      cur(0) = i
-      var rowMin = i
-      var j = 1
-      while (j <= b.length) {
-        val cost = if (a.charAt(i - 1) == b.charAt(j - 1)) 0 else 1
-        cur(j) = math.min(math.min(cur(j - 1) + 1, prev(j) + 1), prev(j - 1) + cost)
-        if (cur(j) < rowMin) rowMin = cur(j)
-        j += 1
-      }
-      if (rowMin > maxDist) return false
-      val t = prev; prev = cur; cur = t
-      i += 1
-    }
-    prev(b.length) <= maxDist
-  }
+  private[graft] def levWithin(a: String, b: String, maxDist: Int): Boolean =
+    levDistWithin(a, b, maxDist) >= 0
 
   /** Intersection of ascending docId arrays (k-way via successive
     * pairwise merges, sparsest first). Empty input → empty.

@@ -4,7 +4,7 @@ import java.nio.file.Files
 
 import graft.analyze.Tokenizer
 import graft.corpus.CorpusGen
-import graft.index.{IndexBuilder, Searcher}
+import graft.index.{IndexBuilder, PosRow, Searcher}
 
 /** Index-only phrase search ([[graft.index.Searcher.phraseMany]]) vs a
   * driver-side brute-force token scan — the positional analog of the
@@ -99,6 +99,24 @@ class PhraseSpec extends SparkSpec {
     val s = new Searcher(spark, root)
     val e = intercept[IllegalArgumentException](s.phraseMany(Seq(0 -> "a b")))
     assert(e.getMessage.contains("positions sidecar"))
+  }
+
+  test("a Searcher opened before buildPositions serves the sidecar written after") {
+    val docs: Seq[(Long, String)] = Seq(0L -> "a b a b", 1L -> "b a", 2L -> "x a b")
+    val root = Files.createTempDirectory("graft-idx-late-pos-").toString
+    val df = docs.toDF("doc_id", "content")
+    IndexBuilder.build(spark, df, root, targetBuckets = 2)
+    val s = new Searcher(spark, root)
+    intercept[IllegalArgumentException](s.phraseMany(Seq(0 -> "a b")))
+    // a half-written sidecar (files, no commit marker) is not part of
+    // the index: reading it must fail, and must not pin its listing
+    val positions = IndexBuilder.Layout(root).positions
+    Files.createDirectories(java.nio.file.Path.of(positions))
+    IndexBuilder.ensureReadableWhenEmpty[PosRow](spark, positions)
+    intercept[IllegalArgumentException](s.integrityReport(checkPositions = true))
+    IndexBuilder.buildPositions(spark, df, root)
+    val phrases = Seq(0 -> "a b", 1 -> "b a")
+    assert(run(s, phrases) == bruteForce(docs, phrases))
   }
 
   test("contamination via positions equals the text-verify fallback (sf0.001)") {
