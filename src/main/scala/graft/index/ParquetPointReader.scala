@@ -14,7 +14,7 @@ import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.io.ColumnIOFactory
 import org.apache.parquet.io.api.{Binary, Converter, GroupConverter, PrimitiveConverter, RecordMaterializer}
-import org.apache.parquet.schema.{GroupType, MessageType, Type}
+import org.apache.parquet.schema.{GroupType, LogicalTypeAnnotation, MessageType, Type}
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
 
 import org.apache.spark.broadcast.Broadcast
@@ -38,8 +38,15 @@ import org.apache.spark.util.SerializableConfiguration
   * whole configuration per call, and one shared codec factory corrupts
   * decompression under concurrent reads.
   *
-  * Supported columns: top-level primitives and LISTs of primitives (the
-  * dictionary and doclens shapes).
+  * Supported column shapes, as [[PointRow]] values:
+  *   - top-level primitives, boxed; a string-annotated BINARY as a
+  *     `String`, an un-annotated BINARY as its `Array[Byte]`;
+  *   - LISTs of INT32/INT64/DOUBLE/string as primitive arrays (the
+  *     dictionary's `buckets`, doclens' `docIds`/`lens`);
+  *   - LISTs of structs of primitives as `Array[PointRow]` (the segment
+  *     and position blocks, `EncBlock`/`PosBlock`).
+  * Partition columns are not in the files: the caller that picked the
+  * partition directory supplies their values.
   */
 private[index] final class ParquetPointReader[K] private (
     path: String,
@@ -70,9 +77,19 @@ private[index] final class ParquetPointReader[K] private (
     */
   def read[T](keys: Iterable[K])(row: PointRow => T): Seq[T] = {
     val ks = keys.toSeq.distinct
+    scan(files.iterator.map(f => f -> ks.filter(f.covers)).collect {
+      case (f, mine) if mine.nonEmpty => f -> FilterCompat.get(key.predicate(keyCol, mine))
+    })(row)
+  }
+
+  /** Every row of the table, mapped through `row`, in file order. */
+  def readAll[T](row: PointRow => T): Seq[T] =
+    scan(files.iterator.map(_ -> FilterCompat.NOOP))(row)
+
+  private def scan[T](reads: Iterator[(PointFile[K], FilterCompat.Filter)])(
+      row: PointRow => T): Seq[T] = {
     val out = mutable.ArrayBuffer.empty[T]
-    for (f <- files; mine = ks.filter(f.covers) if mine.nonEmpty) {
-      val filter = FilterCompat.get(key.predicate(keyCol, mine))
+    for ((f, filter) <- reads) {
       val reader = open(f, filter)
       try {
         val schema = reader.getFooter.getFileMetaData.getSchema
@@ -149,12 +166,13 @@ private[index] object ParquetPointReader {
   }
 
   /** Materializes one record: top-level primitives boxed, LISTs of
-    * primitives as primitive arrays.
+    * primitives as primitive arrays, LISTs of structs as arrays of
+    * [[PointRow]]s.
     */
   private final class RowMaterializer(schema: MessageType) extends RecordMaterializer[Array[Any]] {
     private val n = schema.getFieldCount
     private var current: Array[Any] = _
-    private val lists = mutable.ArrayBuffer.empty[(Int, ListLeaf)]
+    private val lists = mutable.ArrayBuffer.empty[(Int, ListBuf)]
     private val root: GroupConverter = new GroupConverter {
       private val children: Array[Converter] = Array.tabulate(n)(i => field(schema.getType(i), i))
       override def getConverter(i: Int): Converter = children(i)
@@ -166,50 +184,86 @@ private[index] object ParquetPointReader {
     }
 
     private def field(t: Type, i: Int): Converter =
-      if (t.isPrimitive) new PrimitiveConverter {
-        override def addInt(v: Int): Unit = current(i) = v
-        override def addLong(v: Long): Unit = current(i) = v
-        override def addDouble(v: Double): Unit = current(i) = v
-        override def addFloat(v: Float): Unit = current(i) = v
-        override def addBoolean(v: Boolean): Unit = current(i) = v
-        override def addBinary(v: Binary): Unit = current(i) = v.toStringUsingUTF8
-      }
+      if (t.isPrimitive) primitive(t, v => current(i) = v)
       else {
-        var elem = t
-        while (!elem.isPrimitive) elem = only(elem.asGroupType)
-        val leaf = ListLeaf(elem.asPrimitiveType.getPrimitiveTypeName)
-        lists += i -> leaf
-        nest(t.asGroupType, leaf)
+        // LIST → repeated group → element (3-level), or the repeated
+        // field is the element itself (2-level)
+        val repeated = only(t.asGroupType)
+        val elem =
+          if (!repeated.isPrimitive && repeated.asGroupType.getFieldCount == 1)
+            repeated.asGroupType.getType(0)
+          else repeated
+        val buf = if (elem.isPrimitive) ListLeaf(elem) else new StructList(elem.asGroupType)
+        lists += i -> buf
+        val inner = if (elem eq repeated) buf else wrap(buf)
+        wrap(inner)
       }
-
-    private def only(g: GroupType): Type = {
-      if (g.getFieldCount != 1)
-        throw new UnsupportedOperationException(
-          s"point reads support primitives and lists of primitives, got $g")
-      g.getType(0)
-    }
-
-    private def nest(g: GroupType, leaf: ListLeaf): Converter = {
-      val child = only(g)
-      val c = if (child.isPrimitive) leaf else nest(child.asGroupType, leaf)
-      new GroupConverter {
-        override def getConverter(i: Int): Converter = c
-        override def start(): Unit = ()
-        override def end(): Unit = ()
-      }
-    }
 
     override def getCurrentRecord: Array[Any] = current
     override def getRootConverter: GroupConverter = root
   }
 
-  private abstract class ListLeaf extends PrimitiveConverter {
+  private def only(g: GroupType): Type = {
+    if (g.getFieldCount != 1)
+      throw new UnsupportedOperationException(
+        s"point reads support primitives and lists of primitives or structs, got $g")
+    g.getType(0)
+  }
+
+  /** A group level that only passes its one child through. */
+  private def wrap(child: Converter): GroupConverter = new GroupConverter {
+    override def getConverter(i: Int): Converter = child
+    override def start(): Unit = ()
+    override def end(): Unit = ()
+  }
+
+  private def isString(t: Type): Boolean =
+    t.getLogicalTypeAnnotation.isInstanceOf[LogicalTypeAnnotation.StringLogicalTypeAnnotation]
+
+  /** One boxed primitive: a string-annotated BINARY as a `String`, an
+    * un-annotated one as its `Array[Byte]`.
+    */
+  private def primitive(t: Type, set: Any => Unit): PrimitiveConverter = {
+    val str = isString(t)
+    new PrimitiveConverter {
+      override def addInt(v: Int): Unit = set(v)
+      override def addLong(v: Long): Unit = set(v)
+      override def addDouble(v: Double): Unit = set(v)
+      override def addFloat(v: Float): Unit = set(v)
+      override def addBoolean(v: Boolean): Unit = set(v)
+      override def addBinary(v: Binary): Unit = set(if (str) v.toStringUsingUTF8 else v.getBytes)
+    }
+  }
+
+  /** The values of one LIST column within the current record. */
+  private trait ListBuf extends Converter {
     def clear(): Unit
     def result(): Any
   }
 
+  /** A LIST of structs of primitives: one [[PointRow]] per element. */
+  private final class StructList(g: GroupType) extends GroupConverter with ListBuf {
+    private val names = g.getFields.asScala.map(_.getName).zipWithIndex.toMap
+    private val b = mutable.ArrayBuffer.empty[PointRow]
+    private var cur: Array[Any] = _
+    private val children: Array[Converter] = Array.tabulate(g.getFieldCount) { i =>
+      val t = g.getType(i)
+      if (!t.isPrimitive)
+        throw new UnsupportedOperationException(
+          s"point reads support structs of primitives only, got $g")
+      primitive(t, v => cur(i) = v)
+    }
+    override def getConverter(i: Int): Converter = children(i)
+    override def start(): Unit = cur = new Array[Any](children.length)
+    override def end(): Unit = b += new PointRow(names, cur)
+    def clear(): Unit = b.clear()
+    def result(): Any = b.toArray
+  }
+
+  private abstract class ListLeaf extends PrimitiveConverter with ListBuf
+
   private object ListLeaf {
-    def apply(t: PrimitiveTypeName): ListLeaf = t match {
+    def apply(t: Type): ListLeaf = t.asPrimitiveType.getPrimitiveTypeName match {
       case PrimitiveTypeName.INT32 => new ListLeaf {
         private val b = new mutable.ArrayBuilder.ofInt
         override def addInt(v: Int): Unit = b += v
@@ -228,7 +282,7 @@ private[index] object ParquetPointReader {
         def clear(): Unit = b.clear()
         def result(): Any = b.result()
       }
-      case PrimitiveTypeName.BINARY => new ListLeaf {
+      case PrimitiveTypeName.BINARY if isString(t) => new ListLeaf {
         private val b = mutable.ArrayBuffer.empty[String]
         override def addBinary(v: Binary): Unit = b += v.toStringUsingUTF8
         def clear(): Unit = b.clear()

@@ -22,15 +22,18 @@ import graft.query.Bm25
   *      footer key ranges pick the file, the page index and a record
   *      filter the rows — no Spark job) → idf, term UBs, and the per-term
   *      bucket lists: all query planning
-  *   3. postings scan pruned by `term IN (...)` pushdown + bucket
-  *      partition filter, grouped by the `bucket` column (one exchange)
+  *   3. one Spark task per touched bucket ([[perBucket]], no shuffle):
+  *      the task point-reads its terms' postings from its own
+  *      `segments/bucket=N/` directory (the terms the dictionary lists
+  *      there, `term IN (...)` over footer ranges, page index and a
+  *      record filter) and its doclens row
   *   4. per-bucket WAND (doc-at-a-time, term-UB pivoting, block skipping)
-  *      in [[perBucket]]: each bucket task point-reads its own doclens
-  *      row and emits the bucket's top-k
+  *      in that task, emitting the bucket's top-k
   *   5. global ordered merge: orderBy(score desc, docId asc).limit(k)
-  *      (Catalyst `TakeOrderedAndProject` = partial top-k + final merge)
+  *      (Catalyst `TakeOrderedAndProject` = partial top-k in the bucket
+  *      tasks + final merge on the driver)
   *
-  * A search is two Spark jobs: the postings shuffle and the merge.
+  * A search is one Spark job of one stage and no exchange.
   *
   * `exact = true` disables pruning (θ stays -∞) but keeps the identical
   * accumulation order, so exact and WAND results are bit-identical —
@@ -64,8 +67,10 @@ final class Searcher(spark: SparkSession, root: String, cacheHot: Boolean = fals
   private def oldDictFormat = new IllegalStateException(
     s"index at $root was built by an older graft version (dictionary has " +
       "no per-term bucket lists) — delete the index root and rebuild")
+  // the serving-mode tables load on the driver through the point
+  // readers: a hot fill runs no Spark job
   private lazy val hotDict: Map[String, DictRow] =
-    dictDS.collect().map(d => d.term -> d).toMap
+    dictReader.readAll(Searcher.dictRow).map(d => d.term -> d).toMap
   private lazy val doclensDS = {
     val d = spark.read.parquet(layout.doclens).as[DocLenRow]
     if (cacheHot) { val c = d.cache(); c.count(); c } else d
@@ -97,15 +102,16 @@ final class Searcher(spark: SparkSession, root: String, cacheHot: Boolean = fals
     positionsRel
   }
 
-  /** `f(bucket, rows)` once per bucket of `rows` (postings or
-    * positions), grouped by their `bucket` COLUMN: one hash exchange and
-    * no per-row deserialization just to compute the key, which
-    * `groupByKey(_.bucket)` pays. Closures must not capture the
-    * Searcher: per-query values ride them as locals.
-    */
-  private def byBucket[R: Encoder: ClassTag, U: Encoder](rows: Dataset[R])(
-      f: (Int, Array[R]) => Iterator[U]): Dataset[U] =
-    rows.groupBy(col("bucket")).as[Int, R].flatMapGroups((bucket, it) => f(bucket, it.toArray))
+  private val segments = Searcher.BucketTable("segments", layout.segments, Searcher.postingRow)
+  private val positions = Searcher.BucketTable("positions", layout.positions, Searcher.posRow)
+  // one point reader per bucket directory (`segments/bucket=N/`,
+  // `positions/bucket=N/`), created on first touch; each lists its
+  // footers once per Searcher, on the driver
+  private val bucketReaders =
+    new java.util.concurrent.ConcurrentHashMap[String, ParquetPointReader[String]]()
+  private def bucketReader(table: Searcher.BucketTable[_], bucket: Int) =
+    bucketReaders.computeIfAbsent(s"${table.dir}/bucket=$bucket",
+      dir => new ParquetPointReader[String](dir, "term", hadoopConf))
 
   /** A user `allow` predicate can be large: it ships as a broadcast, and
     * the common unfiltered search creates none.
@@ -113,22 +119,40 @@ final class Searcher(spark: SparkSession, root: String, cacheHot: Boolean = fals
   private def broadcastAllow(allow: Option[Long => Boolean]) =
     allow.map(spark.sparkContext.broadcast(_))
 
-  /** The per-bucket seam of every scoring path: [[byBucket]] with the
-    * bucket's doclens row point-read inside its task. Postings without a
-    * norms row are index corruption (e.g. a bucketSize mismatch from a
-    * bad resume): fail loudly instead of dropping the bucket's hits.
+  /** The per-bucket seam of every scoring and positional path: one Spark
+    * task per touched bucket (at most `spark.sql.shuffle.partitions`
+    * slices) and no shuffle. Each task point-reads, from its own
+    * bucket directory of `table`, the rows of the terms the dictionary
+    * lists there ([[Searcher.readBucket]]), then its doclens row, and
+    * runs `kernel`. Postings without a norms row are index corruption
+    * (e.g. a bucketSize mismatch from a bad resume): fail loudly instead
+    * of dropping the bucket's hits. Closures must not capture the
+    * Searcher: per-query values ride them as locals.
     */
-  private def perBucket[R: Encoder: ClassTag, U: Encoder](rows: Dataset[R], buckets: Seq[Int])(
+  private def perBucket[R: ClassTag, U: Encoder](table: Searcher.BucketTable[R],
+      termsByBucket: Map[Int, Seq[String]])(
       kernel: (Int, Array[R], DocLenRow) => Iterator[U]): Dataset[U] = {
-    val norms = doclensReader.covering(buckets)
-    val rootLocal = root
-    byBucket(rows) { (bucket, posts) =>
-      val dl = norms.read(Seq(bucket))(Searcher.docLenRow).headOption.getOrElse(
-        throw new IllegalStateException(
-          s"index invariant violated: bucket $bucket has postings but no doclens row ($rootLocal)"))
-      kernel(bucket, posts, dl)
+    if (termsByBucket.isEmpty) return spark.emptyDataset[U]
+    val norms = doclensReader.covering(termsByBucket.keys)
+    val tasks = termsByBucket.toSeq.sortBy(_._1).map { case (b, ts) =>
+      (b, ts, bucketReader(table, b).covering(ts))
     }
+    val slices = math.min(tasks.size, spark.sessionState.conf.numShufflePartitions)
+    val (rootLocal, tableLocal) = (root, table)
+    implicit val tag: ClassTag[U] = implicitly[Encoder[U]].clsTag
+    spark.createDataset(spark.sparkContext.parallelize(tasks, slices).flatMap {
+      case (bucket, terms, reader) =>
+        val rows = Searcher.readBucket(tableLocal, reader, bucket, terms, rootLocal)
+        val dl = norms.read(Seq(bucket))(Searcher.docLenRow).headOption.getOrElse(
+          throw new IllegalStateException(s"index invariant violated: bucket $bucket " +
+            s"has postings but no doclens row ($rootLocal)"))
+        kernel(bucket, rows, dl)
+    })
   }
+
+  /** The segment rows of `terms` in one bucket, point-read on the driver. */
+  private[graft] def bucketPostings(bucket: Int, terms: Seq[String]): Array[PostingRow] =
+    Searcher.readBucket(segments, bucketReader(segments, bucket), bucket, terms, root)
 
   // ---- hot serving path (driver-side, cacheHot only) -------------------
   // The usearch in-RAM serving analog taken to its conclusion: once the
@@ -144,7 +168,7 @@ final class Searcher(spark: SparkSession, root: String, cacheHot: Boolean = fals
   // serving queries share one access-ordered LRU + one byte account.
   private lazy val hotDoclens: Map[Int, DocLenRow] = {
     require(cacheHot, "searchHot requires a Searcher built with cacheHot = true")
-    doclensDS.collect().map(d => d.bucket -> d).toMap
+    doclensReader.readAll(Searcher.docLenRow).map(d => d.bucket -> d).toMap
   }
   private var hotPostingsBytes: Long = 0L
   private val hotPostings =
@@ -163,18 +187,12 @@ final class Searcher(spark: SparkSession, root: String, cacheHot: Boolean = fals
   private def hotRowsFor(terms: Seq[String]): Map[String, Array[PostingRow]] = {
     val missing = terms.filterNot(hotPostings.containsKey)
     if (missing.nonEmpty) {
-      // ONE pruned read fetches every uncached term's rows (the only
-      // Spark job a cold term costs; warm terms cost none) — pruned by
-      // BOTH the term pushdown and the dictionary's bucket lists, same
-      // as the distributed path (a cold term never scans all buckets)
-      val missingBuckets = missing
-        .flatMap(t => hotDict.get(t).map(_.buckets.toSeq).getOrElse(Seq.empty)).distinct
-      val fetched =
-        if (missingBuckets.isEmpty) Map.empty[String, Array[PostingRow]]
-        else segmentsDS
-          .where($"term".isin(missing: _*) && $"bucket".isin(missingBuckets: _*))
-          .collect()
-          .groupBy(_.term)
+      // uncached terms are point-read on the driver from the bucket
+      // directories the dictionary lists them in, through the same
+      // per-bucket readers as the distributed path: no Spark job
+      val fetched = Searcher.bucketTerms(hotDict, missing).toArray
+        .flatMap { case (b, ts) => bucketPostings(b, ts) }
+        .groupBy(_.term)
       missing.foreach { t =>
         val rows = fetched.getOrElse(t, Array.empty[PostingRow])
         hotPostings.put(t, rows)
@@ -197,7 +215,7 @@ final class Searcher(spark: SparkSession, root: String, cacheHot: Boolean = fals
 
   /** Serving-mode search: the identical WAND scoring executed entirely on
     * the driver over resident postings — zero Spark jobs per query once
-    * the terms are warm (one pruned fetch per cold term). Bit-identical
+    * the terms are warm (a cold term is point-read on the driver). Bit-identical
     * to [[search]] (same wandBucket, same per-bucket k, same
     * (score desc, docId asc) merge); EngineSpec pins it, and the
     * `eng_bm25_hot` driver entry runs it against the same SQL oracle as
@@ -218,8 +236,8 @@ final class Searcher(spark: SparkSession, root: String, cacheHot: Boolean = fals
     if (live.isEmpty) return Array.empty
     val idfByTerm = live.map(t => t -> Bm25.idf(local(t).df, stats.nDocs)).toMap
     val rowsByTerm = hotRowsFor(live)
-    val byBucket = rowsByTerm.valuesIterator.flatten.toArray.groupBy(_.bucket)
-    val hits = byBucket.iterator.flatMap { case (bucket, rows) =>
+    val rowsByBucket = rowsByTerm.valuesIterator.flatten.toArray.groupBy(_.bucket)
+    val hits = rowsByBucket.iterator.flatMap { case (bucket, rows) =>
       val dl = hotDoclens.getOrElse(bucket,
         throw new IllegalStateException(
           s"index invariant violated: bucket $bucket has postings but no doclens row ($root)"))
@@ -493,8 +511,8 @@ final class Searcher(spark: SparkSession, root: String, cacheHot: Boolean = fals
     * ONE pruned dictionary read plans everything; phrases with a
     * dictionary-absent term die at planning (zero data jobs); candidate
     * buckets per phrase = the INTERSECTION of its terms' bucket lists;
-    * one positions read pruned by term-IN pushdown + the union of those
-    * bucket sets; each bucket task decodes each needed term once and
+    * each candidate bucket's task point-reads its terms' positions
+    * ([[positionalMany]]), decodes each needed term once and
     * verifies positional adjacency doc-by-doc, driving the intersection
     * from the bucket-sparsest term. Duplicate terms in a phrase
     * ("table window table") are handled by offset lists. Overlapping
@@ -503,34 +521,41 @@ final class Searcher(spark: SparkSession, root: String, cacheHot: Boolean = fals
     * Returns DataFrame(phrase_id: Int, doc_id: Long, phrase_tf: Long)
     * ordered (phrase_id, doc_id), rows only where phrase_tf > 0.
     */
-  def phraseMany(phrases: Seq[(Int, String)]): DataFrame = {
-    require(hasPositions,
-      s"index at $root has no positions sidecar — run IndexBuilder.buildPositions first")
-    val empty = spark.emptyDataset[(Int, Long, Long)]
-      .toDF("phrase_id", "doc_id", "phrase_tf")
-    val qs: Seq[(Int, Array[String])] =
-      phrases.map { case (id, p) => (id, Tokenizer.tokenize(p)) }.filter(_._2.nonEmpty)
-    if (qs.isEmpty) return empty
-    val local = dictRows(qs.flatMap(_._2).distinct.sorted)
-    val live = qs.filter { case (_, ts) => ts.forall(t => local.get(t).exists(_.df > 0L)) }
-    if (live.isEmpty) return empty
-    val phraseBuckets: Map[Int, Set[Int]] = live.map { case (id, ts) =>
-      id -> ts.iterator.map(t => local(t).buckets.toSet).reduce(_ intersect _)
-    }.toMap
-    val buckets = phraseBuckets.values.flatten.toSeq.distinct
-    if (buckets.isEmpty) return empty
-    val liveTerms = live.flatMap(_._2).distinct
-    byBucket(positionsDS.where($"term".isin(liveTerms: _*) && $"bucket".isin(buckets: _*))) {
-      (bucket, rows) =>
-        val byTerm = Searcher.decodePositions(bucket, rows)
-        live.iterator
-          .filter { case (id, _) => phraseBuckets(id).contains(bucket) }
-          .flatMap { case (id, ts) =>
-            Searcher.phraseHitsInBucket(ts, byTerm).map { case (d, n) => (id, d, n) }
-          }
+  def phraseMany(phrases: Seq[(Int, String)]): DataFrame =
+    positionalMany(phrases.map { case (id, p) => (id, Tokenizer.tokenize(p), ()) }) {
+      (id, ts, _, byTerm) =>
+        Searcher.phraseHitsInBucket(ts, byTerm).map { case (d, n) => (id, d, n) }
     }
       .toDF("phrase_id", "doc_id", "phrase_tf")
       .orderBy(col("phrase_id"), col("doc_id"))
+
+  /** The shared plan of the positional batch operators: one dictionary
+    * point read plans everything, queries with a dictionary-absent term
+    * die at planning (zero data jobs), a query's candidate buckets are
+    * the intersection of its terms' bucket lists, and each bucket task
+    * point-reads and decodes its terms' positions once, then runs `hits`
+    * for every query whose candidates include the bucket.
+    */
+  private def positionalMany[Q, U: Encoder](qs: Seq[(Int, Array[String], Q)])(
+      hits: (Int, Array[String], Q, Map[String, graft.codec.PosPostings]) => Iterator[U])
+      : Dataset[U] = {
+    require(hasPositions,
+      s"index at $root has no positions sidecar — run IndexBuilder.buildPositions first")
+    val local = dictRows(qs.flatMap(_._2).distinct.sorted)
+    val live = qs.filter { case (_, ts, _) =>
+      ts.nonEmpty && ts.forall(t => local.get(t).exists(_.df > 0L))
+    }
+    val queryBuckets: Map[Int, Set[Int]] = live.map { case (id, ts, _) =>
+      id -> ts.iterator.map(t => local(t).buckets.toSet).reduce(_ intersect _)
+    }.toMap
+    val buckets = queryBuckets.values.flatten.toSet
+    perBucket(positions, Searcher.bucketTerms(local, live.flatMap(_._2), buckets)) {
+      (bucket, rows, _) =>
+        val byTerm = Searcher.decodePositions(rows)
+        live.iterator
+          .filter { case (id, _, _) => queryBuckets(id).contains(bucket) }
+          .flatMap { case (id, ts, q) => hits(id, ts, q, byTerm) }
+    }
   }
 
   /** Index-only PROXIMITY search, batched: for each (query_id, query,
@@ -547,44 +572,22 @@ final class Searcher(spark: SparkSession, root: String, cacheHot: Boolean = fals
     * crosses the engine boundary. Plan shape identical to [[phraseMany]]:
     * one pruned dictionary read plans everything, queries with a
     * dictionary-absent term die at planning, candidate buckets per query
-    * are the intersection of its terms' bucket lists, one pruned
-    * positions read, per-bucket sorted-list sweeps.
+    * are the intersection of its terms' bucket lists, per-bucket
+    * positions point reads and sorted-list sweeps ([[positionalMany]]).
     *
     * Returns DataFrame(query_id: Int, doc_id: Long, min_span: Long,
     * span_start: Long) ordered (query_id, doc_id), rows only where
     * min_span ≤ window.
     */
-  def proximityMany(queries: Seq[(Int, String, Int)]): DataFrame = {
-    require(hasPositions,
-      s"index at $root has no positions sidecar — run IndexBuilder.buildPositions first")
-    val empty = spark.emptyDataset[(Int, Long, Long, Long)]
-      .toDF("query_id", "doc_id", "min_span", "span_start")
-    val qs: Seq[(Int, Array[String], Int)] = queries
-      .map { case (id, q, w) => (id, Tokenizer.tokenize(q).distinct.sorted, w) }
-      .filter(_._2.nonEmpty)
-    if (qs.isEmpty) return empty
-    val local = dictRows(qs.flatMap(_._2).distinct.sorted)
-    val live = qs.filter { case (_, ts, _) => ts.forall(t => local.get(t).exists(_.df > 0L)) }
-    if (live.isEmpty) return empty
-    val queryBuckets: Map[Int, Set[Int]] = live.map { case (id, ts, _) =>
-      id -> ts.iterator.map(t => local(t).buckets.toSet).reduce(_ intersect _)
-    }.toMap
-    val buckets = queryBuckets.values.flatten.toSeq.distinct
-    if (buckets.isEmpty) return empty
-    val liveTerms = live.flatMap(_._2).distinct
-    byBucket(positionsDS.where($"term".isin(liveTerms: _*) && $"bucket".isin(buckets: _*))) {
-      (bucket, rows) =>
-        val byTerm = Searcher.decodePositions(bucket, rows)
-        live.iterator
-          .filter { case (id, _, _) => queryBuckets(id).contains(bucket) }
-          .flatMap { case (id, ts, w) =>
-            Searcher.proximityHitsInBucket(ts, w, byTerm)
-              .map { case (d, span, start) => (id, d, span, start) }
-          }
+  def proximityMany(queries: Seq[(Int, String, Int)]): DataFrame =
+    positionalMany(queries.map { case (id, q, w) =>
+      (id, Tokenizer.tokenize(q).distinct.sorted, w)
+    }) { (id, ts, w, byTerm) =>
+      Searcher.proximityHitsInBucket(ts, w, byTerm)
+        .map { case (d, span, start) => (id, d, span, start) }
     }
       .toDF("query_id", "doc_id", "min_span", "span_start")
       .orderBy(col("query_id"), col("doc_id"))
-  }
 
   /** Index-only ORDERED-SPAN search, batched (the Lucene `span_near
     * (in_order=true)` analog next to [[proximityMany]]'s unordered NEAR;
@@ -605,7 +608,7 @@ final class Searcher(spark: SparkSession, root: String, cacheHot: Boolean = fals
     * Plan shape identical to [[proximityMany]]: one pruned dictionary
     * read plans everything, dictionary-absent terms kill their query at
     * planning, candidate buckets are the intersection of the terms'
-    * bucket lists, one pruned positions read, per-bucket greedy sweeps
+    * bucket lists, per-bucket positions point reads and greedy sweeps
     * (O(positions · log) per doc, see
     * [[Searcher.orderedSpanHitsInBucket]]).
     *
@@ -613,38 +616,15 @@ final class Searcher(spark: SparkSession, root: String, cacheHot: Boolean = fals
     * span_start: Long) ordered (query_id, doc_id), rows only where
     * min_span ≤ window.
     */
-  def spanOrderedMany(queries: Seq[(Int, String, Int)]): DataFrame = {
-    require(hasPositions,
-      s"index at $root has no positions sidecar — run IndexBuilder.buildPositions first")
-    val empty = spark.emptyDataset[(Int, Long, Long, Long)]
-      .toDF("query_id", "doc_id", "min_span", "span_start")
+  def spanOrderedMany(queries: Seq[(Int, String, Int)]): DataFrame =
     // tokens IN ORDER — the ordered constraint is the whole point
-    val qs: Seq[(Int, Array[String], Int)] = queries
-      .map { case (id, q, w) => (id, Tokenizer.tokenize(q), w) }
-      .filter(_._2.nonEmpty)
-    if (qs.isEmpty) return empty
-    val local = dictRows(qs.flatMap(_._2).distinct.sorted)
-    val live = qs.filter { case (_, ts, _) => ts.forall(t => local.get(t).exists(_.df > 0L)) }
-    if (live.isEmpty) return empty
-    val queryBuckets: Map[Int, Set[Int]] = live.map { case (id, ts, _) =>
-      id -> ts.iterator.map(t => local(t).buckets.toSet).reduce(_ intersect _)
-    }.toMap
-    val buckets = queryBuckets.values.flatten.toSeq.distinct
-    if (buckets.isEmpty) return empty
-    val liveTerms = live.flatMap(_._2).distinct
-    byBucket(positionsDS.where($"term".isin(liveTerms: _*) && $"bucket".isin(buckets: _*))) {
-      (bucket, rows) =>
-        val byTerm = Searcher.decodePositions(bucket, rows)
-        live.iterator
-          .filter { case (id, _, _) => queryBuckets(id).contains(bucket) }
-          .flatMap { case (id, ts, w) =>
-            Searcher.orderedSpanHitsInBucket(ts, w, byTerm)
-              .map { case (d, span, start) => (id, d, span, start) }
-          }
+    positionalMany(queries.map { case (id, q, w) => (id, Tokenizer.tokenize(q), w) }) {
+      (id, ts, w, byTerm) =>
+        Searcher.orderedSpanHitsInBucket(ts, w, byTerm)
+          .map { case (d, span, start) => (id, d, span, start) }
     }
       .toDF("query_id", "doc_id", "min_span", "span_start")
       .orderBy(col("query_id"), col("doc_id"))
-  }
 
   /** Index-only HIT COUNTING, batched (the search-engine `count` API /
     * total-hits shape — the reference's size-introspection analog,
@@ -654,8 +634,8 @@ final class Searcher(spark: SparkSession, root: String, cacheHot: Boolean = fals
     * postings alone, the corpus text is never read. INTEGERS only.
     *
     * Scale shape: buckets partition the docId space, so per-bucket
-    * distinct-doc counts add up WITHOUT a global distinct — one pruned
-    * segments read (term IN + union-of-bucket-lists pushdown), per-bucket
+    * distinct-doc counts add up WITHOUT a global distinct — one task per
+    * touched bucket point-reads its terms' postings, per-bucket
     * union counts (each term's block decoded once per bucket, shared
     * across queries), one partial-aggregated sum per query. Nothing
     * scales with corpus size beyond the matched postings; driver holds
@@ -679,18 +659,12 @@ final class Searcher(spark: SparkSession, root: String, cacheHot: Boolean = fals
     val queryBuckets: Map[Int, Set[Int]] = live.map { case (id, ts) =>
       id -> ts.iterator.flatMap(t => local(t).buckets).toSet
     }.toMap
-    val buckets = queryBuckets.values.flatten.toSeq.distinct
-    val liveTerms = live.flatMap(_._2).distinct
     val partials =
-      byBucket(segmentsDS.where($"term".isin(liveTerms: _*) && $"bucket".isin(buckets: _*))) {
-        (bucket, rows) =>
+      perBucket(segments, Searcher.bucketTerms(local, live.flatMap(_._2))) {
+        (bucket, rows, _) =>
           val decoded = new java.util.HashMap[String, graft.codec.Postings]()
           rows.foreach(r => decoded.put(r.term,
             PostingCodec.decodeBlocks(r.blocks.map(_.bytes).toSeq)))
-          if (decoded.size != rows.length)
-            throw new IllegalStateException(
-              s"index invariant violated: bucket $bucket holds more than one " +
-                s"segment row per term (${rows.length} rows, ${decoded.size} terms)")
           live.iterator
             .filter { case (id, _) => queryBuckets(id).contains(bucket) }
             .map { case (id, ts) =>
@@ -726,7 +700,7 @@ final class Searcher(spark: SparkSession, root: String, cacheHot: Boolean = fals
     * where the length is the index's own doclens norm — postings +
     * doclens only, the corpus text is never read. INTEGERS only.
     *
-    * Scale shape: one pruned segments read (term IN + bucket pushdown),
+    * Scale shape: one task per touched bucket point-reads its postings,
     * per-bucket union + doclen lookup + bounded top-k (the same
     * [[Searcher.TopK]] the scoring paths use — doc lengths < 2⁵³ are
     * exact as doubles), then ONE global ordered k-merge
@@ -741,10 +715,7 @@ final class Searcher(spark: SparkSession, root: String, cacheHot: Boolean = fals
     val local = dictRows(ts)
     val live = ts.filter(t => local.get(t).exists(_.df > 0L))
     if (live.isEmpty) return empty
-    val buckets = live.flatMap(t => local(t).buckets).distinct
-    val postings = segmentsDS
-      .where($"term".isin(live: _*) && $"bucket".isin(buckets.toSeq: _*))
-    val byLen = perBucket(postings, buckets.toSeq) { (_, posts, dl) =>
+    val byLen = perBucket(segments, Searcher.bucketTerms(local, live)) { (_, posts, dl) =>
       val seen = new java.util.HashSet[Long]()
       posts.foreach { r =>
         val p = PostingCodec.decodeBlocks(r.blocks.map(_.bytes).toSeq)
@@ -1006,8 +977,8 @@ final class Searcher(spark: SparkSession, root: String, cacheHot: Boolean = fals
     * Plan shape: one pruned dictionary read plans everything; a query
     * with any dictionary-absent term is dead at planning (zero data
     * jobs — AND of an absent term is empty); candidate buckets per query
-    * are the INTERSECTION of its terms' bucket lists; one postings read
-    * pruned to the union of live terms and those buckets; each bucket
+    * are the INTERSECTION of its terms' bucket lists; each such bucket's
+    * task point-reads the live terms' postings listed there; each bucket
     * task decodes each term once (shared cache), intersects docIds
     * driving from the bucket-sparsest term, and scores survivors with
     * the identical sorted-term left-fold `idf · Bm25.tfNorm` arithmetic
@@ -1055,14 +1026,11 @@ final class Searcher(spark: SparkSession, root: String, cacheHot: Boolean = fals
     val queryBuckets: Map[Int, Set[Int]] = live.map { case (id, ts) =>
       id -> ts.iterator.map(t => localRows(t).buckets.toSet).reduce(_ intersect _)
     }.toMap
-    val buckets = queryBuckets.values.flatten.toSeq.distinct
-    if (buckets.isEmpty) return emptyPartial
-
-    val postings = segmentsDS
-      .where($"term".isin(liveTerms: _*) && $"bucket".isin(buckets: _*))
+    val termsByBucket =
+      Searcher.bucketTerms(localRows, liveTerms, queryBuckets.values.flatten.toSet)
     val qs = live.toArray
     val avgdl = g.avgdl
-    perBucket(postings, buckets) { (bucket, posts, dl) =>
+    perBucket(segments, termsByBucket) { (bucket, posts, dl) =>
       val active = qs.filter { case (id, _) => queryBuckets(id).contains(bucket) }
       val cache = new java.util.HashMap[String, graft.codec.Postings]()
       Searcher.conjunctiveBucket(posts, dl, idfByTerm, avgdl, k, active, cache)
@@ -1129,14 +1097,11 @@ final class Searcher(spark: SparkSession, root: String, cacheHot: Boolean = fals
         counts.update(b, counts.getOrElse(b, 0) + 1)))
       id -> counts.iterator.collect { case (b, c) if c >= m => b }.toSet
     }.toMap
-    val buckets = queryBuckets.values.flatten.toSeq.distinct
-    if (buckets.isEmpty) return emptyPartial
-
-    val postings = segmentsDS
-      .where($"term".isin(liveTerms: _*) && $"bucket".isin(buckets: _*))
+    val termsByBucket =
+      Searcher.bucketTerms(localRows, liveTerms, queryBuckets.values.flatten.toSet)
     val qs = live.toArray
     val avgdl = g.avgdl
-    perBucket(postings, buckets) { (bucket, posts, dl) =>
+    perBucket(segments, termsByBucket) { (bucket, posts, dl) =>
       val active = qs.filter { case (id, _, _) => queryBuckets(id).contains(bucket) }
       val cache = new java.util.HashMap[String, graft.codec.Postings]()
       Searcher.minMatchBucket(posts, dl, idfByTerm, avgdl, k, active, cache)
@@ -1295,14 +1260,14 @@ final class Searcher(spark: SparkSession, root: String, cacheHot: Boolean = fals
       val bs = stats.bucketSize
       val bucketsByQuery: Map[Int, Set[Int]] =
         docsByQuery.map { case (q, ds) => q -> ds.map(d => (d / bs).toInt) }
-      val buckets = bucketsByQuery.values.flatten.toSeq.distinct
-      val liveTerms = termsByQuery.values.flatten.toSeq.distinct
+      val liveTerms = termsByQuery.values.flatten.toSeq.distinct.sorted
       val qs = termsByQuery.map { case (q, ts) =>
         (q, ts, bucketsByQuery(q), docsByQuery(q))
       }.toArray
-      byBucket(positionsDS.where($"term".isin(liveTerms: _*) && $"bucket".isin(buckets: _*))) {
-        (bucket, rows) =>
-          val byTerm = Searcher.decodePositions(bucket, rows)
+      val hitBuckets = bucketsByQuery.values.flatten.toSet
+      perBucket(positions, Searcher.bucketTerms(dictRows(liveTerms), liveTerms, hitBuckets)) {
+        (bucket, rows, _) =>
+          val byTerm = Searcher.decodePositions(rows)
           qs.iterator
             .filter { case (_, _, bks, _) => bks.contains(bucket) }
             .flatMap { case (id, ts, _, ds) =>
@@ -1375,16 +1340,12 @@ final class Searcher(spark: SparkSession, root: String, cacheHot: Boolean = fals
     // buckets from the dictionary rows (a term known globally but absent
     // from THIS shard has no local row → no buckets → contributes here
     // exactly nothing, as before)
-    val touchedBuckets = termList
-      .flatMap(t => local.get(t).map(_.buckets.toSeq).getOrElse(Seq.empty))
-      .distinct
-    if (touchedBuckets.isEmpty)
-      return spark.emptyDataset[Hit].toDF("doc_id", "score")
+    val touched = Searcher.bucketTerms(local, termList).keySet
 
     // negated terms: postings read alongside the positive ones (same
-    // pruned scan — term IN over both lists, buckets only where a
-    // positive term can produce a hit), decoded into a bucket-LOCAL
-    // exclusion array inside the bucket task. Nothing about the negation
+    // bucket tasks — only buckets where a positive term can produce a
+    // hit), decoded into a bucket-LOCAL exclusion array inside the
+    // bucket task. Nothing about the negation
     // ever reaches the driver or a broadcast of doc ids: the excluded
     // set is built where the postings already live, bounded by the
     // bucket-width geometry like every other per-bucket structure.
@@ -1392,13 +1353,11 @@ final class Searcher(spark: SparkSession, root: String, cacheHot: Boolean = fals
     val negSet = negLive.toSet
     val scanTerms = (termList ++ negLive).distinct
 
-    val postings = segmentsDS
-      .where($"term".isin(scanTerms: _*) && $"bucket".isin(touchedBuckets: _*))
     val allowB = broadcastAllow(allow)
     val avgdl = g.avgdl
     val countersLocal = counters.orNull
 
-    perBucket(postings, touchedBuckets) { (_, posts, dl) =>
+    perBucket(segments, Searcher.bucketTerms(local, scanTerms, touched)) { (_, posts, dl) =>
       val (negRows, posRows) =
         if (negSet.isEmpty) (Array.empty[PostingRow], posts)
         else posts.partition(r => negSet.contains(r.term))
@@ -1430,8 +1389,8 @@ final class Searcher(spark: SparkSession, root: String, cacheHot: Boolean = fals
     * of a small group can sit arbitrarily deep in the global ranking and
     * a k-bounded retrieval would lose it.
     *
-    * Scale shape: identical planning to [[search]] (one pruned dictionary
-    * read, one term-IN + bucket-IN segments scan); per-bucket state is
+    * Scale shape: identical planning to [[search]] (one dictionary point
+    * read, one postings-reading task per touched bucket); per-bucket state is
     * the matched-doc set, bounded by the bucket-width geometry (≤ 2²⁰
     * docs) like the TAAT accumulator; the output frame is unordered and
     * meant to be AGGREGATED (argmax per group, partial map-side), never
@@ -1449,15 +1408,10 @@ final class Searcher(spark: SparkSession, root: String, cacheHot: Boolean = fals
       return spark.emptyDataset[Hit].toDF("doc_id", "score")
     val termList = dictHits.map(_._1).toSeq
     val idfByTerm = dictHits.toMap
-    val touchedBuckets = termList
-      .flatMap(t => local.get(t).map(_.buckets.toSeq).getOrElse(Seq.empty))
-      .distinct
-    val postings = segmentsDS
-      .where($"term".isin(termList: _*) && $"bucket".isin(touchedBuckets: _*))
     val avgdl = stats.avgdl
     // k = MaxValue keeps every scored doc: TopK's heap grows lazily, so
     // memory is O(matched-in-bucket) ≤ bucket width
-    perBucket(postings, touchedBuckets) { (_, posts, dl) =>
+    perBucket(segments, Searcher.bucketTerms(local, termList)) { (_, posts, dl) =>
       Searcher.wandBucket(posts, dl, idfByTerm, avgdl, ubScale = 1.0,
         k = Int.MaxValue, exact = true, allow = None)
     }.toDF("doc_id", "score")
@@ -1491,7 +1445,7 @@ final class Searcher(spark: SparkSession, root: String, cacheHot: Boolean = fals
     * as the term path.
     *
     * Scale shape: identical to [[search]] — one pruned dictionary read
-    * plans everything, one term-IN + bucket-IN segments scan, per-bucket
+    * plans everything, one postings-reading task per touched bucket, per-bucket
     * TAAT merge of member postings (bounded by bucket width), bounded
     * top-k per bucket, one global k-merge.
     */
@@ -1569,7 +1523,7 @@ final class Searcher(spark: SparkSession, root: String, cacheHot: Boolean = fals
     * so dropping it is exact.
     *
     * Scale shape: identical to [[search]] — one pruned dictionary read
-    * plans everything, one term-IN + bucket-IN segments scan, per-bucket
+    * plans everything, one postings-reading task per touched bucket, per-bucket
     * TAAT merge of member postings (bounded by bucket width), bounded
     * top-k per bucket, one global k-merge.
     */
@@ -1588,17 +1542,11 @@ final class Searcher(spark: SparkSession, root: String, cacheHot: Boolean = fals
       live.map(g => Bm25.idf(g.map(t => local(t).df).max, stats.nDocs)).toArray
     val groupOf: Map[String, Int] =
       live.zipWithIndex.flatMap { case (g, i) => g.map(_ -> i) }.toMap
-    val buckets = live.flatten.flatMap(t => local(t).buckets.toSeq).distinct
-    if (buckets.isEmpty) return spark.emptyDataset[Hit].toDF("doc_id", "score")
-
-    val scanTerms = live.flatten
-    val postings = segmentsDS
-      .where($"term".isin(scanTerms: _*) && $"bucket".isin(buckets: _*))
     val avgdl = stats.avgdl
     val isDisMax = disMaxTie.isDefined
     val tie = disMaxTie.getOrElse(1.0)
 
-    perBucket(postings, buckets) { (_, posts, dl) =>
+    perBucket(segments, Searcher.bucketTerms(local, live.flatten)) { (_, posts, dl) =>
       val nG = idfs.length
       // per-group doc → summed tf (int adds — merge order free)
       val tfByGroup = Array.fill(nG)(new java.util.HashMap[Long, Int]())
@@ -1893,7 +1841,7 @@ final class Searcher(spark: SparkSession, root: String, cacheHot: Boolean = fals
     *
     * Plan shape: ONE pruned dictionary read plans everything; candidate
     * buckets = the INTERSECTION of the gate terms' (must + phrase)
-    * bucket lists; one pruned postings read (the positions sidecar when
+    * bucket lists; per-bucket postings point reads (the positions sidecar when
     * a phrase gate is present — presence, tf AND adjacency all come from
     * it, the corpus text is never read); per bucket, the gate doc sets
     * are intersected sorted arrays, negated postings decode into a
@@ -1926,8 +1874,7 @@ final class Searcher(spark: SparkSession, root: String, cacheHot: Boolean = fals
     val liveScoring = scoring.filter(t => local.get(t).exists(_.df > 0L))
     val idfByTerm = liveScoring.map(t => t -> Bm25.idf(local(t).df, stats.nDocs)).toMap
     val gateTerms = (mustTerms ++ phraseToks).distinct
-    val buckets: Seq[Int] =
-      gateTerms.map(t => local(t).buckets.toSet).reduce(_ intersect _).toSeq
+    val buckets: Set[Int] = gateTerms.map(t => local(t).buckets.toSet).reduce(_ intersect _)
     if (buckets.isEmpty) return empty
     val negLive = negTerms.filter(t => local.get(t).exists(_.df > 0L))
 
@@ -1936,14 +1883,8 @@ final class Searcher(spark: SparkSession, root: String, cacheHot: Boolean = fals
     val hits =
       if (phraseToks.isEmpty) {
         val scanTerms = (liveScoring ++ negLive).distinct
-        val postings = segmentsDS
-          .where($"term".isin(scanTerms.toSeq: _*) && $"bucket".isin(buckets: _*))
-        perBucket(postings, buckets) { (bucket, posts, dl) =>
+        perBucket(segments, Searcher.bucketTerms(local, scanTerms, buckets)) { (_, posts, dl) =>
           val byRow = posts.iterator.map(r => r.term -> r).toMap
-          if (byRow.size != posts.length)
-            throw new IllegalStateException(
-              s"index invariant violated: bucket $bucket holds more than one " +
-                s"segment row per term (${posts.length} rows, ${byRow.size} terms)")
           val dec = new java.util.HashMap[String, graft.codec.Postings]()
           def post(t: String): graft.codec.Postings = byRow.get(t) match {
             case Some(r) => dec.computeIfAbsent(t,
@@ -1964,10 +1905,8 @@ final class Searcher(spark: SparkSession, root: String, cacheHot: Boolean = fals
         }
       } else {
         val scanTerms = (liveScoring ++ mustTerms ++ negLive ++ phraseToks).distinct
-        val positions = positionsDS
-          .where($"term".isin(scanTerms.toSeq: _*) && $"bucket".isin(buckets: _*))
-        perBucket(positions, buckets) { (bucket, rows, dl) =>
-          val byTerm = Searcher.decodePositions(bucket, rows)
+        perBucket(positions, Searcher.bucketTerms(local, scanTerms, buckets)) { (_, rows, dl) =>
+          val byTerm = Searcher.decodePositions(rows)
           if (!phraseToks.distinct.forall(byTerm.contains) ||
               !mustTerms.forall(byTerm.contains)) Iterator.empty
           else {
@@ -1997,8 +1936,8 @@ final class Searcher(spark: SparkSession, root: String, cacheHot: Boolean = fals
   /** Batch search: all queries answered in ONE distributed pass — the
     * per-row task fan-out of the reference's batched `search_many`
     * (/root/reference/python/lib.cpp:416-461, executor.dynamic), rendered
-    * as: one pruned postings scan over the union of query terms grouped
-    * by bucket, per-bucket term-at-a-time scoring of every query, then a
+    * as: one task per bucket any query term is listed in, point-reading
+    * those terms' postings and scoring every query term-at-a-time, then a
     * bounded global top-k per query. Returns (query_id, doc_id, score)
     * ordered within each query by (score desc, doc_id asc), exactly what
     * per-query [[search]] gives.
@@ -2049,12 +1988,6 @@ final class Searcher(spark: SparkSession, root: String, cacheHot: Boolean = fals
       return spark.emptyDataset[(Int, Long, Double)].toDF("query_id", "doc_id", "score")
     val liveTerms = livePerQuery.flatMap(_._2).distinct.sorted
 
-    // bucket list straight from the dictionary rows — no separate
-    // distinct-bucket scan job
-    val touched = liveTerms.flatMap(t => localRows(t).buckets.toSeq).distinct
-    val postings = segmentsDS
-      .where($"term".isin(liveTerms: _*) && $"bucket".isin(touched: _*))
-
     val qs = livePerQuery.toArray
     val avgdl = g.avgdl
     // stored block-max tf-norms came from THIS shard's avgdl; scale UBs
@@ -2063,7 +1996,7 @@ final class Searcher(spark: SparkSession, root: String, cacheHot: Boolean = fals
     val countersLocal = counters.orNull
     val allowB = broadcastAllow(allow)
 
-    perBucket(postings, touched) { (_, posts, dl) =>
+    perBucket(segments, Searcher.bucketTerms(localRows, liveTerms)) { (_, posts, dl) =>
       // term-at-a-time: decode each term once per bucket task AND
       // traverse it once for the whole batch (see Searcher.taatBucket
       // — bit-identical to the per-query WAND loop, EngineSpec-pinned)
@@ -2076,26 +2009,60 @@ final class Searcher(spark: SparkSession, root: String, cacheHot: Boolean = fals
 
 object Searcher {
 
-  /** One bucket's positional rows decoded by term. One row per (term,
-    * bucket) is the same index invariant the TAAT paths assert — a
-    * violating merge artifact must fail loudly.
+  /** One bucket's positional rows decoded by term (one row per term:
+    * [[readBucket]] checks it).
     */
-  private[index] def decodePositions(
-      bucket: Int, rows: Array[PosRow]): Map[String, graft.codec.PosPostings] = {
-    val byTerm = rows.iterator.map(r =>
+  private[index] def decodePositions(rows: Array[PosRow]): Map[String, graft.codec.PosPostings] =
+    rows.iterator.map(r =>
       r.term -> graft.codec.PositionCodec.decodeBlocks(r.blocks.map(_.bytes).toSeq)).toMap
-    if (byTerm.size != rows.length)
-      throw new IllegalStateException(
-        s"positions invariant violated in bucket $bucket: ${rows.length} rows, " +
-          s"${byTerm.size} terms")
-    byTerm
-  }
 
   /** Point-read rows of the dictionary and doclens tables. */
   private[index] def dictRow(r: PointRow): DictRow =
     DictRow(r("term"), r("df"), r("maxTfNorm"), r("buckets"))
   private[index] def docLenRow(r: PointRow): DocLenRow =
     DocLenRow(r("bucket"), r("docIds"), r("lens"))
+
+  /** A `partitionBy("bucket")` index table (segments or positions) and
+    * its point-read row; the partition column is not in the files, so
+    * the reader of a bucket directory supplies `bucket`.
+    */
+  private[index] final case class BucketTable[R](
+      name: String, dir: String, row: (Int, PointRow) => R)
+
+  private[index] def postingRow(bucket: Int, r: PointRow): PostingRow =
+    PostingRow(r("term"), bucket, r("df"), r("maxTfNorm"), r[Array[PointRow]]("blocks")
+      .map(b => EncBlock(b("first"), b("last"), b("count"), b("maxTfNorm"), b("bytes"))))
+  private[index] def posRow(bucket: Int, r: PointRow): PosRow =
+    PosRow(r("term"), bucket, r("df"), r[Array[PointRow]]("blocks")
+      .map(b => PosBlock(b("first"), b("last"), b("count"), b("bytes"))))
+
+  /** For each bucket the dictionary lists one of `terms` in (and `keep`
+    * accepts), the terms it lists there.
+    */
+  private[index] def bucketTerms(dict: Map[String, DictRow], terms: Seq[String],
+      keep: Int => Boolean = _ => true): Map[Int, Seq[String]] =
+    terms.distinct
+      .flatMap(t => dict.get(t).toSeq.flatMap(_.buckets.iterator.filter(keep).map(_ -> t)))
+      .groupMap(_._1)(_._2)
+
+  /** The rows of `terms` in one bucket directory of `table`. A term the
+    * dictionary lists in the bucket must hold exactly one row there: a
+    * lost or duplicated data file fails loudly instead of shortening or
+    * doubling results.
+    */
+  private[index] def readBucket[R: ClassTag](table: BucketTable[R],
+      reader: ParquetPointReader[String], bucket: Int, terms: Seq[String],
+      root: String): Array[R] = {
+    val got = reader.read(terms)(r => (r[String]("term"), table.row(bucket, r)))
+    val rows = got.groupMapReduce(_._1)(_ => 1)(_ + _)
+    terms.foreach { t =>
+      val n = rows.getOrElse(t, 0)
+      if (n != 1)
+        throw new IllegalStateException(s"index invariant violated: dictionary lists term $t " +
+          s"in bucket $bucket but ${table.name} hold $n rows ($root)")
+    }
+    got.iterator.map(_._2).toArray
+  }
 
   /** Bounded Levenshtein distance: the exact edit distance if ≤ maxDist,
     * else -1 — the textbook two-row DP with the standard band cutoff,

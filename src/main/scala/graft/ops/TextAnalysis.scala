@@ -23,12 +23,16 @@ object TextAnalysis {
   // work whose first real operation is its own exchange (same rule as
   // Relational.t — the spread would be a second shuffle buying nothing)
   // AND for the per-doc single-aggregate entries (tokcount/quality/
-  // langid/fingerprint/pack/blocklist/string-distance pairs): the A-B-A
-  // noop measurement (OPTIMIZATION_r06.md) showed the text exchange
-  // costs more than the one-task map it parallelizes at bench scale,
-  // and at corpus scale the multi-file scan is already parallel — the
-  // spread earns its exchange only on the multiplicative passes (gram/
-  // shingle explodes, signatures) where per-row work dominates
+  // langid/fingerprint/pack/blocklist): the A-B-A noop measurement
+  // (OPTIMIZATION_r06.md) showed the text exchange costs more than the
+  // one-task map it parallelizes at bench scale, and at corpus scale the
+  // multi-file scan is already parallel — the spread earns its exchange
+  // only on the multiplicative passes (gram/shingle explodes,
+  // signatures) where per-row work dominates. The levenshtein/hamming
+  // pair entries are multiplicative passes (O(50) distance evaluations
+  // per row) that go unspread anyway: they were measured as exceptions
+  // to that rule in the same A-B-A run, and on a few-file corpus their
+  // distance work runs at scan parallelism
   private def docs(spark: SparkSession, dir: String,
       spread: Boolean = true): DataFrame = {
     val df = spark.read.parquet(s"$dir/documents.parquet")

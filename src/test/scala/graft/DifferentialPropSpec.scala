@@ -1,0 +1,137 @@
+package graft
+
+import java.nio.file.{Files, Path}
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.functions.col
+import org.scalacheck.Gen
+
+import graft.index.{DictRow, IndexBuilder, PostingRow, Searcher}
+import graft.oracle.ExactScorer
+
+/** Randomized differential tests of the per-bucket seam over generated
+  * corpora with the nasty cases: zero-token docs, exact-duplicate docs
+  * (ties broken by docId), one term in every doc, bucket width 1, bucket
+  * width > nDocs, and several segment files per bucket directory.
+  * Properties: the point-read postings of each bucket equal the Spark
+  * scan of that bucket row for row (block bytes included), and
+  * `search` ≡ `searchExact` ≡ `searchMany` ≡ [[ExactScorer]] bit for bit.
+  * (Plain scalacheck generators sampled in a loop, as in CodecSpec; N is
+  * small to keep the suite's runtime bounded.)
+  */
+class DifferentialPropSpec extends SparkSpec {
+  import spark.implicits._
+  import DifferentialPropSpec._
+
+  private val vocab = (0 until 12).map(i => s"w$i")
+
+  private val docGen: Gen[String] = Gen.frequency(
+    1 -> Gen.oneOf("", "-- ..", "!"), // zero tokens
+    6 -> Gen.choose(1, 8).flatMap(n => Gen.listOfN(n, Gen.oneOf(vocab)).map(_.mkString(" "))))
+
+  private val caseGen: Gen[Case] = for {
+    n <- Gen.choose(1, 40)
+    base <- Gen.listOfN(n, docGen)
+    dups <- Gen.listOfN(n / 4, Gen.choose(0, n - 1)) // exact duplicates
+    everywhere <- Gen.oneOf(true, false) // one term in every doc
+    width <- Gen.oneOf(Gen.const(One), Gen.const(Wide), Gen.choose(2, 5).map(Buckets(_)))
+    nq <- Gen.choose(1, 5)
+    queries <- Gen.listOfN(nq, Gen.choose(1, 3).flatMap(m =>
+      Gen.listOfN(m, Gen.oneOf(vocab :+ "every" :+ "absent")).map(_.mkString(" "))))
+    k <- Gen.choose(1, 10)
+  } yield {
+    val contents = dups.foldLeft(base.toIndexedSeq)((cs, i) => cs :+ cs(i))
+      .map(c => if (everywhere) s"$c every" else c)
+    Case(contents.zipWithIndex.map { case (c, i) => (i.toLong, c) }, width,
+      queries.zipWithIndex.map(_.swap), k)
+  }
+
+  /** Which of the nasty cases a generated corpus contains. */
+  private def features(c: Case): Set[String] = {
+    val toks = c.docs.map { case (_, d) => graft.analyze.Tokenizer.tokenize(d).toSet }
+    Set(
+      Some(c.width.toString.takeWhile(_ != '(')),
+      if (toks.exists(_.isEmpty)) Some("zero-token doc") else None,
+      if (c.docs.map(_._2).distinct.size < c.docs.size) Some("duplicate docs") else None,
+      if (toks.reduce(_ intersect _).nonEmpty) Some("term in every doc") else None).flatten
+  }
+
+  private def build(c: Case): String = {
+    val root = Files.createTempDirectory("graft-diff-").toString
+    val corpus = c.docs.toDF("doc_id", "content")
+    c.width match {
+      case One => IndexBuilder.build(spark, corpus, root, fixedBucketSize = 1L)
+      case Wide => IndexBuilder.build(spark, corpus, root, fixedBucketSize = c.docs.size + 5L)
+      case Buckets(b) => IndexBuilder.build(spark, corpus, root, targetBuckets = b)
+    }
+    root
+  }
+
+  private def dataFiles(dir: Path): Int =
+    if (!Files.isDirectory(dir)) 0
+    else {
+      val s = Files.list(dir)
+      try s.iterator().asScala.count(_.toString.endsWith(".parquet")) finally s.close()
+    }
+
+  private def same(a: PostingRow, b: PostingRow): Boolean =
+    a.term == b.term && a.bucket == b.bucket && a.df == b.df && a.maxTfNorm == b.maxTfNorm &&
+      a.blocks.length == b.blocks.length && a.blocks.zip(b.blocks).forall { case (x, y) =>
+        x.first == y.first && x.last == y.last && x.count == y.count &&
+          x.maxTfNorm == y.maxTfNorm && x.bytes.sameElements(y.bytes)
+      }
+
+  test("point-read postings ≡ Spark scan; search ≡ searchExact ≡ searchMany ≡ ExactScorer") {
+    var seed = org.scalacheck.rng.Seed(20261018L)
+    var multiFileBuckets = 0
+    val seen = Set.newBuilder[String]
+    (1 to 9).foreach { run =>
+      val c = caseGen.pureApply(Gen.Parameters.default, seed)
+      seed = seed.next
+      seen ++= features(c)
+      val root = build(c)
+      val layout = IndexBuilder.Layout(root)
+      val s = new Searcher(spark, root)
+      val dict = spark.read.parquet(layout.dict).as[DictRow].collect()
+      val listed = dict.flatMap(d => d.buckets.map(_ -> d.term)).groupMap(_._1)(_._2)
+      val scanned = spark.read.parquet(layout.segments).as[PostingRow].collect().groupBy(_.bucket)
+      assert(listed.keySet == scanned.keySet, s"run $run: dictionary and segments buckets differ")
+      listed.foreach { case (b, terms) =>
+        multiFileBuckets += (if (dataFiles(Path.of(layout.segments, s"bucket=$b")) > 1) 1 else 0)
+        val want = spark.read.parquet(layout.segments).where(col("bucket") === b)
+          .as[PostingRow].collect().sortBy(_.term)
+        val got = s.bucketPostings(b, terms.toSeq).sortBy(_.term)
+        assert(want.length == scanned(b).length && got.length == want.length &&
+          got.zip(want).forall { case (x, y) => same(x, y) },
+          s"run $run bucket $b: point read differs from the Spark scan")
+      }
+
+      val oracle = new ExactScorer(c.docs)
+      val many = s.searchMany(c.queries, c.k).as[(Int, Long, Double, Int)].collect()
+        .groupBy(_._1).map { case (q, rs) => q -> rs.sortBy(_._4).map(r => (r._2, r._3)).toSeq }
+      c.queries.foreach { case (id, q) =>
+        val want = oracle.search(q, c.k).toSeq
+        val ctx = s"run $run (${c.docs.size} docs, ${c.width}) query '$q' k=${c.k}"
+        assert(s.search(q, c.k).as[(Long, Double)].collect().toSeq == want, s"search: $ctx")
+        assert(s.searchExact(q, c.k).as[(Long, Double)].collect().toSeq == want,
+          s"searchExact: $ctx")
+        assert(many.getOrElse(id, Seq.empty) == want, s"searchMany: $ctx")
+      }
+    }
+    assert(multiFileBuckets > 0, "no generated geometry put several files in one bucket")
+    val missed = Set("One", "Wide", "Buckets", "zero-token doc", "duplicate docs",
+      "term in every doc") -- seen.result()
+    assert(missed.isEmpty, s"cases never generated: $missed")
+  }
+}
+
+object DifferentialPropSpec {
+  private sealed trait Width
+  private case object One extends Width // bucket width 1
+  private case object Wide extends Width // one bucket wider than the corpus
+  private final case class Buckets(n: Int) extends Width
+
+  private final case class Case(docs: IndexedSeq[(Long, String)], width: Width,
+      queries: Seq[(Int, String)], k: Int)
+}

@@ -16,7 +16,7 @@ import graft.index.{DictRow, IndexBuilder, MultiSearcher, Searcher}
 /** The driver-side dictionary point read and the per-bucket seam: point
   * reads equal the Spark reads, a damaged index fails loudly instead of
   * returning short results, concurrent searches stay bit-identical, and
-  * a search costs at most two Spark jobs.
+  * a search costs one Spark job with one task per touched bucket.
   */
 class PointReadSpec extends SparkSpec {
   import spark.implicits._
@@ -62,20 +62,41 @@ class PointReadSpec extends SparkSpec {
     dst.toString
   }
 
-  /** Spark jobs started by `f` on this thread. */
-  private def jobsOf[T](f: => T): Int = {
+  /** (jobs, tasks) of the Spark jobs started by `f` on this thread. */
+  private def jobsAndTasksOf[T](f: => T): (Int, Int) = {
     val group = s"graft-point-${java.util.UUID.randomUUID()}"
-    val n = new java.util.concurrent.atomic.AtomicInteger()
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val tasks = new java.util.concurrent.atomic.AtomicInteger()
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
-          n.incrementAndGet()
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group)) {
+          jobs.incrementAndGet()
+          tasks.addAndGet(e.stageInfos.map(_.numTasks).sum)
+        }
     }
     val sc = spark.sparkContext
     sc.addSparkListener(listener)
     sc.setJobGroup(group, "job count")
-    try { f; org.apache.spark.graft.ListenerBusDrain(sc); n.get() }
+    try { f; org.apache.spark.graft.ListenerBusDrain(sc); (jobs.get(), tasks.get()) }
     finally { sc.clearJobGroup(); sc.removeSparkListener(listener) }
+  }
+
+  private def jobsOf[T](f: => T): Int = jobsAndTasksOf(f)._1
+
+  /** `f` fails a Spark job with a cause whose message contains `msg`. */
+  private def failsWith(msg: String)(f: => Any): Unit = {
+    val e = intercept[SparkException](f)
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(c => String.valueOf(c.getMessage).contains(msg)), s"unexpected failure: $e")
+  }
+
+  /** The data file of `table`'s bucket directory `bucket` that holds `term`. */
+  private def fileHolding(table: String, bucket: Int, term: String): Path = {
+    val s = Files.list(Path.of(table, s"bucket=$bucket"))
+    val files = try s.iterator().asScala.filter(_.toString.endsWith(".parquet")).toList
+    finally s.close()
+    files.find(f => spark.read.parquet(f.toString).where(col("term") === term).count() > 0)
+      .getOrElse(fail(s"no file of $table/bucket=$bucket holds '$term'"))
   }
 
   test("dictionary point read equals the Spark dictionary read") {
@@ -98,12 +119,7 @@ class PointReadSpec extends SparkSpec {
     rewrite(dlPath, spark.read.parquet(dlPath).where(col("bucket") =!= victim))
     // "def" is in every generated doc, so it posts in every bucket
     val s = new Searcher(spark, damaged)
-    def failsLoudly(f: => Any): Unit = {
-      val e = intercept[SparkException](f)
-      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
-        .exists(c => String.valueOf(c.getMessage).contains("postings but no doclens row")),
-        s"unexpected failure: $e")
-    }
+    def failsLoudly(f: => Any): Unit = failsWith("postings but no doclens row")(f)
     failsLoudly(s.search("def", 10).collect())
     failsLoudly(s.searchMany(Seq(0 -> "def", 1 -> "id0"), 10).collect())
     failsLoudly(s.searchBool(10, must = "def").collect())
@@ -145,14 +161,45 @@ class PointReadSpec extends SparkSpec {
     } finally pool.shutdownNow()
   }
 
-  test("dictRows runs no Spark job; a search runs at most two") {
+  test("a lost segment or positions file fails search, searchMany, searchBool, phraseMany") {
+    val damaged = copyIndex(root)
+    IndexBuilder.buildPositions(spark, corpus(0, 200), damaged)
+    val layout = IndexBuilder.Layout(damaged)
+    // "def" is in every generated doc, so every bucket lists it
+    val bucket = new Searcher(spark, damaged).dictRows(Seq("def"))("def").buckets.head
+    Files.delete(fileHolding(layout.segments, bucket, "def"))
+    Files.delete(fileHolding(layout.positions, bucket, "def"))
+    val s = new Searcher(spark, damaged)
+    def lost(table: String) =
+      s"dictionary lists term def in bucket $bucket but $table hold 0 rows"
+    failsWith(lost("segments"))(s.search("def", 10).collect())
+    failsWith(lost("segments"))(s.searchMany(Seq(0 -> "def", 1 -> "id0"), 10).collect())
+    failsWith(lost("segments"))(s.searchBool(10, must = "def").collect())
+    failsWith(lost("positions"))(s.phraseMany(Seq(0 -> "def")).collect())
+  }
+
+  test("dictRows runs no Spark job; a search runs exactly one") {
     val s = new Searcher(spark, root)
     val terms = queries.flatMap { case (_, q) => graft.analyze.Tokenizer.tokenize(q) }.distinct
     assert(jobsOf(s.dictRows(terms)) == 0)
     val (_, q) = queries.head
-    s.search(q, 10).collect() // first touch lists the segments table
+    s.search(q, 10).collect() // first touch lists the bucket directories
     val n = jobsOf(s.search(q, 10).collect())
-    assert(n >= 1 && n <= 2, s"search ran $n jobs")
+    assert(n == 1, s"search ran $n jobs")
+  }
+
+  test("a search runs one task per bucket its terms are listed in") {
+    val s = new Searcher(spark, root)
+    val dict = spark.read.parquet(IndexBuilder.Layout(root).dict).as[DictRow].collect()
+    val single = dict.find(_.buckets.length == 1).getOrElse(fail("no single-bucket term"))
+    val all = dict.find(_.term == "def").get
+    assert(all.buckets.length == 4, "fixture: 'def' should post in all 4 buckets")
+    for (d <- Seq(single, all)) {
+      s.search(d.term, 10).collect()
+      val (jobs, tasks) = jobsAndTasksOf(s.search(d.term, 10).collect())
+      assert(jobs == 1 && tasks == d.buckets.length,
+        s"'${d.term}' (${d.buckets.length} buckets) ran $jobs jobs, $tasks tasks")
+    }
   }
 
   test("awaitAll awaits every thunk, rethrows the first cause, suppresses the rest") {
