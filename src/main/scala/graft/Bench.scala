@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.corpus.CorpusGen
@@ -38,15 +37,9 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession(cpus)
 
     def time(f: => Unit): Double = {
       val t0 = System.nanoTime()
@@ -58,7 +51,7 @@ object Bench {
     // machinery; identical every sweep, so its spread measures the HOST,
     // not the engine
     def canary(): Double = time {
-      spark.range(0L, 1L << 29, 1L, cpus.toInt)
+      spark.range(0L, 1L << 29, 1L, cpus)
         .select(sum(pmod(col("id"), lit(7)))).head()
     }
 

@@ -1,18 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev smoke-runner for the driver's `SparkEntry.entry` contract:
   * prints the flagship row count (driver requires > 0) and the top rows.
   */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession(8)
     val df = SparkEntry.entry(spark)
     val rows = df.collect()
     println(s"entry rows=${rows.length}")

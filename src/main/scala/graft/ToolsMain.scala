@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: time one named SparkEntry query.
   * Usage: runMain graft.TimeOne <queryName> [sfDir] [cpus]
   */
@@ -9,13 +7,8 @@ object TimeOne {
   def main(args: Array[String]): Unit = {
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
-    val cpus = if (args.length > 2) args(2) else "32"
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = if (args.length > 2) args(2).toInt else 32
+    val spark = LocalSession(cpus)
     val fn = SparkEntry.queries(name)
     // warm-up run then timed run (SPARK_GRAFT_NOWARM=1 to measure cold)
     if (!sys.env.contains("SPARK_GRAFT_NOWARM")) fn(spark, sfDir).collect()
@@ -38,13 +31,8 @@ object PlanDump {
       if (args(2) == "all") SparkEntry.queries.keys.toSeq.sorted
       else args(2).split(",").toSeq
     val sfDir = if (args.length > 3) args(3) else "/root/testdata/sf0.1"
-    val cpus = if (args.length > 4) args(4) else "32"
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = if (args.length > 4) args(4).toInt else 32
+    val spark = LocalSession(cpus)
     new java.io.File(outDir).mkdirs()
     names.foreach { name =>
       val df = SparkEntry.queries(name)(spark, sfDir)
@@ -66,14 +54,9 @@ object BenchExtra {
   def main(args: Array[String]): Unit = {
     val names = args(0).split(",").toSeq
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
-    val cpus = if (args.length > 2) args(2) else "32"
+    val cpus = if (args.length > 2) args(2).toInt else 32
     val reps = if (args.length > 3) args(3).toInt else 3
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession(cpus)
     def time(f: => Unit): Double = {
       val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
     }
@@ -105,13 +88,8 @@ object BenchExtra {
 object TimePrewarm {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
-    val cpus = if (args.length > 1) args(1) else "32"
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = if (args.length > 1) args(1).toInt else 32
+    val spark = LocalSession(cpus)
     def time(name: String)(f: => Unit): Unit = {
       val t0 = System.nanoTime()
       f

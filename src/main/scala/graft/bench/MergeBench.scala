@@ -1,7 +1,5 @@
 package graft.bench
 
-import org.apache.spark.sql.SparkSession
-
 import graft.corpus.CorpusGen
 import graft.index.{IndexBuilder, SegmentMerger}
 
@@ -21,13 +19,7 @@ object MergeBench {
   def main(args: Array[String]): Unit = {
     val nPerGen = if (args.nonEmpty) args(0).toLong else 100000L
     val cpus = if (args.length > 1) args(1).toInt else 16
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", 64)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.LocalSession(cpus, shufflePartitions = 64)
     import spark.implicits._
 
     def time(f: => Unit): Double = {

@@ -1,7 +1,5 @@
 package graft.bench
 
-import org.apache.spark.sql.SparkSession
-
 import graft.corpus.CorpusGen
 import graft.index.{IndexBuilder, Searcher}
 
@@ -28,13 +26,7 @@ object Scaling {
     // fixed layout (shuffle partitions, buckets) across both runs — only
     // the executor-thread count varies, exactly like adding executors to
     // a cluster over the same partitioned job
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", 64)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.LocalSession(cpus, shufflePartitions = 64)
     try {
       import spark.implicits._
       // corpus materialized to parquet BEFORE the timed region: the

@@ -54,10 +54,9 @@ final class MultiSearcher(spark: SparkSession, roots: Seq[String]) {
       allow: Option[Long => Boolean] = None): DataFrame = {
     val terms = Tokenizer.tokenize(query).distinct.sorted
     val g = globalStatsFor(terms)
-    perShard(searchers.map(se => () => se.search(query, k, exact, allow, Some(g))))
-      .reduce(_ union _)
-      .orderBy(desc("score"), asc("doc_id"))
-      .limit(k)
+    Searcher.topK(
+      perShard(searchers.map(se => () => se.search(query, k, exact, allow, Some(g))))
+        .reduce(_ union _), k)
   }
 
   /** Batched search across all generations — the TAAT batch path with

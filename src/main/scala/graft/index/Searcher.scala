@@ -29,11 +29,32 @@ import graft.query.Bm25
   *      record filter) and its doclens row
   *   4. per-bucket WAND (doc-at-a-time, term-UB pivoting, block skipping)
   *      in that task, emitting the bucket's top-k
-  *   5. global ordered merge: orderBy(score desc, docId asc).limit(k)
+  *   5. global ordered merge ([[Searcher.topK]]): orderBy(score desc,
+  *      docId asc).limit(k)
   *      (Catalyst `TakeOrderedAndProject` = partial top-k in the bucket
   *      tasks + final merge on the driver)
   *
   * A search is one Spark job of one stage and no exchange.
+  *
+  * Kernel map — three per-bucket BM25 scorers, each mode a gate over one:
+  *
+  *   mode                                scorer      gate
+  *   search, searchExact/After/Not, the  wandBucket  none (negated postings
+  *     prefix/fuzzy/wildcard/regexp                  → a bucket-local
+  *     expansions, searchHot (same plan,             exclusion, composed
+  *     resident rows), scoreAllMatched               with `allow`)
+  *   searchMany, searchFuzzyMany         taatBucket  none
+  *   searchConjunctiveMany               foldBucket  intersection, probed
+  *                                                   from the sparsest term
+  *   searchMinMatchMany                  foldBucket  ≥ m present terms
+  *   searchBool (must / phrase)          foldBucket  must ∩ phrase − negated
+  *   searchSynonym, searchBoosted,       foldBucket  union (synonym member
+  *     searchDisMax                                  tfs summed per group)
+  *
+  * Every scorer left-folds `idf · tfNorm` (times the boost in
+  * searchBoosted) in sorted-term or the caller's group order, and takes
+  * doc lengths from [[Searcher.docLen]]/[[Searcher.docIndex]], which fail
+  * a doc missing from its bucket's norms row.
   *
   * `exact = true` disables pruning (θ stays -∞) but keeps the identical
   * accumulation order, so exact and WAND results are bit-identical —
@@ -124,10 +145,9 @@ final class Searcher(spark: SparkSession, root: String, cacheHot: Boolean = fals
     * slices) and no shuffle. Each task point-reads, from its own
     * bucket directory of `table`, the rows of the terms the dictionary
     * lists there ([[Searcher.readBucket]]), then its doclens row, and
-    * runs `kernel`. Postings without a norms row are index corruption
-    * (e.g. a bucketSize mismatch from a bad resume): fail loudly instead
-    * of dropping the bucket's hits. Closures must not capture the
-    * Searcher: per-query values ride them as locals.
+    * runs `kernel` ([[Searcher.bucketNorms]] fails a bucket without a
+    * norms row). Closures must not capture the Searcher: per-query values
+    * ride them as locals.
     */
   private def perBucket[R: ClassTag, U: Encoder](table: Searcher.BucketTable[R],
       termsByBucket: Map[Int, Seq[String]])(
@@ -143,10 +163,8 @@ final class Searcher(spark: SparkSession, root: String, cacheHot: Boolean = fals
     spark.createDataset(spark.sparkContext.parallelize(tasks, slices).flatMap {
       case (bucket, terms, reader) =>
         val rows = Searcher.readBucket(tableLocal, reader, bucket, terms, rootLocal)
-        val dl = norms.read(Seq(bucket))(Searcher.docLenRow).headOption.getOrElse(
-          throw new IllegalStateException(s"index invariant violated: bucket $bucket " +
-            s"has postings but no doclens row ($rootLocal)"))
-        kernel(bucket, rows, dl)
+        kernel(bucket, rows, Searcher.bucketNorms(bucket,
+          norms.read(Seq(bucket))(Searcher.docLenRow).headOption, rootLocal))
     })
   }
 
@@ -166,14 +184,14 @@ final class Searcher(spark: SparkSession, root: String, cacheHot: Boolean = fals
   // docId:8 + tf:4 per posting), so driver residency never exceeds the
   // budget by the decode factor. searchHot is synchronized: concurrent
   // serving queries share one access-ordered LRU + one byte account.
-  private lazy val hotDoclens: Map[Int, DocLenRow] = {
-    require(cacheHot, "searchHot requires a Searcher built with cacheHot = true")
+  private lazy val hotDoclens: Map[Int, DocLenRow] =
     doclensReader.readAll(Searcher.docLenRow).map(d => d.bucket -> d).toMap
-  }
   private var hotPostingsBytes: Long = 0L
   private val hotPostings =
     new java.util.LinkedHashMap[String, Array[PostingRow]](64, 0.75f, true)
-  private val hotDecoded = new java.util.HashMap[(String, Int), graft.codec.Postings]()
+  // bucket → term → decoded postings, filled by the kernel's first use
+  private val hotDecoded =
+    new java.util.HashMap[Int, java.util.HashMap[String, graft.codec.Postings]]()
 
   /** Budget charge for one term's resident rows: encoded block bytes +
     * per-block/row overhead + the decoded arrays hotDecoded will hold
@@ -205,7 +223,7 @@ final class Searcher(spark: SparkSession, root: String, cacheHot: Boolean = fals
         val e = it.next()
         if (!terms.contains(e.getKey)) {
           hotPostingsBytes -= hotRowCost(e.getValue)
-          e.getValue.foreach(r => hotDecoded.remove((r.term, r.bucket)))
+          e.getValue.foreach(r => Option(hotDecoded.get(r.bucket)).foreach(_.remove(r.term)))
           it.remove()
         }
       }
@@ -213,16 +231,28 @@ final class Searcher(spark: SparkSession, root: String, cacheHot: Boolean = fals
     terms.iterator.map(t => t -> hotPostings.get(t)).toMap
   }
 
-  /** Serving-mode search: the identical WAND scoring executed entirely on
-    * the driver over resident postings — zero Spark jobs per query once
-    * the terms are warm (a cold term is point-read on the driver). Bit-identical
-    * to [[search]] (same wandBucket, same per-bucket k, same
-    * (score desc, docId asc) merge); EngineSpec pins it, and the
-    * `eng_bm25_hot` driver entry runs it against the same SQL oracle as
-    * the distributed path. Requires `cacheHot = true`; per-query latency
-    * is the scoring cost itself (ms), which is what a serving deployment
-    * of a BOUNDED index actually pays — the distributed path remains the
-    * scale default.
+  /** [[perBucket]]'s driver-side twin over the resident rows: the same
+    * kernel contract (the rows the dictionary lists in the bucket, then
+    * its norms row), run on the driver with no Spark job.
+    */
+  private def hotPerBucket[U](termsByBucket: Map[Int, Seq[String]])(
+      kernel: (Int, Array[PostingRow], DocLenRow) => Iterator[U]): Iterator[U] = {
+    val rows = hotRowsFor(termsByBucket.valuesIterator.flatten.toSeq.distinct)
+      .valuesIterator.flatten.toArray.groupBy(_.bucket)
+    termsByBucket.keysIterator.flatMap(b =>
+      kernel(b, rows.getOrElse(b, Array.empty), Searcher.bucketNorms(b, hotDoclens.get(b), root)))
+  }
+
+  /** Serving-mode search: [[search]]'s own plan and bucket kernel run on
+    * the driver over resident postings — zero Spark jobs per query (a
+    * cold term is point-read on the driver), and bit-identical to
+    * [[search]] (same kernel, same per-bucket k, same (score desc, docId
+    * asc) merge); EngineSpec pins it, and the `eng_bm25_hot` driver
+    * entry runs it against the same SQL oracle as the distributed path.
+    * Decoded postings stay resident across queries. Requires
+    * `cacheHot = true`; per-query latency is the scoring cost itself
+    * (ms), which is what a serving deployment of a BOUNDED index
+    * actually pays — the distributed path remains the scale default.
     */
   def searchHot(
       query: String,
@@ -230,29 +260,14 @@ final class Searcher(spark: SparkSession, root: String, cacheHot: Boolean = fals
       exact: Boolean = false,
       allow: Option[Long => Boolean] = None,
       after: Option[(Double, Long)] = None): Array[Hit] = synchronized {
-    val qTerms = Tokenizer.tokenize(query).distinct.sorted
-    val local = qTerms.flatMap(t => hotDict.get(t).map(t -> _)).toMap
-    val live = qTerms.filter(t => local.get(t).exists(_.df > 0L))
-    if (live.isEmpty) return Array.empty
-    val idfByTerm = live.map(t => t -> Bm25.idf(local(t).df, stats.nDocs)).toMap
-    val rowsByTerm = hotRowsFor(live)
-    val rowsByBucket = rowsByTerm.valuesIterator.flatten.toArray.groupBy(_.bucket)
-    val hits = rowsByBucket.iterator.flatMap { case (bucket, rows) =>
-      val dl = hotDoclens.getOrElse(bucket,
-        throw new IllegalStateException(
-          s"index invariant violated: bucket $bucket has postings but no doclens row ($root)"))
-      // per-bucket pre-decoded cache view (wandBucket keys by term within
-      // one bucket); decoded arrays are retained across queries
-      val cache = new java.util.HashMap[String, graft.codec.Postings]()
-      rows.foreach { r =>
-        cache.put(r.term, hotDecoded.computeIfAbsent((r.term, bucket),
-          _ => graft.codec.PostingCodec.decodeBlocks(r.blocks.map(_.bytes).toSeq)))
-      }
-      Searcher.wandBucket(rows, dl, idfByTerm, stats.avgdl, 1.0, k, exact, allow, cache,
-        after = after)
-    }.toArray
-    // the TakeOrderedAndProject merge, driver-side: same total order
-    hits.sortBy(h => (-h.score, h.docId)).take(k)
+    require(cacheHot, "searchHot requires a Searcher built with cacheHot = true")
+    planSearch(query, k, exact, None, None, "", after) match {
+      case None => Array.empty
+      case Some((termsByBucket, kernel)) =>
+        hotPerBucket(termsByBucket) { (b, rows, dl) =>
+          kernel(rows, dl, allow, hotDecoded.computeIfAbsent(b, _ => new java.util.HashMap()))
+        }.toArray.sortBy(h => (-h.score, h.docId)).take(k)
+    }
   }
 
   /** `memory_usage`/`serialized_length` analog: per-component on-disk
@@ -662,26 +677,13 @@ final class Searcher(spark: SparkSession, root: String, cacheHot: Boolean = fals
     val partials =
       perBucket(segments, Searcher.bucketTerms(local, live.flatMap(_._2))) {
         (bucket, rows, _) =>
-          val decoded = new java.util.HashMap[String, graft.codec.Postings]()
-          rows.foreach(r => decoded.put(r.term,
-            PostingCodec.decodeBlocks(r.blocks.map(_.bytes).toSeq)))
+          val post = Searcher.decoder(rows)
           live.iterator
             .filter { case (id, _) => queryBuckets(id).contains(bucket) }
             .map { case (id, ts) =>
-              val seen = new java.util.HashSet[Long]()
-              var tfSum = 0L
-              ts.foreach { t =>
-                val p = decoded.get(t)
-                if (p != null) {
-                  var i = 0
-                  while (i < p.size) {
-                    seen.add(p.docIds(i))
-                    tfSum += p.tfs(i)
-                    i += 1
-                  }
-                }
-              }
-              (id, seen.size.toLong, tfSum)
+              val ps = ts.flatMap(post)
+              (id, Searcher.atLeast(ps.toSeq.map(_.docIds), 1).length.toLong,
+                ps.iterator.map(_.tfs.iterator.map(_.toLong).sum).sum)
             }
       }
         .toDF("query_id", "n_docs", "total_tf")
@@ -715,28 +717,19 @@ final class Searcher(spark: SparkSession, root: String, cacheHot: Boolean = fals
     val local = dictRows(ts)
     val live = ts.filter(t => local.get(t).exists(_.df > 0L))
     if (live.isEmpty) return empty
-    val byLen = perBucket(segments, Searcher.bucketTerms(local, live)) { (_, posts, dl) =>
-      val seen = new java.util.HashSet[Long]()
-      posts.foreach { r =>
-        val p = PostingCodec.decodeBlocks(r.blocks.map(_.bytes).toSeq)
-        var i = 0
-        while (i < p.size) { seen.add(p.docIds(i)); i += 1 }
-      }
+    // the length rides the merge's `score` column
+    val byLen = perBucket(segments, Searcher.bucketTerms(local, live)) { (_, rows, dl) =>
       val topk = new Searcher.TopK(k)
-      val it = seen.iterator()
-      while (it.hasNext) {
-        val d = it.next()
-        val len = dl.lens(java.util.Arrays.binarySearch(dl.docIds, d))
-        topk.offer(d, len.toDouble)
-      }
+      Searcher.atLeast(rows.toSeq.map(r =>
+        PostingCodec.decodeBlocks(r.blocks.map(_.bytes).toSeq).docIds), 1)
+        .foreach(d => topk.offer(d, Searcher.docLen(dl, d).toDouble))
       topk.result
-    }.toDF("doc_id", "len")
+    }.toDF("doc_id", "score")
     val w = org.apache.spark.sql.expressions.Window
-      .orderBy(desc("len"), asc("doc_id"))
-    byLen
-      .orderBy(desc("len"), asc("doc_id")).limit(k)
+      .orderBy(desc("score"), asc("doc_id"))
+    Searcher.topK(byLen, k)
       .select(row_number().over(w).as("rank"), col("doc_id"),
-        col("len").cast("long").as("dl"))
+        col("score").cast("long").as("dl"))
       .orderBy(col("rank"))
   }
 
@@ -978,13 +971,13 @@ final class Searcher(spark: SparkSession, root: String, cacheHot: Boolean = fals
     * with any dictionary-absent term is dead at planning (zero data
     * jobs — AND of an absent term is empty); candidate buckets per query
     * are the INTERSECTION of its terms' bucket lists; each such bucket's
-    * task point-reads the live terms' postings listed there; each bucket
-    * task decodes each term once (shared cache), intersects docIds
-    * driving from the bucket-sparsest term, and scores survivors with
-    * the identical sorted-term left-fold `idf · Bm25.tfNorm` arithmetic
-    * as [[searchMany]] — so a conjunctive hit's score is bit-identical
-    * to the same doc's disjunctive score. Per-bucket top-k, then the
-    * same bounded [[Searcher.finishMany]] global merge.
+    * task point-reads the live terms' postings listed there, decodes
+    * each term once, intersects docIds probing from the bucket-sparsest
+    * term, and verifies survivors with [[Searcher.foldBucket]] — the
+    * identical sorted-term left-fold `idf · Bm25.tfNorm` arithmetic as
+    * [[searchMany]], so a conjunctive hit's score is bit-identical to
+    * the same doc's disjunctive score. Per-bucket top-k, then the same
+    * bounded [[Searcher.finishMany]] global merge.
     *
     * Returns (query_id, doc_id, score, rank) ordered (query_id, rank).
     */
@@ -1030,10 +1023,17 @@ final class Searcher(spark: SparkSession, root: String, cacheHot: Boolean = fals
       Searcher.bucketTerms(localRows, liveTerms, queryBuckets.values.flatten.toSet)
     val qs = live.toArray
     val avgdl = g.avgdl
-    perBucket(segments, termsByBucket) { (bucket, posts, dl) =>
-      val active = qs.filter { case (id, _) => queryBuckets(id).contains(bucket) }
-      val cache = new java.util.HashMap[String, graft.codec.Postings]()
-      Searcher.conjunctiveBucket(posts, dl, idfByTerm, avgdl, k, active, cache)
+    // gate: the docs holding every term, probed from the bucket-sparsest
+    perBucket(segments, termsByBucket) { (bucket, rows, dl) =>
+      val post = Searcher.decoder(rows)
+      qs.iterator.filter { case (id, _) => queryBuckets(id).contains(bucket) }
+        .flatMap { case (id, ts) =>
+          val ps = ts.flatMap(post)
+          if (ps.length < ts.length) Iterator.empty
+          else Searcher.foldBucket(Searcher.intersectSorted(ps.toSeq.map(_.docIds)),
+            Array.emptyLongArray, ps.map(Array(_)), ts.map(idfByTerm), dl, avgdl, k)
+            .map(h => (id, h.docId, h.score))
+        }
     }.toDF("query_id", "doc_id", "score")
   }
 
@@ -1101,10 +1101,19 @@ final class Searcher(spark: SparkSession, root: String, cacheHot: Boolean = fals
       Searcher.bucketTerms(localRows, liveTerms, queryBuckets.values.flatten.toSet)
     val qs = live.toArray
     val avgdl = g.avgdl
-    perBucket(segments, termsByBucket) { (bucket, posts, dl) =>
-      val active = qs.filter { case (id, _, _) => queryBuckets(id).contains(bucket) }
-      val cache = new java.util.HashMap[String, graft.codec.Postings]()
-      Searcher.minMatchBucket(posts, dl, idfByTerm, avgdl, k, active, cache)
+    // gate: the docs holding at least m of the query's present terms,
+    // folded over those terms in sorted order
+    perBucket(segments, termsByBucket) { (bucket, rows, dl) =>
+      val post = Searcher.decoder(rows)
+      qs.iterator.filter { case (id, _, _) => queryBuckets(id).contains(bucket) }
+        .flatMap { case (id, ts, m) =>
+          val present = ts.flatMap(t => post(t).map(t -> _))
+          if (present.length < m) Iterator.empty
+          else Searcher.foldBucket(Searcher.atLeast(present.toSeq.map(_._2.docIds), m),
+            Array.emptyLongArray, present.map(p => Array(p._2)),
+            present.map(p => idfByTerm(p._1)), dl, avgdl, k)
+            .map(h => (id, h.docId, h.score))
+        }
     }.toDF("query_id", "doc_id", "score")
   }
 
@@ -1308,7 +1317,30 @@ final class Searcher(spark: SparkSession, root: String, cacheHot: Boolean = fals
       globalStats: Option[GlobalStats] = None,
       counters: Option[SearchCounters] = None,
       negQuery: String = "",
-      after: Option[(Double, Long)] = None): DataFrame = {
+      after: Option[(Double, Long)] = None): DataFrame =
+    planSearch(query, k, exact, globalStats, counters, negQuery, after) match {
+      case None => spark.emptyDataset[Hit].toDF("doc_id", "score")
+      case Some((termsByBucket, kernel)) =>
+        val allowB = broadcastAllow(allow)
+        Searcher.topK(perBucket(segments, termsByBucket) { (_, rows, dl) =>
+          kernel(rows, dl, allowB.map(_.value), null)
+        }.toDF("doc_id", "score"), k)
+    }
+
+  /** The plan of [[search]] and [[searchHot]]: one dictionary point read
+    * resolves the terms, their global statistics and idfs, the UB scale,
+    * and each bucket to read with the terms the dictionary lists there;
+    * the returned kernel scores one bucket. None when no query term is
+    * live.
+    */
+  private def planSearch(
+      query: String,
+      k: Int,
+      exact: Boolean,
+      globalStats: Option[GlobalStats],
+      counters: Option[SearchCounters],
+      negQuery: String,
+      after: Option[(Double, Long)]): Option[(Map[Int, Seq[String]], Searcher.SearchKernel)] = {
     val negTerms = Tokenizer.tokenize(negQuery).distinct.sorted
     // a term both offered and forbidden can never contribute: every doc
     // containing it is excluded, so the negation wins per-term at
@@ -1316,68 +1348,27 @@ final class Searcher(spark: SparkSession, root: String, cacheHot: Boolean = fals
     // from the scoring list changes no surviving doc's score
     val qTerms = Tokenizer.tokenize(query).distinct.sorted
       .filterNot(negTerms.contains)
-    // ONE pruned dictionary read plans the whole query: dfs (scoring),
-    // term existence, and the bucket partitions to touch
     val local = dictRows((qTerms ++ negTerms).distinct.sorted)
     // idf from global stats when searching as one shard of a multi-index
     // (the `Indexes` scatter-gather analog): every shard must score with
     // the same N/df/avgdl or the merged ranking is meaningless
     val g = globalStats.getOrElse(
       GlobalStats(stats.nDocs, stats.avgdl, local.map { case (t, d) => t -> d.df }))
-    val dictHits = qTerms
-      .filter(t => g.dfByTerm.getOrElse(t, 0L) > 0L)
-      .map(t => (t, Bm25.idf(g.dfByTerm(t), g.nDocs)))
-    if (dictHits.isEmpty)
-      return spark.emptyDataset[Hit].toDF("doc_id", "score")
-
-    val termList = dictHits.map(_._1).toSeq
-    val idfByTerm = dictHits.toMap
+    val termList = qTerms.filter(t => g.dfByTerm.getOrElse(t, 0L) > 0L).toSeq
+    if (termList.isEmpty) return None
+    val idfByTerm = termList.map(t => t -> Bm25.idf(g.dfByTerm(t), g.nDocs)).toMap
     // stored block-max tf-norms were computed with THIS index's avgdl; a
     // larger global avgdl raises tfNorm by at most avgdl_new/avgdl_old —
     // scale the UBs so WAND pruning stays sound (never under-estimates)
     val ubScale = math.max(1.0, g.avgdl / stats.avgdl)
-
     // buckets from the dictionary rows (a term known globally but absent
     // from THIS shard has no local row → no buckets → contributes here
-    // exactly nothing, as before)
+    // exactly nothing); negated terms are read only in those buckets
     val touched = Searcher.bucketTerms(local, termList).keySet
-
-    // negated terms: postings read alongside the positive ones (same
-    // bucket tasks — only buckets where a positive term can produce a
-    // hit), decoded into a bucket-LOCAL exclusion array inside the
-    // bucket task. Nothing about the negation
-    // ever reaches the driver or a broadcast of doc ids: the excluded
-    // set is built where the postings already live, bounded by the
-    // bucket-width geometry like every other per-bucket structure.
     val negLive = negTerms.filter(t => local.get(t).exists(_.df > 0L))
-    val negSet = negLive.toSet
-    val scanTerms = (termList ++ negLive).distinct
-
-    val allowB = broadcastAllow(allow)
-    val avgdl = g.avgdl
-    val countersLocal = counters.orNull
-
-    perBucket(segments, Searcher.bucketTerms(local, scanTerms, touched)) { (_, posts, dl) =>
-      val (negRows, posRows) =
-        if (negSet.isEmpty) (Array.empty[PostingRow], posts)
-        else posts.partition(r => negSet.contains(r.term))
-      val effAllow: Option[Long => Boolean] =
-        if (negRows.isEmpty) allowB.map(_.value)
-        else {
-          val excluded = negRows.flatMap(r =>
-            PostingCodec.decodeBlocks(r.blocks.map(_.bytes).toSeq).docIds)
-          java.util.Arrays.sort(excluded)
-          val user = allowB.map(_.value)
-          Some((id: Long) =>
-            java.util.Arrays.binarySearch(excluded, id) < 0 &&
-              user.forall(_(id)))
-        }
-      Searcher.wandBucket(posRows, dl, idfByTerm, avgdl, ubScale, k, exact, effAllow,
-        counters = countersLocal, after = after)
-    }
-      .toDF("doc_id", "score")
-      .orderBy(desc("score"), asc("doc_id"))
-      .limit(k)
+    Some((Searcher.bucketTerms(local, (termList ++ negLive).distinct, touched),
+      Searcher.SearchKernel(idfByTerm, negLive.toSet, g.avgdl, ubScale, k, exact,
+        counters.orNull, after)))
   }
 
   /** Exact search convenience (full scoring, no pruning). */
@@ -1389,8 +1380,9 @@ final class Searcher(spark: SparkSession, root: String, cacheHot: Boolean = fals
     * of a small group can sit arbitrarily deep in the global ranking and
     * a k-bounded retrieval would lose it.
     *
-    * Scale shape: identical planning to [[search]] (one dictionary point
-    * read, one postings-reading task per touched bucket); per-bucket state is
+    * Scale shape: [[search]]'s own plan and bucket kernel, exact and
+    * with no k bound (one dictionary point read, one postings-reading
+    * task per touched bucket); per-bucket state is
     * the matched-doc set, bounded by the bucket-width geometry (≤ 2²⁰
     * docs) like the TAAT accumulator; the output frame is unordered and
     * meant to be AGGREGATED (argmax per group, partial map-side), never
@@ -1398,24 +1390,15 @@ final class Searcher(spark: SparkSession, root: String, cacheHot: Boolean = fals
     * [[search]] in exact mode, so a collapsed hit's double equals the
     * disjunctive score for that doc.
     */
-  def scoreAllMatched(query: String): DataFrame = {
-    val qTerms = Tokenizer.tokenize(query).distinct.sorted
-    val local = dictRows(qTerms)
-    val dictHits = qTerms
-      .filter(t => local.get(t).exists(_.df > 0L))
-      .map(t => (t, Bm25.idf(local(t).df, stats.nDocs)))
-    if (dictHits.isEmpty)
-      return spark.emptyDataset[Hit].toDF("doc_id", "score")
-    val termList = dictHits.map(_._1).toSeq
-    val idfByTerm = dictHits.toMap
-    val avgdl = stats.avgdl
+  def scoreAllMatched(query: String): DataFrame =
     // k = MaxValue keeps every scored doc: TopK's heap grows lazily, so
     // memory is O(matched-in-bucket) ≤ bucket width
-    perBucket(segments, Searcher.bucketTerms(local, termList)) { (_, posts, dl) =>
-      Searcher.wandBucket(posts, dl, idfByTerm, avgdl, ubScale = 1.0,
-        k = Int.MaxValue, exact = true, allow = None)
-    }.toDF("doc_id", "score")
-  }
+    planSearch(query, Int.MaxValue, exact = true, None, None, "", None) match {
+      case None => spark.emptyDataset[Hit].toDF("doc_id", "score")
+      case Some((termsByBucket, kernel)) =>
+        perBucket(segments, termsByBucket)((_, rows, dl) => kernel(rows, dl, None, null))
+          .toDF("doc_id", "score")
+    }
 
   /** SEARCH-AFTER deep pagination (the Lucene `searchAfter` analog; the
     * reference's paging surface is `export_keys`' offset/limit,
@@ -1445,9 +1428,9 @@ final class Searcher(spark: SparkSession, root: String, cacheHot: Boolean = fals
     * as the term path.
     *
     * Scale shape: identical to [[search]] — one pruned dictionary read
-    * plans everything, one postings-reading task per touched bucket, per-bucket
-    * TAAT merge of member postings (bounded by bucket width), bounded
-    * top-k per bucket, one global k-merge.
+    * plans everything, one postings-reading task per touched bucket, the
+    * union of member postings verified by [[Searcher.foldBucket]],
+    * bounded top-k per bucket, one global k-merge.
     */
   def searchSynonym(groups: Seq[Seq[String]], k: Int): DataFrame = {
     val norm: Seq[Seq[String]] =
@@ -1523,9 +1506,10 @@ final class Searcher(spark: SparkSession, root: String, cacheHot: Boolean = fals
     * so dropping it is exact.
     *
     * Scale shape: identical to [[search]] — one pruned dictionary read
-    * plans everything, one postings-reading task per touched bucket, per-bucket
-    * TAAT merge of member postings (bounded by bucket width), bounded
-    * top-k per bucket, one global k-merge.
+    * plans everything, one postings-reading task per touched bucket
+    * whose gate is the union of the groups' postings, verified by
+    * [[Searcher.foldBucket]], bounded top-k per bucket, one global
+    * k-merge.
     */
   private def searchGroupsWeighted(
       norm: Seq[(Seq[String], Double)], k: Int,
@@ -1540,56 +1524,14 @@ final class Searcher(spark: SparkSession, root: String, cacheHot: Boolean = fals
     val ws: Array[Double] = liveW.map(_._2).toArray
     val idfs: Array[Double] =
       live.map(g => Bm25.idf(g.map(t => local(t).df).max, stats.nDocs)).toArray
-    val groupOf: Map[String, Int] =
-      live.zipWithIndex.flatMap { case (g, i) => g.map(_ -> i) }.toMap
     val avgdl = stats.avgdl
-    val isDisMax = disMaxTie.isDefined
-    val tie = disMaxTie.getOrElse(1.0)
-
-    perBucket(segments, Searcher.bucketTerms(local, live.flatten)) { (_, posts, dl) =>
-      val nG = idfs.length
-      // per-group doc → summed tf (int adds — merge order free)
-      val tfByGroup = Array.fill(nG)(new java.util.HashMap[Long, Int]())
-      posts.foreach { r =>
-        val gi = groupOf(r.term)
-        val p = PostingCodec.decodeBlocks(r.blocks.map(_.bytes).toSeq)
-        var i = 0
-        while (i < p.size) {
-          tfByGroup(gi).merge(p.docIds(i), p.tfs(i), (a, b) => a + b)
-          i += 1
-        }
-      }
-      val union = new java.util.HashSet[Long]()
-      tfByGroup.foreach(m => union.addAll(m.keySet()))
-      val topk = new Searcher.TopK(k)
-      val it = union.iterator()
-      while (it.hasNext) {
-        val d = it.next()
-        val len = dl.lens(java.util.Arrays.binarySearch(dl.docIds, d))
-        var s = 0.0
-        var mx = 0.0
-        var gi = 0
-        // fixed caller group order — deterministic accumulation;
-        // association w · (idf · tfNorm) exactly as the oracle writes it
-        while (gi < nG) {
-          val tf = tfByGroup(gi).getOrDefault(d, 0)
-          if (tf > 0) {
-            val part = ws(gi) * (idfs(gi) * Bm25.tfNorm(tf, len, avgdl))
-            s += part
-            if (part > mx) mx = part
-          }
-          gi += 1
-        }
-        // dis-max: best + tie·(sum − best), three IEEE ops in this
-        // exact association (BM25 parts are > 0, so the 0.0 floor on
-        // `mx` never wins for a matched doc)
-        topk.offer(d, if (isDisMax) mx + tie * (s - mx) else s)
-      }
-      topk.result
-    }
-      .toDF("doc_id", "score")
-      .orderBy(desc("score"), asc("doc_id"))
-      .limit(k)
+    // gate: the union of the groups' postings
+    Searcher.topK(perBucket(segments, Searcher.bucketTerms(local, live.flatten)) { (_, rows, dl) =>
+      val post = Searcher.decoder(rows)
+      val groups = live.map(_.flatMap(post).toArray).toArray
+      Searcher.foldBucket(Searcher.atLeast(groups.toSeq.flatten.map(_.docIds), 1),
+        Array.emptyLongArray, groups, idfs, dl, avgdl, k, ws, disMaxTie)
+    }.toDF("doc_id", "score"), k)
   }
 
   /** Score EXPLAIN (the Lucene `explain` analog; the reference's
@@ -1846,8 +1788,9 @@ final class Searcher(spark: SparkSession, root: String, cacheHot: Boolean = fals
     * it, the corpus text is never read); per bucket, the gate doc sets
     * are intersected sorted arrays, negated postings decode into a
     * bucket-local exclusion, and survivors get the exact sorted-term
-    * fold + per-bucket top-k. Gating is bucket-decidable because a doc's
-    * postings live entirely in one bucket. With no must/phrase gate the
+    * fold + per-bucket top-k ([[Searcher.boolBucket]]). Gating is
+    * bucket-decidable because a doc's postings live entirely in one
+    * bucket. With no must/phrase gate the
     * query IS AND-NOT disjunctive search and delegates to [[search]].
     */
   def searchBool(k: Int, must: String = "", should: String = "",
@@ -1879,58 +1822,26 @@ final class Searcher(spark: SparkSession, root: String, cacheHot: Boolean = fals
     val negLive = negTerms.filter(t => local.get(t).exists(_.df > 0L))
 
     val avgdl = stats.avgdl
-
     val hits =
       if (phraseToks.isEmpty) {
         val scanTerms = (liveScoring ++ negLive).distinct
-        perBucket(segments, Searcher.bucketTerms(local, scanTerms, buckets)) { (_, posts, dl) =>
-          val byRow = posts.iterator.map(r => r.term -> r).toMap
-          val dec = new java.util.HashMap[String, graft.codec.Postings]()
-          def post(t: String): graft.codec.Postings = byRow.get(t) match {
-            case Some(r) => dec.computeIfAbsent(t,
-              _ => PostingCodec.decodeBlocks(r.blocks.map(_.bytes).toSeq))
-            case None => null
-          }
-          val mustPosts = mustTerms.map(post)
-          if (mustPosts.exists(_ == null)) Iterator.empty
-          else {
-            val candidates =
-              Searcher.intersectSorted(mustPosts.map(_.docIds).toSeq)
-            val excluded = Searcher.concatSorted(
-              negLive.iterator.map(post).filter(_ != null).map(_.docIds).toSeq)
-            Searcher.scoreBoolBucket(candidates, excluded, liveScoring,
-              t => { val p = post(t); if (p == null) null else (p.docIds, p.tfs) },
-              idfByTerm, dl, avgdl, k)
-          }
+        perBucket(segments, Searcher.bucketTerms(local, scanTerms, buckets)) { (_, rows, dl) =>
+          Searcher.boolBucket(Searcher.decoder(rows), mustTerms, None, negLive, liveScoring,
+            idfByTerm, dl, avgdl, k)
         }
       } else {
         val scanTerms = (liveScoring ++ mustTerms ++ negLive ++ phraseToks).distinct
         perBucket(positions, Searcher.bucketTerms(local, scanTerms, buckets)) { (_, rows, dl) =>
           val byTerm = Searcher.decodePositions(rows)
-          if (!phraseToks.distinct.forall(byTerm.contains) ||
-              !mustTerms.forall(byTerm.contains)) Iterator.empty
-          else {
-            val phraseDocs =
-              Searcher.phraseHitsInBucket(phraseToks, byTerm).map(_._1).toArray
-            java.util.Arrays.sort(phraseDocs)
-            val candidates = Searcher.intersectSorted(
-              phraseDocs +: mustTerms.map(t => byTerm(t).docIds).toSeq)
-            val excluded = Searcher.concatSorted(
-              negLive.iterator.flatMap(byTerm.get).map(_.docIds).toSeq)
-            Searcher.scoreBoolBucket(candidates, excluded, liveScoring,
-              t => byTerm.get(t) match {
-                case Some(pp) => (pp.docIds, pp.positions.map(_.length))
-                case None => null
-              },
-              idfByTerm, dl, avgdl, k)
-          }
+          val phraseDocs = Searcher.phraseHitsInBucket(phraseToks, byTerm).map(_._1).toArray
+          java.util.Arrays.sort(phraseDocs)
+          // a positional row's tf is its position count
+          Searcher.boolBucket(t => byTerm.get(t).map(pp =>
+            graft.codec.Postings(pp.docIds, pp.positions.map(_.length))),
+            mustTerms, Some(phraseDocs), negLive, liveScoring, idfByTerm, dl, avgdl, k)
         }
       }
-
-    hits
-      .toDF("doc_id", "score")
-      .orderBy(desc("score"), asc("doc_id"))
-      .limit(k)
+    Searcher.topK(hits.toDF("doc_id", "score"), k)
   }
 
   /** Batch search: all queries answered in ONE distributed pass — the
@@ -2064,6 +1975,14 @@ object Searcher {
     got.iterator.map(_._2).toArray
   }
 
+  /** A touched bucket's norms row. Postings without one are index
+    * corruption (e.g. a bucketSize mismatch from a bad resume): fail
+    * loudly instead of dropping the bucket's hits.
+    */
+  private[index] def bucketNorms(bucket: Int, row: Option[DocLenRow], root: String): DocLenRow =
+    row.getOrElse(throw new IllegalStateException(s"index invariant violated: bucket $bucket " +
+      s"has postings but no doclens row ($root)"))
+
   /** Bounded Levenshtein distance: the exact edit distance if ≤ maxDist,
     * else -1 — the textbook two-row DP with the standard band cutoff,
     * semantically identical to Spark's and DuckDB's thresholded
@@ -2094,28 +2013,27 @@ object Searcher {
   private[graft] def levWithin(a: String, b: String, maxDist: Int): Boolean =
     levDistWithin(a, b, maxDist) >= 0
 
-  /** Intersection of ascending docId arrays (k-way via successive
-    * pairwise merges, sparsest first). Empty input → empty.
+  /** Intersection of ascending docId arrays: each doc of the sparsest
+    * array is probed in the others by binary search, from where the
+    * previous probe stopped. Empty input → empty.
     */
   private[index] def intersectSorted(arrays: Seq[Array[Long]]): Array[Long] = {
     if (arrays.isEmpty) return Array.emptyLongArray
-    val sorted = arrays.sortBy(_.length)
-    var acc = sorted.head
-    var n = 1
-    while (n < sorted.length && acc.nonEmpty) {
-      val b = sorted(n)
-      val out = new Array[Long](math.min(acc.length, b.length))
-      var i = 0; var j = 0; var o = 0
-      while (i < acc.length && j < b.length) {
-        val x = acc(i); val y = b(j)
-        if (x == y) { out(o) = x; o += 1; i += 1; j += 1 }
-        else if (x < y) i += 1
-        else j += 1
+    val sorted = arrays.sortBy(_.length).toArray
+    val from = new Array[Int](sorted.length)
+    val out = Array.newBuilder[Long]
+    sorted.head.foreach { d =>
+      var ok = true
+      var j = 1
+      while (ok && j < sorted.length) {
+        val a = sorted(j)
+        val at = java.util.Arrays.binarySearch(a, from(j), a.length, d)
+        if (at >= 0) from(j) = at + 1 else { from(j) = -at - 1; ok = false }
+        j += 1
       }
-      acc = java.util.Arrays.copyOf(out, o)
-      n += 1
+      if (ok) out += d
     }
-    acc
+    out.result()
   }
 
   /** Ascending concatenation of sorted docId arrays for binary-search
@@ -2130,60 +2048,130 @@ object Searcher {
     out
   }
 
-  /** Exact sorted-term BM25 fold over an already-gated candidate list —
-    * the bool-query scorer. For each candidate not in `excluded`, the
-    * score is the left fold over `scoring` (globally sorted) of
-    * idf·tfNorm for the terms present — the identical per-doc
-    * accumulation order as [[wandBucket]] and [[taatBucket]], so a bool
-    * hit's double equals the disjunctive score of its effective term set
-    * (RetrievalModesSpec pins it). No WAND pruning: the gates (must ∧
-    * phrase) already cut candidates far below the disjunctive universe,
-    * and exactness keeps the fold trivially bit-stable.
+  /** The distinct docIds found in at least `m` of the ascending arrays,
+    * ascending: the union at m = 1, the minimum-should-match gate at
+    * m > 1.
     */
-  private[index] def scoreBoolBucket(
+  private[index] def atLeast(arrays: Seq[Array[Long]], m: Int): Array[Long] = {
+    val all = concatSorted(arrays)
+    val out = Array.newBuilder[Long]
+    var i = 0
+    while (i < all.length) {
+      var j = i + 1
+      while (j < all.length && all(j) == all(i)) j += 1
+      if (j - i >= m) out += all(i)
+      i = j
+    }
+    out.result()
+  }
+
+  /** One bucket's posting rows by term, each decoded on first use (a
+    * term without a row in the bucket → None).
+    */
+  private[index] def decoder(rows: Array[PostingRow]): String => Option[graft.codec.Postings] = {
+    val byTerm = rows.iterator.map(r => r.term -> r).toMap
+    val decoded = new java.util.HashMap[String, graft.codec.Postings]()
+    t => byTerm.get(t).map(r =>
+      decoded.computeIfAbsent(t, _ => PostingCodec.decodeBlocks(r.blocks.map(_.bytes).toSeq)))
+  }
+
+  /** The index in `doclen` of a doc that has postings in its bucket. A
+    * doc missing from its bucket's norms row is index corruption: fail
+    * loudly, naming the doc and bucket.
+    */
+  private[index] def docIndex(doclen: DocLenRow, docId: Long, from: Int = 0): Int = {
+    val i = java.util.Arrays.binarySearch(doclen.docIds, from, doclen.docIds.length, docId)
+    if (i < 0)
+      throw new IllegalStateException(s"index invariant violated: doc $docId has postings " +
+        s"but no doclens entry (bucket ${doclen.bucket})")
+    i
+  }
+
+  /** The length of a doc that has postings in `doclen`'s bucket. */
+  private[index] def docLen(doclen: DocLenRow, docId: Long): Long =
+    doclen.lens(docIndex(doclen, docId))
+
+  /** The exact scorer of every gated mode (conjunctive, minimum-should-
+    * match, bool, synonym, boosted, dis-max): the filter → verify split,
+    * where the caller's gate picks the ascending `candidates` and this
+    * fold verifies them. Each candidate not in `excluded` (sorted) scores
+    * the left fold, in the caller's group order, of
+    * `ws(g) · (idfs(g) · tfNorm(tf, dl))` (ws null: all 1.0) over the
+    * groups holding it. A group's tf is the sum of its members' tfs
+    * (integer adds, order-free; an empty group has no postings in this
+    * bucket). `1.0 · x == x` in IEEE arithmetic, so a unit-weight fold
+    * has the exact bits of [[wandBucket]]'s and [[taatBucket]]'s
+    * sorted-term sums. With a
+    * dis-max `tie` the score is best + tie · (sum − best), three IEEE ops
+    * in that association (BM25 parts are > 0, so the 0.0 floor of `best`
+    * never wins for a matched doc). No pruning: the gate already cuts the
+    * candidates, and exactness keeps the fold trivially bit-stable.
+    */
+  private[index] def foldBucket(
       candidates: Array[Long],
       excluded: Array[Long],
+      groups: Array[Array[graft.codec.Postings]],
+      idfs: Array[Double],
+      doclen: DocLenRow,
+      avgdl: Double,
+      k: Int,
+      ws: Array[Double] = null,
+      disMaxTie: Option[Double] = None): Iterator[Hit] = {
+    // per-member probe starts: candidates ascend, so each member's
+    // binary search resumes where the previous candidate's stopped
+    val from = groups.map(g => new Array[Int](g.length))
+    val tie = disMaxTie.getOrElse(1.0)
+    val topk = new TopK(k)
+    candidates.foreach { id =>
+      if (java.util.Arrays.binarySearch(excluded, id) < 0) {
+        val dl = docLen(doclen, id)
+        var s = 0.0
+        var best = 0.0
+        var g = 0
+        while (g < groups.length) {
+          var tf = 0
+          var m = 0
+          while (m < groups(g).length) {
+            val ids = groups(g)(m).docIds
+            val at = java.util.Arrays.binarySearch(ids, from(g)(m), ids.length, id)
+            if (at >= 0) { tf += groups(g)(m).tfs(at); from(g)(m) = at + 1 }
+            else from(g)(m) = -at - 1
+            m += 1
+          }
+          if (tf > 0) {
+            val w = if (ws == null) 1.0 else ws(g)
+            val part = w * (idfs(g) * Bm25.tfNorm(tf, dl, avgdl))
+            s += part
+            if (part > best) best = part
+          }
+          g += 1
+        }
+        topk.offer(id, if (disMaxTie.isDefined) best + tie * (s - best) else s)
+      }
+    }
+    topk.result
+  }
+
+  /** The bool gate of one bucket ([[Searcher.searchBool]]): docs holding
+    * every `must` term (and the phrase, when `phraseDocs` is given),
+    * minus the docs of the `neg` terms, folded over `scoring` with unit
+    * weights.
+    */
+  private[index] def boolBucket(
+      post: String => Option[graft.codec.Postings],
+      must: Array[String],
+      phraseDocs: Option[Array[Long]],
+      neg: Array[String],
       scoring: Array[String],
-      termDocs: String => (Array[Long], Array[Int]),
       idfByTerm: Map[String, Double],
       doclen: DocLenRow,
       avgdl: Double,
       k: Int): Iterator[Hit] = {
-    val nTerms = scoring.length
-    val docs = new Array[Array[Long]](nTerms)
-    val tfs = new Array[Array[Int]](nTerms)
-    val idfs = new Array[Double](nTerms)
-    var t = 0
-    while (t < nTerms) {
-      val td = termDocs(scoring(t))
-      if (td != null) { docs(t) = td._1; tfs(t) = td._2 }
-      idfs(t) = idfByTerm(scoring(t))
-      t += 1
-    }
-    val topk = new TopK(k)
-    var i = 0
-    while (i < candidates.length) {
-      val id = candidates(i)
-      if (java.util.Arrays.binarySearch(excluded, id) < 0) {
-        val di = java.util.Arrays.binarySearch(doclen.docIds, id)
-        if (di < 0)
-          throw new IllegalStateException(
-            s"index invariant violated: doc $id has postings but no doclens entry")
-        val dl = doclen.lens(di)
-        var s = 0.0
-        var j = 0
-        while (j < nTerms) {
-          if (docs(j) != null) {
-            val pi = java.util.Arrays.binarySearch(docs(j), id)
-            if (pi >= 0) s += idfs(j) * Bm25.tfNorm(tfs(j)(pi), dl, avgdl)
-          }
-          j += 1
-        }
-        topk.offer(id, s)
-      }
-      i += 1
-    }
-    topk.result
+    val mustPosts = must.flatMap(post)
+    if (mustPosts.length < must.length) return Iterator.empty
+    foldBucket(intersectSorted(phraseDocs.toSeq ++ mustPosts.map(_.docIds)),
+      concatSorted(neg.flatMap(post).map(_.docIds).toSeq),
+      scoring.map(t => post(t).toArray), scoring.map(idfByTerm), doclen, avgdl, k)
   }
 
   /** Verify a phrase inside one bucket given decoded positional postings.
@@ -2366,137 +2354,6 @@ object Searcher {
     }
   }
 
-  /** Conjunctive (AND) BM25 scoring of one bucket for a batch of queries:
-    * decode each term once (shared cache), intersect docIds driving from
-    * the bucket-sparsest term, score survivors with the identical
-    * sorted-term left-fold `idf · tfNorm` arithmetic as [[taatBucket]]/
-    * [[wandBucket]] (a conjunctive hit's score is bit-identical to the
-    * same doc's disjunctive score), keep a bounded per-query top-k.
-    */
-  private[index] def conjunctiveBucket(
-      rows: Array[PostingRow],
-      doclen: DocLenRow,
-      idfByTerm: Map[String, Double],
-      avgdl: Double,
-      k: Int,
-      queries: Array[(Int, Array[String])],
-      decodedCache: java.util.HashMap[String, graft.codec.Postings]): Iterator[(Int, Long, Double)] = {
-    val byTerm = rows.iterator.map(r => r.term -> r).toMap
-    if (byTerm.size != rows.length)
-      throw new IllegalStateException(
-        "index invariant violated: bucket holds more than one segment row " +
-          s"per term (${rows.length} rows, ${byTerm.size} terms)")
-    val dIds = doclen.docIds
-    val dLens = doclen.lens
-    def decoded(t: String): graft.codec.Postings =
-      decodedCache.computeIfAbsent(t,
-        _ => PostingCodec.decodeBlocks(byTerm(t).blocks.map(_.bytes).toSeq))
-    queries.iterator.flatMap { case (qid, ts) =>
-      // every term must have postings in this bucket (the bucket came
-      // from the intersection of term bucket lists, but a multi-shard
-      // caller may pass wider sets — skip, never throw)
-      if (!ts.forall(byTerm.contains)) Iterator.empty
-      else {
-        val posts: Array[graft.codec.Postings] = ts.map(decoded)
-        val idfs: Array[Double] = ts.map(idfByTerm)
-        val m = ts.length
-        var sparse = 0
-        var j = 1
-        while (j < m) { if (posts(j).size < posts(sparse).size) sparse = j; j += 1 }
-        val drive = posts(sparse)
-        val topk = new TopK(k)
-        var i = 0
-        while (i < drive.size) {
-          val d = drive.docIds(i)
-          // tf per term via binary search in each sorted posting list
-          val tfs = new Array[Int](m)
-          var ok = true
-          var t = 0
-          while (ok && t < m) {
-            val at = java.util.Arrays.binarySearch(posts(t).docIds, d)
-            if (at < 0) ok = false else tfs(t) = posts(t).tfs(at)
-            t += 1
-          }
-          if (ok) {
-            val dli = java.util.Arrays.binarySearch(dIds, d)
-            if (dli < 0)
-              throw new IllegalStateException(
-                s"index invariant violated: doc $d has postings but no doclens entry")
-            val dl = dLens(dli)
-            // left fold over the query's sorted terms — same order and
-            // arithmetic as the disjunctive paths
-            var score = 0.0
-            var s = 0
-            while (s < m) { score += idfs(s) * Bm25.tfNorm(tfs(s), dl, avgdl); s += 1 }
-            topk.offer(d, score)
-          }
-          i += 1
-        }
-        topk.result.map(h => (qid, h.docId, h.score))
-      }
-    }
-  }
-
-  /** Per-bucket minimum-should-match kernel: for each query, visit its
-    * PRESENT terms in ascending term order (the query arrays arrive
-    * sorted), accumulating per-doc matched-term counts (integer, order-
-    * free) and the BM25 score left fold (term-visit order = sorted term
-    * order — the same deterministic accumulation as every other path),
-    * then keep docs whose count reaches the query's threshold. Memory is
-    * O(docs matching any query term in this bucket), bounded by the
-    * bucket width like the synonym path.
-    */
-  private[index] def minMatchBucket(
-      rows: Array[PostingRow],
-      doclen: DocLenRow,
-      idfByTerm: Map[String, Double],
-      avgdl: Double,
-      k: Int,
-      queries: Array[(Int, Array[String], Int)],
-      decodedCache: java.util.HashMap[String, graft.codec.Postings]): Iterator[(Int, Long, Double)] = {
-    val byTerm = rows.iterator.map(r => r.term -> r).toMap
-    if (byTerm.size != rows.length)
-      throw new IllegalStateException(
-        "index invariant violated: bucket holds more than one segment row " +
-          s"per term (${rows.length} rows, ${byTerm.size} terms)")
-    val dIds = doclen.docIds
-    val dLens = doclen.lens
-    def decoded(t: String): graft.codec.Postings =
-      decodedCache.computeIfAbsent(t,
-        _ => PostingCodec.decodeBlocks(byTerm(t).blocks.map(_.bytes).toSeq))
-    queries.iterator.flatMap { case (qid, ts, m) =>
-      val present = ts.filter(byTerm.contains) // ts sorted → present sorted
-      if (present.length < m) Iterator.empty
-      else {
-        val counts = new java.util.HashMap[Long, Int]()
-        val scores = new java.util.HashMap[Long, Double]()
-        present.foreach { t =>
-          val p = decoded(t)
-          val idf = idfByTerm(t)
-          var i = 0
-          while (i < p.size) {
-            val d = p.docIds(i)
-            val dli = java.util.Arrays.binarySearch(dIds, d)
-            if (dli < 0)
-              throw new IllegalStateException(
-                s"index invariant violated: doc $d has postings but no doclens entry")
-            counts.merge(d, 1, (a, b) => a + b)
-            scores.merge(d, idf * Bm25.tfNorm(p.tfs(i), dLens(dli), avgdl),
-              (a, b) => a + b)
-            i += 1
-          }
-        }
-        val topk = new TopK(k)
-        val it = counts.entrySet().iterator()
-        while (it.hasNext) {
-          val e = it.next()
-          if (e.getValue >= m) topk.offer(e.getKey, scores.get(e.getKey))
-        }
-        topk.result.map(h => (qid, h.docId, h.score))
-      }
-    }
-  }
-
   /** Memory budget for one task's dense TAAT accumulator chunk. One
     * accumulator row costs 8·bucketDocs bytes; the default index geometry
     * bounds bucket width at 2²⁰ docs (IndexBuilder.MaxDefaultBucketWidth)
@@ -2532,6 +2389,46 @@ object Searcher {
       .select(col("query_id"), col("h.id").as("doc_id"), col("h.score").as("score"),
         (col("rnk0") + 1).as("rank"))
       .orderBy(col("query_id"), col("rank"))
+
+  /** The global merge of per-bucket hits, in the (score desc, doc_id
+    * asc) total order (Catalyst `TakeOrderedAndProject`: partial top-k
+    * in the bucket tasks, final merge on the driver).
+    */
+  private[index] def topK(hits: DataFrame, k: Int): DataFrame =
+    hits.orderBy(desc("score"), asc("doc_id")).limit(k)
+
+  /** The bucket kernel of [[Searcher.search]] and [[Searcher.searchHot]]:
+    * the rows of the negated terms decode into a bucket-local exclusion
+    * (built where the postings live, so no negated doc id reaches the
+    * driver or a broadcast) composed with the caller's `allow`, and the
+    * other rows run [[wandBucket]] (over `decoded`, when the caller keeps
+    * decoded postings resident). A companion value, so the closure that
+    * ships it to a bucket task captures no Searcher.
+    */
+  private[index] final case class SearchKernel(
+      idfByTerm: Map[String, Double],
+      neg: Set[String],
+      avgdl: Double,
+      ubScale: Double,
+      k: Int,
+      exact: Boolean,
+      counters: SearchCounters,
+      after: Option[(Double, Long)]) {
+    def apply(rows: Array[PostingRow], doclen: DocLenRow, allow: Option[Long => Boolean],
+        decoded: java.util.HashMap[String, graft.codec.Postings]): Iterator[Hit] = {
+      val (negRows, posRows) = rows.partition(r => neg.contains(r.term))
+      val effAllow: Option[Long => Boolean] =
+        if (negRows.isEmpty) allow
+        else {
+          val excluded = concatSorted(negRows.toSeq.map(r =>
+            PostingCodec.decodeBlocks(r.blocks.map(_.bytes).toSeq).docIds))
+          Some((id: Long) =>
+            java.util.Arrays.binarySearch(excluded, id) < 0 && allow.forall(_(id)))
+        }
+      wandBucket(posRows, doclen, idfByTerm, avgdl, ubScale, k, exact, effAllow, decoded,
+        counters, after)
+    }
+  }
 
   /** Term-at-a-time batched scorer for one bucket: each decoded posting
     * array is traversed ONCE for every query that contains the term,
@@ -2645,11 +2542,7 @@ object Searcher {
         var p = 0
         var from = 0
         while (p < pd.length) {
-          val d = java.util.Arrays.binarySearch(dIds, from, nb, pd(p))
-          if (d < 0)
-            throw new IllegalStateException(
-              s"index invariant violated: term '${r.term}' bucket ${r.bucket} " +
-                s"posting docId ${pd(p)} has no doclens entry")
+          val d = docIndex(doclen, pd(p), from)
           di(p) = d
           from = d + 1
           w(p) = idf * Bm25.tfNorm(pt(p), dLens(d), avgdl)
@@ -2846,14 +2739,6 @@ object Searcher {
     }
     if (cursors.isEmpty) return Iterator.empty
 
-    // docId → docLen within this bucket (ascending arrays → binary search)
-    val dIds = doclen.docIds
-    val dLens = doclen.lens
-    def lenOf(docId: Long): Long = {
-      val i = java.util.Arrays.binarySearch(dIds, docId)
-      dLens(i)
-    }
-
     val topk = new TopK(k)
     val live = mutable.ArrayBuffer(cursors: _*)
     // per-task counters flushed to the accumulators once at the end —
@@ -2897,7 +2782,7 @@ object Searcher {
             }
             if ((exact || blockBound >= theta) && allow.forall(_(pivotDoc))) {
               scored += 1
-              val dl = lenOf(pivotDoc)
+              val dl = docLen(doclen, pivotDoc)
               var s = 0.0
               // fixed term order: `cursors` (sorted by term), not `sorted`
               var c = 0

@@ -4,9 +4,11 @@ import java.nio.file.{Files, Path}
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 import org.scalacheck.Gen
 
+import graft.analyze.Tokenizer
 import graft.index.{DictRow, IndexBuilder, PostingRow, Searcher}
 import graft.oracle.ExactScorer
 
@@ -15,8 +17,12 @@ import graft.oracle.ExactScorer
   * (ties broken by docId), one term in every doc, bucket width 1, bucket
   * width > nDocs, and several segment files per bucket directory.
   * Properties: the point-read postings of each bucket equal the Spark
-  * scan of that bucket row for row (block bytes included), and
-  * `search` ≡ `searchExact` ≡ `searchMany` ≡ [[ExactScorer]] bit for bit.
+  * scan of that bucket row for row (block bytes included);
+  * `search` ≡ `searchExact` ≡ `searchMany` ≡ [[ExactScorer]] bit for bit;
+  * `searchHot`, unit-weight `searchBoosted` and singleton-group
+  * `searchSynonym` ≡ `search`; and the gated modes (conjunctive, bool
+  * must, minimum-should-match at every threshold) ≡ the top-k of
+  * `scoreAllMatched` (exact WAND) restricted to their gate.
   * (Plain scalacheck generators sampled in a loop, as in CodecSpec; N is
   * small to keep the suite's runtime bounded.)
   */
@@ -49,7 +55,7 @@ class DifferentialPropSpec extends SparkSpec {
 
   /** Which of the nasty cases a generated corpus contains. */
   private def features(c: Case): Set[String] = {
-    val toks = c.docs.map { case (_, d) => graft.analyze.Tokenizer.tokenize(d).toSet }
+    val toks = c.docs.map { case (_, d) => Tokenizer.tokenize(d).toSet }
     Set(
       Some(c.width.toString.takeWhile(_ != '(')),
       if (toks.exists(_.isEmpty)) Some("zero-token doc") else None,
@@ -82,15 +88,29 @@ class DifferentialPropSpec extends SparkSpec {
           x.maxTfNorm == y.maxTfNorm && x.bytes.sameElements(y.bytes)
       }
 
-  test("point-read postings ≡ Spark scan; search ≡ searchExact ≡ searchMany ≡ ExactScorer") {
+  /** The generated cases, each with its built index, shared by the tests. */
+  private lazy val cases: Seq[(Case, String)] = {
     var seed = org.scalacheck.rng.Seed(20261018L)
-    var multiFileBuckets = 0
-    val seen = Set.newBuilder[String]
-    (1 to 9).foreach { run =>
+    (1 to 9).map { _ =>
       val c = caseGen.pureApply(Gen.Parameters.default, seed)
       seed = seed.next
+      (c, build(c))
+    }
+  }
+
+  private def hits(df: DataFrame): Seq[(Long, Double)] = df.as[(Long, Double)].collect().toSeq
+
+  /** A batched result (query_id, doc_id, score, rank) as ranked hits per query. */
+  private def ranked(df: DataFrame): Map[Int, Seq[(Long, Double)]] =
+    df.as[(Int, Long, Double, Int)].collect().groupBy(_._1)
+      .map { case (q, rs) => q -> rs.sortBy(_._4).map(r => (r._2, r._3)).toSeq }
+
+  test("point-read postings ≡ Spark scan; search ≡ searchExact ≡ searchMany ≡ ExactScorer") {
+    var multiFileBuckets = 0
+    val seen = Set.newBuilder[String]
+    cases.zipWithIndex.foreach { case ((c, root), i) =>
+      val run = i + 1
       seen ++= features(c)
-      val root = build(c)
       val layout = IndexBuilder.Layout(root)
       val s = new Searcher(spark, root)
       val dict = spark.read.parquet(layout.dict).as[DictRow].collect()
@@ -108,14 +128,12 @@ class DifferentialPropSpec extends SparkSpec {
       }
 
       val oracle = new ExactScorer(c.docs)
-      val many = s.searchMany(c.queries, c.k).as[(Int, Long, Double, Int)].collect()
-        .groupBy(_._1).map { case (q, rs) => q -> rs.sortBy(_._4).map(r => (r._2, r._3)).toSeq }
+      val many = ranked(s.searchMany(c.queries, c.k))
       c.queries.foreach { case (id, q) =>
         val want = oracle.search(q, c.k).toSeq
         val ctx = s"run $run (${c.docs.size} docs, ${c.width}) query '$q' k=${c.k}"
-        assert(s.search(q, c.k).as[(Long, Double)].collect().toSeq == want, s"search: $ctx")
-        assert(s.searchExact(q, c.k).as[(Long, Double)].collect().toSeq == want,
-          s"searchExact: $ctx")
+        assert(hits(s.search(q, c.k)) == want, s"search: $ctx")
+        assert(hits(s.searchExact(q, c.k)) == want, s"searchExact: $ctx")
         assert(many.getOrElse(id, Seq.empty) == want, s"searchMany: $ctx")
       }
     }
@@ -123,6 +141,42 @@ class DifferentialPropSpec extends SparkSpec {
     val missed = Set("One", "Wide", "Buckets", "zero-token doc", "duplicate docs",
       "term in every doc") -- seen.result()
     assert(missed.isEmpty, s"cases never generated: $missed")
+  }
+
+  test("searchHot, unit boosts, singleton synonyms ≡ search; gated modes ≡ scoreAllMatched") {
+    cases.zipWithIndex.foreach { case ((c, root), i) =>
+      val s = new Searcher(spark, root)
+      val hot = new Searcher(spark, root, cacheHot = true)
+      val docTerms = c.docs.map { case (id, d) => id -> Tokenizer.tokenize(d).toSet }.toMap
+      val terms = c.queries.map { case (id, q) => id -> Tokenizer.tokenize(q).distinct.sorted }
+        .toMap
+      // every threshold from 1 to one past the term count, in one batch
+      val thresholds = c.queries.flatMap { case (id, q) =>
+        (1 to terms(id).length + 1).map(m => (8 * id + m, q, m))
+      }
+      val conj = ranked(s.searchConjunctiveMany(c.queries, c.k))
+      val minMatch = ranked(s.searchMinMatchMany(thresholds, c.k))
+      c.queries.foreach { case (id, q) =>
+        val ts = terms(id)
+        val ctx = s"run ${i + 1} (${c.docs.size} docs, ${c.width}) query '$q' k=${c.k}"
+        val want = hits(s.search(q, c.k))
+        assert(hot.searchHot(q, c.k).map(h => (h.docId, h.score)).toSeq == want,
+          s"searchHot: $ctx")
+        assert(hits(s.searchBoosted(ts.map(_ -> 1.0), c.k)) == want, s"searchBoosted: $ctx")
+        assert(hits(s.searchSynonym(ts.map(Seq(_)), c.k)) == want, s"searchSynonym: $ctx")
+        // the top-k of every matched doc holding at least m query terms
+        val matched = hits(s.scoreAllMatched(q))
+        def atLeast(m: Int) = matched.filter { case (d, _) => ts.count(docTerms(d)) >= m }
+          .sortBy { case (d, sc) => (-sc, d) }.take(c.k)
+        assert(conj.getOrElse(id, Seq.empty) == atLeast(ts.length),
+          s"searchConjunctiveMany: $ctx")
+        assert(hits(s.searchBool(c.k, must = q)) == atLeast(ts.length), s"searchBool: $ctx")
+        (1 to ts.length + 1).foreach { m =>
+          assert(minMatch.getOrElse(8 * id + m, Seq.empty) == atLeast(m),
+            s"searchMinMatchMany m=$m: $ctx")
+        }
+      }
+    }
   }
 }
 

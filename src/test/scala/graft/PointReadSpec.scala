@@ -11,7 +11,7 @@ import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions.col
 
 import graft.corpus.CorpusGen
-import graft.index.{DictRow, IndexBuilder, MultiSearcher, Searcher}
+import graft.index.{DictRow, DocLenRow, IndexBuilder, MultiSearcher, Searcher}
 
 /** The driver-side dictionary point read and the per-bucket seam: point
   * reads equal the Spark reads, a damaged index fails loudly instead of
@@ -123,6 +123,24 @@ class PointReadSpec extends SparkSpec {
     failsLoudly(s.search("def", 10).collect())
     failsLoudly(s.searchMany(Seq(0 -> "def", 1 -> "id0"), 10).collect())
     failsLoudly(s.searchBool(10, must = "def").collect())
+  }
+
+  test("a doc missing from its bucket's doclens row fails every kernel with one message") {
+    val damaged = copyIndex(root)
+    val dlPath = IndexBuilder.Layout(damaged).doclens
+    val bucket = spark.read.parquet(dlPath).select(col("bucket")).as[Int].collect().max
+    // "def" is in every generated doc, so the dropped doc has postings
+    val victim = spark.read.parquet(dlPath).as[DocLenRow].collect()
+      .find(_.bucket == bucket).get.docIds.head
+    rewrite(dlPath, spark.read.parquet(dlPath).as[DocLenRow].map(r =>
+      if (r.bucket != bucket) r else r.copy(docIds = r.docIds.tail, lens = r.lens.tail)).toDF())
+    val s = new Searcher(spark, damaged)
+    def failsAttributed(f: => Any): Unit = failsWith(
+      s"doc $victim has postings but no doclens entry (bucket $bucket)")(f)
+    failsAttributed(s.searchExact("def", 10).collect())
+    failsAttributed(s.searchSynonym(Seq(Seq("def")), 10).collect())
+    failsAttributed(s.searchSortedByLen("def", 10).collect())
+    failsAttributed(s.searchConjunctiveMany(Seq(0 -> "def"), 10).collect())
   }
 
   test("an old-format dictionary (no bucket lists) raises the rebuild message") {
