@@ -9,8 +9,8 @@ import graft.analyze.Tokenizer
   * the reference's multi-index `Indexes.search`
   * (/root/reference/python/lib.cpp:330-402,
   * /root/reference/python/usearch/index.py:1473-1514): every shard is
-  * searched with the SAME global statistics, then the per-shard ranked
-  * results are merged with a bounded ordered merge
+  * searched with the SAME global statistics, then every shard's
+  * per-bucket partials are merged ONCE with a bounded ordered merge
   * (`merge_into`, /root/reference/include/usearch/index.hpp:2650-2670).
   *
   * With global stats injected, the merged top-k is bit-identical to the
@@ -26,10 +26,11 @@ final class MultiSearcher(spark: SparkSession, roots: Seq[String]) {
   val searchers: Seq[Searcher] = roots.map(new Searcher(spark, _))
 
   /** Run one thunk per shard on driver threads and collect in shard
-    * order: shard-side planning (pruned dictionary reads) and per-shard
-    * frame construction are independent small jobs, so running them
-    * concurrently overlaps their job-launch floors (results are
-    * order-preserved, hence identical to the sequential map).
+    * order: each shard's planning is driver-side dictionary point reads
+    * (no Spark job) and the construction of its lazy per-bucket frame,
+    * so running them concurrently overlaps their Parquet footer and page
+    * reads (results are order-preserved, hence identical to the
+    * sequential map).
     */
   private def perShard[T](fs: Seq[() => T]): Seq[T] =
     IndexBuilder.awaitAll(fs)
@@ -47,69 +48,67 @@ final class MultiSearcher(spark: SparkSession, roots: Seq[String]) {
     GlobalStats(nDocs, avgdl, df)
   }
 
+  /** The union of every shard's frame. Generations hold disjoint doc-id
+    * spaces, so a union of per-shard answers loses and doubles nothing.
+    */
+  private def union(frame: Searcher => DataFrame): DataFrame =
+    perShard(searchers.map(se => () => frame(se))).reduce(_ union _)
+
+  /** The one scatter of every scoring mode: global stats over the terms
+    * of `texts`, computed once; every shard's per-bucket partials scored
+    * with them; and ONE `merge` of their union — the merge one index
+    * runs, since the top-k of a union is the top-k of the per-bucket
+    * top-ks in the (score desc, doc_id asc) total order.
+    */
+  private def scatter(texts: Seq[String], merge: DataFrame => DataFrame)(
+      partials: (Searcher, Option[GlobalStats]) => DataFrame): DataFrame = {
+    val g = Some(globalStatsFor(texts.flatMap(Tokenizer.tokenize).distinct.sorted))
+    merge(union(partials(_, g)))
+  }
+
   def search(
       query: String,
       k: Int,
       exact: Boolean = false,
-      allow: Option[Long => Boolean] = None): DataFrame = {
-    val terms = Tokenizer.tokenize(query).distinct.sorted
-    val g = globalStatsFor(terms)
-    Searcher.topK(
-      perShard(searchers.map(se => () => se.search(query, k, exact, allow, Some(g))))
-        .reduce(_ union _), k)
-  }
+      allow: Option[Long => Boolean] = None): DataFrame =
+    scatter(Seq(query), Searcher.topK(_, k))(_.searchBuckets(query, k, exact, allow, _))
 
   /** Batched search across all generations — the TAAT batch path with
     * injected global stats per shard, so a freshly-streamed,
     * not-yet-compacted table gets the same decode-once batched plan as a
-    * compacted index. Generation doc-id spaces are disjoint, so the union
-    * of per-bucket partials merges with ONE global bounded top-k
-    * aggregate (Searcher.finishMany) into exactly the result a
-    * single-index batch would give (MergeSpec pins multi-gen batch ≡
-    * single-index batch).
+    * compacted index, merged by the same bounded aggregate
+    * (Searcher.finishMany) into exactly the result a single-index batch
+    * would give (MergeSpec pins multi-gen batch ≡ single-index batch).
     */
   def searchMany(
       queries: Seq[(Int, String)],
       k: Int,
-      allow: Option[Long => Boolean] = None): DataFrame = {
-    val allTerms = queries
-      .flatMap { case (_, q) => Tokenizer.tokenize(q) }.distinct.sorted
-    val g = globalStatsFor(allTerms)
-    Searcher.finishMany(
-      perShard(searchers.map(se => () => se.searchManyBuckets(queries, k, Some(g), allow = allow)))
-        .reduce(_ union _), k)
-  }
+      allow: Option[Long => Boolean] = None): DataFrame =
+    scatter(queries.map(_._2), Searcher.finishMany(_, k))(
+      _.searchManyBuckets(queries, k, _, allow = allow))
 
-  /** Batched conjunctive (AND) search across generations: union of
-    * per-shard per-bucket partials — complete because a doc lives
-    * entirely in one generation, so its all-terms intersection is decided
-    * shard-locally — each scored with the SAME injected global stats,
-    * then ONE bounded global merge. Multi-gen AND ≡ single-index AND over
-    * the union corpus (RetrievalModesSpec pins it).
+  /** Batched conjunctive (AND) search across generations: minimum-should-
+    * match at m = n per shard — complete because a doc lives entirely in
+    * one generation, so its all-terms intersection is decided
+    * shard-locally. Multi-gen AND ≡ single-index AND over the union
+    * corpus (RetrievalModesSpec pins it).
     */
-  def searchConjunctiveMany(queries: Seq[(Int, String)], k: Int): DataFrame = {
-    val allTerms = queries
-      .flatMap { case (_, q) => Tokenizer.tokenize(q) }.distinct.sorted
-    val g = globalStatsFor(allTerms)
-    Searcher.finishMany(
-      perShard(searchers.map(se => () => se.conjunctiveManyBuckets(queries, k, Some(g))))
-        .reduce(_ union _), k)
-  }
+  def searchConjunctiveMany(queries: Seq[(Int, String)], k: Int): DataFrame =
+    scatter(queries.map(_._2), Searcher.finishMany(_, k))(
+      _.minMatchManyBuckets(Searcher.conjunctive(queries), k, _))
 
   /** Index-only phrase search across generations — containment needs no
     * statistics, and generations partition the docs, so the union of
     * per-shard results IS the union-corpus answer.
     */
   def phraseMany(phrases: Seq[(Int, String)]): DataFrame =
-    perShard(searchers.map(se => () => se.phraseMany(phrases))).reduce(_ union _)
-      .orderBy(col("phrase_id"), col("doc_id"))
+    union(_.phraseMany(phrases)).orderBy(col("phrase_id"), col("doc_id"))
 
   /** Index-only proximity search across generations — same disjoint-union
     * argument as [[phraseMany]].
     */
   def proximityMany(queries: Seq[(Int, String, Int)]): DataFrame =
-    perShard(searchers.map(se => () => se.proximityMany(queries))).reduce(_ union _)
-      .orderBy(col("query_id"), col("doc_id"))
+    union(_.proximityMany(queries)).orderBy(col("query_id"), col("doc_id"))
 
   /** Index-only ordered-span search across generations — containment
     * queries need no cross-shard statistics, and generations hold
@@ -117,8 +116,7 @@ final class MultiSearcher(spark: SparkSession, roots: Seq[String]) {
     * single-index answer (same argument as [[phraseMany]]).
     */
   def spanOrderedMany(queries: Seq[(Int, String, Int)]): DataFrame =
-    perShard(searchers.map(se => () => se.spanOrderedMany(queries))).reduce(_ union _)
-      .orderBy(col("query_id"), col("doc_id"))
+    union(_.spanOrderedMany(queries)).orderBy(col("query_id"), col("doc_id"))
 
   /** Index-only hit counting across generations: per-shard (n_docs,
     * total_tf) partials summed per query — exact because generations
@@ -126,9 +124,7 @@ final class MultiSearcher(spark: SparkSession, roots: Seq[String]) {
     * distinct counts add inside one index).
     */
   def countMany(queries: Seq[(Int, String)]): DataFrame =
-    perShard(searchers.map(se => () => se.countMany(queries))).reduce(_ union _)
-      .groupBy(col("query_id"))
-      .agg(org.apache.spark.sql.functions.sum(col("n_docs")).as("n_docs"),
-        org.apache.spark.sql.functions.sum(col("total_tf")).as("total_tf"))
+    union(_.countMany(queries)).groupBy(col("query_id"))
+      .agg(sum(col("n_docs")).as("n_docs"), sum(col("total_tf")).as("total_tf"))
       .orderBy(col("query_id"))
 }

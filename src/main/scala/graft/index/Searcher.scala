@@ -21,7 +21,8 @@ import graft.query.Bm25
   *   2. ONE dictionary point read on the driver ([[ParquetPointReader]]:
   *      footer key ranges pick the file, the page index and a record
   *      filter the rows — no Spark job) → idf, term UBs, and the per-term
-  *      bucket lists: all query planning
+  *      bucket lists: all query planning, done by the one planner of
+  *      every scoring mode ([[plan]])
   *   3. one Spark task per touched bucket ([[perBucket]], no shuffle):
   *      the task point-reads its terms' postings from its own
   *      `segments/bucket=N/` directory (the terms the dictionary lists
@@ -44,8 +45,9 @@ import graft.query.Bm25
   *     expansions, searchHot (same plan,             exclusion, composed
   *     resident rows), scoreAllMatched               with `allow`)
   *   searchMany, searchFuzzyMany         taatBucket  none
-  *   searchConjunctiveMany               foldBucket  intersection, probed
-  *                                                   from the sparsest term
+  *   searchConjunctiveMany               foldBucket  min-match gate at m = n
+  *                                                   (the intersection, probed
+  *                                                   from the sparsest term)
   *   searchMinMatchMany                  foldBucket  ≥ m present terms
   *   searchBool (must / phrase)          foldBucket  must ∩ phrase − negated
   *   searchSynonym, searchBoosted,       foldBucket  union (synonym member
@@ -455,6 +457,22 @@ final class Searcher(spark: SparkSession, root: String, cacheHot: Boolean = fals
       dictReader.read(terms)(Searcher.dictRow).map(d => d.term -> d).toMap
   }
 
+  /** The one query planner of every scoring mode: the [[dictRows]] point
+    * read of `terms` and the statistics to score them with — the
+    * injected `globalStats` when this index is one generation of a
+    * [[MultiSearcher]] (every shard must score with the same N/df/avgdl,
+    * or the merged ranking is meaningless), else this index's own.
+    */
+  private def plan(terms: collection.Seq[String],
+      globalStats: Option[GlobalStats] = None): Searcher.Plan = {
+    val local = dictRows(terms.distinct.sorted.toSeq)
+    Searcher.Plan(local, globalStats.getOrElse(
+      GlobalStats(stats.nDocs, stats.avgdl, local.map { case (t, d) => t -> d.df })), stats.avgdl)
+  }
+
+  private def noHits = spark.emptyDataset[Hit].toDF("doc_id", "score")
+  private def noPartials = spark.emptyDataset[(Int, Long, Double)].toDF("query_id", "doc_id", "score")
+
   /** Decoded (term, doc_id) membership pairs for the given terms — ONE
     * segments read pruned by `term IN (...)` pushdown plus the
     * dictionary's bucket partition filter, blocks decoded on executors.
@@ -556,15 +574,12 @@ final class Searcher(spark: SparkSession, root: String, cacheHot: Boolean = fals
       : Dataset[U] = {
     require(hasPositions,
       s"index at $root has no positions sidecar — run IndexBuilder.buildPositions first")
-    val local = dictRows(qs.flatMap(_._2).distinct.sorted)
-    val live = qs.filter { case (_, ts, _) =>
-      ts.nonEmpty && ts.forall(t => local.get(t).exists(_.df > 0L))
-    }
-    val queryBuckets: Map[Int, Set[Int]] = live.map { case (id, ts, _) =>
-      id -> ts.iterator.map(t => local(t).buckets.toSet).reduce(_ intersect _)
-    }.toMap
+    val p = plan(qs.flatMap(_._2))
+    val live = qs.filter { case (_, ts, _) => ts.nonEmpty && ts.forall(p.live) }
+    val queryBuckets: Map[Int, Set[Int]] =
+      live.map { case (id, ts, _) => id -> p.candidates(ts, ts.length) }.toMap
     val buckets = queryBuckets.values.flatten.toSet
-    perBucket(positions, Searcher.bucketTerms(local, live.flatMap(_._2), buckets)) {
+    perBucket(positions, Searcher.bucketTerms(p.local, live.flatMap(_._2), buckets)) {
       (bucket, rows, _) =>
         val byTerm = Searcher.decodePositions(rows)
         live.iterator
@@ -666,16 +681,13 @@ final class Searcher(spark: SparkSession, root: String, cacheHot: Boolean = fals
     }
     val zeros = spark.createDataset(qs.map { case (id, _) => (id, 0L, 0L) })
       .toDF("query_id", "n_docs", "total_tf")
-    val local = dictRows(qs.flatMap(_._2).distinct.sorted)
-    val live: Seq[(Int, Array[String])] = qs
-      .map { case (id, ts) => (id, ts.filter(t => local.get(t).exists(_.df > 0L))) }
-      .filter(_._2.nonEmpty)
+    val p = plan(qs.flatMap(_._2))
+    val live = qs.map { case (id, ts) => (id, ts.filter(p.live)) }.filter(_._2.nonEmpty)
     if (live.isEmpty) return zeros.orderBy(col("query_id"))
-    val queryBuckets: Map[Int, Set[Int]] = live.map { case (id, ts) =>
-      id -> ts.iterator.flatMap(t => local(t).buckets).toSet
-    }.toMap
+    val queryBuckets: Map[Int, Set[Int]] =
+      live.map { case (id, ts) => id -> p.candidates(ts, 1) }.toMap
     val partials =
-      perBucket(segments, Searcher.bucketTerms(local, live.flatMap(_._2))) {
+      perBucket(segments, Searcher.bucketTerms(p.local, live.flatMap(_._2))) {
         (bucket, rows, _) =>
           val post = Searcher.decoder(rows)
           live.iterator
@@ -713,12 +725,11 @@ final class Searcher(spark: SparkSession, root: String, cacheHot: Boolean = fals
   def searchSortedByLen(query: String, k: Int): DataFrame = {
     val empty = spark.emptyDataset[(Int, Long, Long)].toDF("rank", "doc_id", "dl")
     val ts = Tokenizer.tokenize(query).distinct.sorted
-    if (ts.isEmpty) return empty
-    val local = dictRows(ts)
-    val live = ts.filter(t => local.get(t).exists(_.df > 0L))
+    val p = plan(ts)
+    val live = ts.filter(p.live)
     if (live.isEmpty) return empty
     // the length rides the merge's `score` column
-    val byLen = perBucket(segments, Searcher.bucketTerms(local, live)) { (_, rows, dl) =>
+    val byLen = perBucket(segments, Searcher.bucketTerms(p.local, live)) { (_, rows, dl) =>
       val topk = new Searcher.TopK(k)
       Searcher.atLeast(rows.toSeq.map(r =>
         PostingCodec.decodeBlocks(r.blocks.map(_.bytes).toSeq).docIds), 1)
@@ -967,75 +978,20 @@ final class Searcher(spark: SparkSession, root: String, cacheHot: Boolean = fals
     * contract as the reference, /root/reference/include/usearch/
     * index.hpp:4251-4268).
     *
-    * Plan shape: one pruned dictionary read plans everything; a query
-    * with any dictionary-absent term is dead at planning (zero data
-    * jobs — AND of an absent term is empty); candidate buckets per query
-    * are the INTERSECTION of its terms' bucket lists; each such bucket's
-    * task point-reads the live terms' postings listed there, decodes
-    * each term once, intersects docIds probing from the bucket-sparsest
-    * term, and verifies survivors with [[Searcher.foldBucket]] — the
+    * It IS [[searchMinMatchMany]] at m = n (each query's distinct-token
+    * count): a query with any dictionary-absent term is dead at planning
+    * (zero data jobs — AND of an absent term is empty); candidate buckets
+    * are where all n terms post (the intersection of their bucket
+    * lists); the gate at m = n is the intersection probed from the
+    * bucket-sparsest term ([[Searcher.atLeast]]), and survivors get the
     * identical sorted-term left-fold `idf · Bm25.tfNorm` arithmetic as
-    * [[searchMany]], so a conjunctive hit's score is bit-identical to
-    * the same doc's disjunctive score. Per-bucket top-k, then the same
-    * bounded [[Searcher.finishMany]] global merge.
+    * [[searchMany]], so a conjunctive hit's score is bit-identical to the
+    * same doc's disjunctive score.
     *
     * Returns (query_id, doc_id, score, rank) ordered (query_id, rank).
     */
-  def searchConjunctiveMany(
-      queries: Seq[(Int, String)],
-      k: Int,
-      globalStats: Option[GlobalStats] = None): DataFrame =
-    Searcher.finishMany(conjunctiveManyBuckets(queries, k, globalStats), k)
-
-  /** Per-bucket partials of a batched conjunctive search (same exposure
-    * contract as [[searchManyBuckets]]): a doc lives entirely in ONE
-    * generation, so per-shard intersections are complete and
-    * [[MultiSearcher.searchConjunctiveMany]] can union the partials of
-    * several generations (each scored with injected global stats) and
-    * run ONE bounded global merge.
-    */
-  private[index] def conjunctiveManyBuckets(
-      queries: Seq[(Int, String)],
-      k: Int,
-      globalStats: Option[GlobalStats] = None): DataFrame = {
-    val emptyPartial = spark.emptyDataset[(Int, Long, Double)]
-      .toDF("query_id", "doc_id", "score")
-    val qTerms: Seq[(Int, Array[String])] =
-      queries.map { case (id, q) => (id, Tokenizer.tokenize(q).distinct.sorted) }
-        .filter(_._2.nonEmpty)
-    if (qTerms.isEmpty) return emptyPartial
-    val localRows = dictRows(qTerms.flatMap(_._2).distinct.sorted)
-    val g = globalStats.getOrElse(
-      GlobalStats(stats.nDocs, stats.avgdl, localRows.map { case (t, d) => t -> d.df }))
-    // conjunctive liveness is LOCAL: a doc lives entirely in this shard,
-    // so every term needs local postings here — but idf is global, so
-    // scores merge correctly across generations
-    val live = qTerms.filter { case (_, ts) =>
-      ts.forall(t => localRows.get(t).exists(_.df > 0L) && g.dfByTerm.getOrElse(t, 0L) > 0L)
-    }
-    if (live.isEmpty) return emptyPartial
-    val liveTerms = live.flatMap(_._2).distinct.sorted
-    val idfByTerm = liveTerms.map(t => t -> Bm25.idf(g.dfByTerm(t), g.nDocs)).toMap
-    val queryBuckets: Map[Int, Set[Int]] = live.map { case (id, ts) =>
-      id -> ts.iterator.map(t => localRows(t).buckets.toSet).reduce(_ intersect _)
-    }.toMap
-    val termsByBucket =
-      Searcher.bucketTerms(localRows, liveTerms, queryBuckets.values.flatten.toSet)
-    val qs = live.toArray
-    val avgdl = g.avgdl
-    // gate: the docs holding every term, probed from the bucket-sparsest
-    perBucket(segments, termsByBucket) { (bucket, rows, dl) =>
-      val post = Searcher.decoder(rows)
-      qs.iterator.filter { case (id, _) => queryBuckets(id).contains(bucket) }
-        .flatMap { case (id, ts) =>
-          val ps = ts.flatMap(post)
-          if (ps.length < ts.length) Iterator.empty
-          else Searcher.foldBucket(Searcher.intersectSorted(ps.toSeq.map(_.docIds)),
-            Array.emptyLongArray, ps.map(Array(_)), ts.map(idfByTerm), dl, avgdl, k)
-            .map(h => (id, h.docId, h.score))
-        }
-    }.toDF("query_id", "doc_id", "score")
-  }
+  def searchConjunctiveMany(queries: Seq[(Int, String)], k: Int): DataFrame =
+    Searcher.finishMany(minMatchManyBuckets(Searcher.conjunctive(queries), k), k)
 
   /** Batched MINIMUM-SHOULD-MATCH top-k (the Lucene/Elasticsearch
     * `minimum_should_match` knob): rank documents containing at least
@@ -1053,15 +1009,13 @@ final class Searcher(spark: SparkSession, root: String, cacheHot: Boolean = fals
     *
     * Returns (query_id, doc_id, score, rank) ordered (query_id, rank).
     */
-  def searchMinMatchMany(
-      queries: Seq[(Int, String, Int)],
-      k: Int,
-      globalStats: Option[GlobalStats] = None): DataFrame =
-    Searcher.finishMany(minMatchManyBuckets(queries, k, globalStats), k)
+  def searchMinMatchMany(queries: Seq[(Int, String, Int)], k: Int): DataFrame =
+    Searcher.finishMany(minMatchManyBuckets(queries, k), k)
 
-  /** Per-bucket partials of [[searchMinMatchMany]] (same exposure
-    * contract as [[searchManyBuckets]]; a doc lives entirely in one
-    * generation, so per-shard counts are complete).
+  /** Per-bucket partials of [[searchMinMatchMany]] and
+    * [[searchConjunctiveMany]] (same exposure contract as
+    * [[searchManyBuckets]]; a doc lives entirely in one generation, so
+    * per-shard counts are complete).
     */
   private[index] def minMatchManyBuckets(
       queries: Seq[(Int, String, Int)],
@@ -1070,37 +1024,20 @@ final class Searcher(spark: SparkSession, root: String, cacheHot: Boolean = fals
     queries.foreach { case (id, _, m) =>
       require(m >= 1, s"minimum_should_match must be >= 1, got $m (query $id)")
     }
-    val emptyPartial = spark.emptyDataset[(Int, Long, Double)]
-      .toDF("query_id", "doc_id", "score")
-    val qTerms: Seq[(Int, Array[String], Int)] =
-      queries.map { case (id, q, m) => (id, Tokenizer.tokenize(q).distinct.sorted, m) }
-        .filter(_._2.nonEmpty)
-    if (qTerms.isEmpty) return emptyPartial
-    val localRows = dictRows(qTerms.flatMap(_._2).distinct.sorted)
-    val g = globalStats.getOrElse(
-      GlobalStats(stats.nDocs, stats.avgdl, localRows.map { case (t, d) => t -> d.df }))
+    val qTerms = queries.map { case (id, q, m) => (id, Tokenizer.tokenize(q).distinct.sorted, m) }
+    val p = plan(qTerms.flatMap(_._2), globalStats)
     // optional-clause rule: absent terms drop; a query with < m live
     // terms cannot match anything — dead at planning
-    val live = qTerms
-      .map { case (id, ts, m) =>
-        (id, ts.filter(t =>
-          localRows.get(t).exists(_.df > 0L) && g.dfByTerm.getOrElse(t, 0L) > 0L), m)
-      }
-      .filter { case (_, ts, m) => ts.length >= m }
-    if (live.isEmpty) return emptyPartial
-    val liveTerms = live.flatMap(_._2).distinct.sorted
-    val idfByTerm = liveTerms.map(t => t -> Bm25.idf(g.dfByTerm(t), g.nDocs)).toMap
-    // a bucket is a candidate for a query iff >= m of its terms post there
-    val queryBuckets: Map[Int, Set[Int]] = live.map { case (id, ts, m) =>
-      val counts = scala.collection.mutable.HashMap.empty[Int, Int]
-      ts.foreach(t => localRows(t).buckets.foreach(b =>
-        counts.update(b, counts.getOrElse(b, 0) + 1)))
-      id -> counts.iterator.collect { case (b, c) if c >= m => b }.toSet
-    }.toMap
+    val qs = qTerms.map { case (id, ts, m) => (id, ts.filter(p.live), m) }
+      .filter { case (_, ts, m) => ts.length >= m }.toArray
+    if (qs.isEmpty) return noPartials
+    val liveTerms = qs.flatMap(_._2).distinct.sorted
+    val idfByTerm = p.idfByTerm(liveTerms)
+    val queryBuckets: Map[Int, Set[Int]] =
+      qs.map { case (id, ts, m) => id -> p.candidates(ts, m) }.toMap
     val termsByBucket =
-      Searcher.bucketTerms(localRows, liveTerms, queryBuckets.values.flatten.toSet)
-    val qs = live.toArray
-    val avgdl = g.avgdl
+      Searcher.bucketTerms(p.local, liveTerms, queryBuckets.values.flatten.toSet)
+    val avgdl = p.g.avgdl
     // gate: the docs holding at least m of the query's present terms,
     // folded over those terms in sorted order
     perBucket(segments, termsByBucket) { (bucket, rows, dl) =>
@@ -1137,8 +1074,7 @@ final class Searcher(spark: SparkSession, root: String, cacheHot: Boolean = fals
       throw new IllegalArgumentException(
         s"prefix '$prefix' expands to ${expanded.size} terms (> $maxExpansion) — " +
           "narrow the prefix or raise maxExpansion")
-    if (expanded.isEmpty)
-      return spark.emptyDataset[Hit].toDF("doc_id", "score")
+    if (expanded.isEmpty) return noHits
     search(expanded.mkString(" "), k)
   }
 
@@ -1170,8 +1106,7 @@ final class Searcher(spark: SparkSession, root: String, cacheHot: Boolean = fals
       throw new IllegalArgumentException(
         s"pattern '$pattern' expands to ${expanded.size} terms (> $maxExpansion) — " +
           "narrow the pattern or raise maxExpansion")
-    if (expanded.isEmpty)
-      return spark.emptyDataset[Hit].toDF("doc_id", "score")
+    if (expanded.isEmpty) return noHits
     search(expanded.mkString(" "), k)
   }
 
@@ -1225,8 +1160,7 @@ final class Searcher(spark: SparkSession, root: String, cacheHot: Boolean = fals
       throw new IllegalArgumentException(
         s"regexp '$pattern' expands to ${expanded.size} terms (> $maxExpansion) — " +
           "narrow the pattern or raise maxExpansion")
-    if (expanded.isEmpty)
-      return spark.emptyDataset[Hit].toDF("doc_id", "score")
+    if (expanded.isEmpty) return noHits
     search(expanded.mkString(" "), k)
   }
 
@@ -1306,7 +1240,8 @@ final class Searcher(spark: SparkSession, root: String, cacheHot: Boolean = fals
     * filtered set, not a post-filter of unfiltered top-k.
     *
     * `negQuery`: boolean NOT terms (see [[searchNot]]) — their postings
-    * ride the same pruned scan and become a bucket-local exclusion
+    * are point-read, in the buckets the query terms touch, by the same
+    * bucket task that scores, and become a bucket-local exclusion
     * composed with `allow`; scoring and ranking are otherwise untouched.
     */
   def search(
@@ -1314,24 +1249,38 @@ final class Searcher(spark: SparkSession, root: String, cacheHot: Boolean = fals
       k: Int,
       exact: Boolean = false,
       allow: Option[Long => Boolean] = None,
-      globalStats: Option[GlobalStats] = None,
+      counters: Option[SearchCounters] = None,
+      negQuery: String = "",
+      after: Option[(Double, Long)] = None): DataFrame =
+    Searcher.topK(searchBuckets(query, k, exact, allow, None, counters, negQuery, after), k)
+
+  /** [[search]]'s per-bucket hits (doc_id, score), each bucket's top-k,
+    * NOT yet merged — exposed so [[MultiSearcher.search]] can union the
+    * hits of several generations (each scored with injected global
+    * stats) under ONE merge.
+    */
+  private[index] def searchBuckets(
+      query: String,
+      k: Int,
+      exact: Boolean,
+      allow: Option[Long => Boolean],
+      globalStats: Option[GlobalStats],
       counters: Option[SearchCounters] = None,
       negQuery: String = "",
       after: Option[(Double, Long)] = None): DataFrame =
     planSearch(query, k, exact, globalStats, counters, negQuery, after) match {
-      case None => spark.emptyDataset[Hit].toDF("doc_id", "score")
+      case None => noHits
       case Some((termsByBucket, kernel)) =>
         val allowB = broadcastAllow(allow)
-        Searcher.topK(perBucket(segments, termsByBucket) { (_, rows, dl) =>
+        perBucket(segments, termsByBucket) { (_, rows, dl) =>
           kernel(rows, dl, allowB.map(_.value), null)
-        }.toDF("doc_id", "score"), k)
+        }.toDF("doc_id", "score")
     }
 
-  /** The plan of [[search]] and [[searchHot]]: one dictionary point read
-    * resolves the terms, their global statistics and idfs, the UB scale,
-    * and each bucket to read with the terms the dictionary lists there;
-    * the returned kernel scores one bucket. None when no query term is
-    * live.
+  /** The plan of [[search]] and [[searchHot]] over [[plan]]: the live
+    * query terms with their idfs, the UB scale, and each bucket to read
+    * with the terms the dictionary lists there; the returned kernel
+    * scores one bucket. None when no query term is live.
     */
   private def planSearch(
       query: String,
@@ -1348,27 +1297,15 @@ final class Searcher(spark: SparkSession, root: String, cacheHot: Boolean = fals
     // from the scoring list changes no surviving doc's score
     val qTerms = Tokenizer.tokenize(query).distinct.sorted
       .filterNot(negTerms.contains)
-    val local = dictRows((qTerms ++ negTerms).distinct.sorted)
-    // idf from global stats when searching as one shard of a multi-index
-    // (the `Indexes` scatter-gather analog): every shard must score with
-    // the same N/df/avgdl or the merged ranking is meaningless
-    val g = globalStats.getOrElse(
-      GlobalStats(stats.nDocs, stats.avgdl, local.map { case (t, d) => t -> d.df }))
-    val termList = qTerms.filter(t => g.dfByTerm.getOrElse(t, 0L) > 0L).toSeq
+    val p = plan(qTerms ++ negTerms, globalStats)
+    val termList = qTerms.filter(p.live).toSeq
     if (termList.isEmpty) return None
-    val idfByTerm = termList.map(t => t -> Bm25.idf(g.dfByTerm(t), g.nDocs)).toMap
-    // stored block-max tf-norms were computed with THIS index's avgdl; a
-    // larger global avgdl raises tfNorm by at most avgdl_new/avgdl_old —
-    // scale the UBs so WAND pruning stays sound (never under-estimates)
-    val ubScale = math.max(1.0, g.avgdl / stats.avgdl)
-    // buckets from the dictionary rows (a term known globally but absent
-    // from THIS shard has no local row → no buckets → contributes here
-    // exactly nothing); negated terms are read only in those buckets
-    val touched = Searcher.bucketTerms(local, termList).keySet
-    val negLive = negTerms.filter(t => local.get(t).exists(_.df > 0L))
-    Some((Searcher.bucketTerms(local, (termList ++ negLive).distinct, touched),
-      Searcher.SearchKernel(idfByTerm, negLive.toSet, g.avgdl, ubScale, k, exact,
-        counters.orNull, after)))
+    // negated terms are read only in the buckets the scoring terms touch
+    val touched = Searcher.bucketTerms(p.local, termList).keySet
+    val negLive = negTerms.filter(p.posts)
+    Some((Searcher.bucketTerms(p.local, (termList ++ negLive).distinct, touched),
+      Searcher.SearchKernel(p.idfByTerm(termList), negLive.toSet, p.g.avgdl, p.ubScale, k,
+        exact, counters.orNull, after)))
   }
 
   /** Exact search convenience (full scoring, no pruning). */
@@ -1393,12 +1330,7 @@ final class Searcher(spark: SparkSession, root: String, cacheHot: Boolean = fals
   def scoreAllMatched(query: String): DataFrame =
     // k = MaxValue keeps every scored doc: TopK's heap grows lazily, so
     // memory is O(matched-in-bucket) ≤ bucket width
-    planSearch(query, Int.MaxValue, exact = true, None, None, "", None) match {
-      case None => spark.emptyDataset[Hit].toDF("doc_id", "score")
-      case Some((termsByBucket, kernel)) =>
-        perBucket(segments, termsByBucket)((_, rows, dl) => kernel(rows, dl, None, null))
-          .toDF("doc_id", "score")
-    }
+    searchBuckets(query, Int.MaxValue, exact = true, None, None)
 
   /** SEARCH-AFTER deep pagination (the Lucene `searchAfter` analog; the
     * reference's paging surface is `export_keys`' offset/limit,
@@ -1514,19 +1446,15 @@ final class Searcher(spark: SparkSession, root: String, cacheHot: Boolean = fals
   private def searchGroupsWeighted(
       norm: Seq[(Seq[String], Double)], k: Int,
       disMaxTie: Option[Double] = None): DataFrame = {
-    if (norm.isEmpty) return spark.emptyDataset[Hit].toDF("doc_id", "score")
-    val local = dictRows(norm.flatMap(_._1).distinct.sorted)
-    val liveW = norm
-      .map { case (g, w) => (g.filter(t => local.get(t).exists(_.df > 0L)), w) }
-      .filter(_._1.nonEmpty)
-    if (liveW.isEmpty) return spark.emptyDataset[Hit].toDF("doc_id", "score")
+    val p = plan(norm.flatMap(_._1))
+    val liveW = norm.map { case (g, w) => (g.filter(p.live), w) }.filter(_._1.nonEmpty)
+    if (liveW.isEmpty) return noHits
     val live = liveW.map(_._1)
     val ws: Array[Double] = liveW.map(_._2).toArray
-    val idfs: Array[Double] =
-      live.map(g => Bm25.idf(g.map(t => local(t).df).max, stats.nDocs)).toArray
-    val avgdl = stats.avgdl
+    val idfs: Array[Double] = live.map(p.idf).toArray
+    val avgdl = p.g.avgdl
     // gate: the union of the groups' postings
-    Searcher.topK(perBucket(segments, Searcher.bucketTerms(local, live.flatten)) { (_, rows, dl) =>
+    Searcher.topK(perBucket(segments, Searcher.bucketTerms(p.local, live.flatten)) { (_, rows, dl) =>
       val post = Searcher.decoder(rows)
       val groups = live.map(_.flatMap(post).toArray).toArray
       Searcher.foldBucket(Searcher.atLeast(groups.toSeq.flatten.map(_.docIds), 1),
@@ -1646,8 +1574,7 @@ final class Searcher(spark: SparkSession, root: String, cacheHot: Boolean = fals
       throw new IllegalArgumentException(
         s"probe '$q'~$maxDist expands to ${expanded.size} terms (> $maxExpansion) — " +
           "lower maxDist or raise maxExpansion")
-    if (expanded.isEmpty)
-      return spark.emptyDataset[Hit].toDF("doc_id", "score")
+    if (expanded.isEmpty) return noHits
     search(expanded.mkString(" "), k)
   }
 
@@ -1795,7 +1722,6 @@ final class Searcher(spark: SparkSession, root: String, cacheHot: Boolean = fals
     */
   def searchBool(k: Int, must: String = "", should: String = "",
       mustNot: String = "", phrase: String = ""): DataFrame = {
-    val empty = spark.emptyDataset[Hit].toDF("doc_id", "score")
     val negTerms = Tokenizer.tokenize(mustNot).distinct.sorted
     val mustTerms = Tokenizer.tokenize(must).distinct.sorted
     val shouldTerms = Tokenizer.tokenize(should).distinct.sorted
@@ -1803,7 +1729,7 @@ final class Searcher(spark: SparkSession, root: String, cacheHot: Boolean = fals
     require(mustTerms.nonEmpty || shouldTerms.nonEmpty || phraseToks.nonEmpty,
       "bool query needs at least one of must / should / phrase")
     if (mustTerms.exists(negTerms.contains) || phraseToks.exists(negTerms.contains))
-      return empty
+      return noHits
     val scoring: Array[String] = (mustTerms ++ shouldTerms ++ phraseToks)
       .distinct.sorted.filterNot(negTerms.contains)
     if (mustTerms.isEmpty && phraseToks.isEmpty)
@@ -1811,27 +1737,25 @@ final class Searcher(spark: SparkSession, root: String, cacheHot: Boolean = fals
     if (phraseToks.nonEmpty)
       require(hasPositions,
         s"bool query with a phrase clause needs the positions sidecar at $root")
-    val local = dictRows((scoring ++ negTerms).distinct.sorted)
-    if ((mustTerms ++ phraseToks).exists(t => !local.get(t).exists(_.df > 0L)))
-      return empty
-    val liveScoring = scoring.filter(t => local.get(t).exists(_.df > 0L))
-    val idfByTerm = liveScoring.map(t => t -> Bm25.idf(local(t).df, stats.nDocs)).toMap
+    val p = plan(scoring ++ negTerms)
     val gateTerms = (mustTerms ++ phraseToks).distinct
-    val buckets: Set[Int] = gateTerms.map(t => local(t).buckets.toSet).reduce(_ intersect _)
-    if (buckets.isEmpty) return empty
-    val negLive = negTerms.filter(t => local.get(t).exists(_.df > 0L))
-
-    val avgdl = stats.avgdl
+    if (!gateTerms.forall(p.live)) return noHits
+    val liveScoring = scoring.filter(p.live)
+    val idfByTerm = p.idfByTerm(liveScoring)
+    val buckets = p.candidates(gateTerms, gateTerms.length)
+    if (buckets.isEmpty) return noHits
+    val negLive = negTerms.filter(p.posts)
+    val avgdl = p.g.avgdl
     val hits =
       if (phraseToks.isEmpty) {
         val scanTerms = (liveScoring ++ negLive).distinct
-        perBucket(segments, Searcher.bucketTerms(local, scanTerms, buckets)) { (_, rows, dl) =>
+        perBucket(segments, Searcher.bucketTerms(p.local, scanTerms, buckets)) { (_, rows, dl) =>
           Searcher.boolBucket(Searcher.decoder(rows), mustTerms, None, negLive, liveScoring,
             idfByTerm, dl, avgdl, k)
         }
       } else {
         val scanTerms = (liveScoring ++ mustTerms ++ negLive ++ phraseToks).distinct
-        perBucket(positions, Searcher.bucketTerms(local, scanTerms, buckets)) { (_, rows, dl) =>
+        perBucket(positions, Searcher.bucketTerms(p.local, scanTerms, buckets)) { (_, rows, dl) =>
           val byTerm = Searcher.decodePositions(rows)
           val phraseDocs = Searcher.phraseHitsInBucket(phraseToks, byTerm).map(_._1).toArray
           java.util.Arrays.sort(phraseDocs)
@@ -1856,12 +1780,11 @@ final class Searcher(spark: SparkSession, root: String, cacheHot: Boolean = fals
   def searchMany(
       queries: Seq[(Int, String)],
       k: Int,
-      globalStats: Option[GlobalStats] = None,
       counters: Option[SearchCounters] = None,
       taatBudgetBytes: Long = Searcher.DefaultTaatBudgetBytes,
       allow: Option[Long => Boolean] = None): DataFrame =
     Searcher.finishMany(
-      searchManyBuckets(queries, k, globalStats, counters, taatBudgetBytes, allow), k)
+      searchManyBuckets(queries, k, None, counters, taatBudgetBytes, allow), k)
 
   /** Per-bucket partial results of a batched search: (query_id, doc_id,
     * score), each bucket's top-k per query, NOT yet globally merged.
@@ -1876,38 +1799,17 @@ final class Searcher(spark: SparkSession, root: String, cacheHot: Boolean = fals
       counters: Option[SearchCounters] = None,
       taatBudgetBytes: Long = Searcher.DefaultTaatBudgetBytes,
       allow: Option[Long => Boolean] = None): DataFrame = {
-    val qTerms: Seq[(Int, Array[String])] =
-      queries.map { case (id, q) => (id, Tokenizer.tokenize(q).distinct.sorted) }
-    val allTerms = qTerms.flatMap(_._2).distinct.sorted
-    if (allTerms.isEmpty)
-      return spark.emptyDataset[(Int, Long, Double)].toDF("query_id", "doc_id", "score")
-    val localRows = dictRows(allTerms)
-    val g = globalStats.getOrElse(
-      GlobalStats(stats.nDocs, stats.avgdl, localRows.map { case (t, d) => t -> d.df }))
-    val idfByTerm = allTerms
-      .filter(t => g.dfByTerm.getOrElse(t, 0L) > 0L)
-      .map(t => t -> Bm25.idf(g.dfByTerm(t), g.nDocs)).toMap
-    // a query term contributes in THIS shard iff it is globally live AND
-    // locally present (a globally-known term with no local postings adds
-    // exactly nothing here — other generations score it)
-    val livePerQuery: Seq[(Int, Array[String])] = qTerms
-      .map { case (id, ts) =>
-        (id, ts.filter(t => idfByTerm.contains(t) && localRows.contains(t)))
-      }
-      .filter(_._2.nonEmpty)
-    if (livePerQuery.isEmpty)
-      return spark.emptyDataset[(Int, Long, Double)].toDF("query_id", "doc_id", "score")
-    val liveTerms = livePerQuery.flatMap(_._2).distinct.sorted
-
-    val qs = livePerQuery.toArray
-    val avgdl = g.avgdl
-    // stored block-max tf-norms came from THIS shard's avgdl; scale UBs
-    // for the WAND fallback exactly as the single-query path does
-    val ubScale = math.max(1.0, g.avgdl / stats.avgdl)
+    val qTerms = queries.map { case (id, q) => (id, Tokenizer.tokenize(q).distinct.sorted) }
+    val p = plan(qTerms.flatMap(_._2), globalStats)
+    val qs = qTerms.map { case (id, ts) => (id, ts.filter(p.live)) }.filter(_._2.nonEmpty).toArray
+    if (qs.isEmpty) return noPartials
+    val liveTerms = qs.flatMap(_._2).distinct.sorted
+    val idfByTerm = p.idfByTerm(liveTerms)
+    val (avgdl, ubScale) = (p.g.avgdl, p.ubScale)
     val countersLocal = counters.orNull
     val allowB = broadcastAllow(allow)
 
-    perBucket(segments, Searcher.bucketTerms(localRows, liveTerms)) { (_, posts, dl) =>
+    perBucket(segments, Searcher.bucketTerms(p.local, liveTerms)) { (_, posts, dl) =>
       // term-at-a-time: decode each term once per bucket task AND
       // traverse it once for the whole batch (see Searcher.taatBucket
       // — bit-identical to the per-query WAND loop, EngineSpec-pinned)
@@ -1947,12 +1849,58 @@ object Searcher {
     PosRow(r("term"), bucket, r("df"), r[Array[PointRow]]("blocks")
       .map(b => PosBlock(b("first"), b("last"), b("count"), b("bytes"))))
 
+  /** A query plan ([[Searcher.plan]]): the dictionary rows of the query
+    * terms in this index, the statistics `g` they score with, and the
+    * rules every scoring mode plans by.
+    */
+  private[index] final case class Plan(local: Map[String, DictRow], g: GlobalStats,
+      localAvgdl: Double) {
+    /** The term has postings in this index. */
+    def posts(t: String): Boolean = local.get(t).exists(_.df > 0L)
+
+    /** The term scores here: it posts in this index and is globally live
+      * (a globally-known term without local postings adds exactly nothing
+      * here — the generations holding it score it).
+      */
+    def live(t: String): Boolean = posts(t) && g.dfByTerm.getOrElse(t, 0L) > 0L
+
+    /** The idf of a term group — one term, or a synonym group whose df′
+      * is the MAX member df.
+      */
+    def idf(group: Seq[String]): Double = Bm25.idf(group.iterator.map(g.dfByTerm).max, g.nDocs)
+
+    def idfByTerm(terms: collection.Seq[String]): Map[String, Double] =
+      terms.iterator.map(t => t -> idf(Seq(t))).toMap
+
+    /** Stored block-max tf-norms were computed with THIS index's avgdl; a
+      * larger global avgdl raises tfNorm by at most avgdl_new/avgdl_old —
+      * scaling the UBs keeps WAND pruning sound (never under-estimates).
+      */
+    def ubScale: Double = math.max(1.0, g.avgdl / localAvgdl)
+
+    /** The candidate buckets of a query with live terms `ts`: those where
+      * at least `m` of them post (m = 1 is the union of their bucket
+      * lists, m = ts.length the intersection) — a doc elsewhere cannot
+      * hold m of them.
+      */
+    def candidates(ts: collection.Seq[String], m: Int): Set[Int] =
+      ts.flatMap(t => local(t).buckets).groupMapReduce(identity)(_ => 1)(_ + _)
+        .collect { case (b, c) if c >= m => b }.toSet
+  }
+
+  /** A conjunctive batch as minimum-should-match at m = n, each query's
+    * distinct-token count; a token-less query matches nothing and drops.
+    */
+  private[index] def conjunctive(queries: Seq[(Int, String)]): Seq[(Int, String, Int)] =
+    queries.map { case (id, q) => (id, q, Tokenizer.tokenize(q).distinct.length) }
+      .filter(_._3 > 0)
+
   /** For each bucket the dictionary lists one of `terms` in (and `keep`
     * accepts), the terms it lists there.
     */
-  private[index] def bucketTerms(dict: Map[String, DictRow], terms: Seq[String],
+  private[index] def bucketTerms(dict: Map[String, DictRow], terms: collection.Seq[String],
       keep: Int => Boolean = _ => true): Map[Int, Seq[String]] =
-    terms.distinct
+    terms.distinct.toSeq
       .flatMap(t => dict.get(t).toSeq.flatMap(_.buckets.iterator.filter(keep).map(_ -> t)))
       .groupMap(_._1)(_._2)
 
@@ -2050,9 +1998,11 @@ object Searcher {
 
   /** The distinct docIds found in at least `m` of the ascending arrays,
     * ascending: the union at m = 1, the minimum-should-match gate at
-    * m > 1.
+    * m > 1, and at m = arrays.length the intersection, probed from the
+    * sparsest array ([[intersectSorted]]).
     */
   private[index] def atLeast(arrays: Seq[Array[Long]], m: Int): Array[Long] = {
+    if (m == arrays.length) return intersectSorted(arrays)
     val all = concatSorted(arrays)
     val out = Array.newBuilder[Long]
     var i = 0

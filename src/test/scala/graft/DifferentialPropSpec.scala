@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions.col
 import org.scalacheck.Gen
 
 import graft.analyze.Tokenizer
-import graft.index.{DictRow, IndexBuilder, PostingRow, Searcher}
+import graft.index.{DictRow, IndexBuilder, MultiSearcher, PostingRow, Searcher}
 import graft.oracle.ExactScorer
 
 /** Randomized differential tests of the per-bucket seam over generated
@@ -22,7 +22,10 @@ import graft.oracle.ExactScorer
   * `searchHot`, unit-weight `searchBoosted` and singleton-group
   * `searchSynonym` ≡ `search`; and the gated modes (conjunctive, bool
   * must, minimum-should-match at every threshold) ≡ the top-k of
-  * `scoreAllMatched` (exact WAND) restricted to their gate.
+  * `scoreAllMatched` (exact WAND) restricted to their gate; and a
+  * [[MultiSearcher]] over the corpus split into 2–3 generations ≡ one
+  * index over the whole corpus for `search`, `searchMany` and
+  * `searchConjunctiveMany`.
   * (Plain scalacheck generators sampled in a loop, as in CodecSpec; N is
   * small to keep the suite's runtime bounded.)
   */
@@ -63,9 +66,32 @@ class DifferentialPropSpec extends SparkSpec {
       if (toks.reduce(_ intersect _).nonEmpty) Some("term in every doc") else None).flatten
   }
 
-  private def build(c: Case): String = {
+  /** A generated corpus cut into 2–3 generations with disjoint doc-id
+    * ranges at random cut points. One doc of one generation gains the
+    * term `solo`, which therefore posts in that generation only, and two
+    * queries join the case's own: `solo` with a term of that doc, and
+    * the dictionary-absent `absent` with a vocabulary term.
+    */
+  private val splitGen: Gen[(Case, Seq[IndexedSeq[(Long, String)]])] = for {
+    c <- caseGen.suchThat(_.docs.size >= 2)
+    n = c.docs.size
+    cuts <- Gen.choose(1, 2).flatMap(g => Gen.pick(math.min(g, n - 1), 1 until n)).map(_.sorted)
+    soloDoc <- Gen.choose(0, n - 1)
+    mate <- Gen.oneOf(Tokenizer.tokenize(c.docs(soloDoc)._2).toSeq :+ "solo")
+    other <- Gen.oneOf(vocab)
+  } yield {
+    val docs = c.docs.updated(soloDoc, (soloDoc.toLong, s"${c.docs(soloDoc)._2} solo"))
+    val qs = c.queries ++ Seq(s"solo $mate", s"absent $other").zipWithIndex
+      .map { case (q, i) => (c.queries.size + i, q) }
+    val bounds = 0 +: cuts.toSeq :+ n
+    (c.copy(docs = docs, queries = qs),
+      bounds.zip(bounds.tail).map { case (from, until) => docs.slice(from, until) })
+  }
+
+  /** An index over `docs` in the case's bucket geometry. */
+  private def build(c: Case, docs: Seq[(Long, String)]): String = {
     val root = Files.createTempDirectory("graft-diff-").toString
-    val corpus = c.docs.toDF("doc_id", "content")
+    val corpus = docs.toDF("doc_id", "content")
     c.width match {
       case One => IndexBuilder.build(spark, corpus, root, fixedBucketSize = 1L)
       case Wide => IndexBuilder.build(spark, corpus, root, fixedBucketSize = c.docs.size + 5L)
@@ -94,7 +120,7 @@ class DifferentialPropSpec extends SparkSpec {
     (1 to 9).map { _ =>
       val c = caseGen.pureApply(Gen.Parameters.default, seed)
       seed = seed.next
-      (c, build(c))
+      (c, build(c, c.docs))
     }
   }
 
@@ -177,6 +203,35 @@ class DifferentialPropSpec extends SparkSpec {
         }
       }
     }
+  }
+
+  test("multi-generation search, searchMany and conjunctive ≡ one index over the union") {
+    var seed = org.scalacheck.rng.Seed(20261019L)
+    val seen = Set.newBuilder[String]
+    (1 to 5).foreach { run =>
+      val (c, gens) = splitGen.pureApply(Gen.Parameters.default, seed)
+      seed = seed.next
+      val single = new Searcher(spark, build(c, c.docs))
+      val multi = new MultiSearcher(spark, gens.map(build(c, _)))
+      val genTerms = gens.map(_.flatMap { case (_, d) => Tokenizer.tokenize(d) }.toSet)
+      val queryTerms = c.queries.flatMap { case (_, q) => Tokenizer.tokenize(q) }
+      seen += s"${gens.size} generations"
+      if (queryTerms.exists(t => genTerms.count(_(t)) == 1)) seen += "term in one generation"
+      if (queryTerms.exists(t => !genTerms.exists(_(t)))) seen += "dictionary-absent term"
+      val ctx = s"run $run (${gens.map(_.size).mkString("+")} docs, ${c.width}) k=${c.k}"
+      c.queries.foreach { case (_, q) =>
+        assert(hits(multi.search(q, c.k)) == hits(single.search(q, c.k)), s"search '$q': $ctx")
+      }
+      assert(ranked(multi.searchMany(c.queries, c.k)) == ranked(single.searchMany(c.queries, c.k)),
+        s"searchMany: $ctx")
+      val conj = ranked(multi.searchConjunctiveMany(c.queries, c.k))
+      assert(conj == ranked(single.searchConjunctiveMany(c.queries, c.k)),
+        s"searchConjunctiveMany: $ctx")
+      if (conj.nonEmpty) seen += "conjunctive hit"
+    }
+    val missed = Set("2 generations", "3 generations", "term in one generation",
+      "dictionary-absent term", "conjunctive hit") -- seen.result()
+    assert(missed.isEmpty, s"cases never generated: $missed")
   }
 }
 

@@ -114,6 +114,23 @@ class PlanSpec extends SparkSpec {
     assert(plan.contains("TakeOrderedAndProject"), s"no TakeOrderedAndProject in:\n$plan")
   }
 
+  test("multi-generation search is ONE top-k merge over every generation's buckets") {
+    def generation(from: Long, until: Long): String = {
+      val root = Files.createTempDirectory("graft-plan5-").toString
+      val indexed = spark.range(from, until).map(i => (i, CorpusGen.genDoc(42L, i).content))
+        .toDF("doc_id", "content")
+      IndexBuilder.build(spark, indexed, root, targetBuckets = 2)
+      root
+    }
+    val plan = planOf(new graft.index.MultiSearcher(spark, Seq(generation(0, 50),
+      generation(50, 100))).search("def id0", 10))
+    // the generations' per-bucket hits union under the merge one index
+    // runs: no per-generation top-k beneath it, nothing shuffled
+    assert(!plan.contains("Exchange"), s"exchange in:\n$plan")
+    assert("TakeOrderedAndProject".r.findAllMatchIn(plan).size == 1,
+      s"not exactly one top-k merge in:\n$plan")
+  }
+
   test("hot terms are bucket-salted: posting-row size is bounded by bucket width") {
     // a term in EVERY doc ("def" is in every generated doc) must be split
     // into one posting row per docId-bucket — no task ever materializes a
