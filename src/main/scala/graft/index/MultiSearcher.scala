@@ -25,45 +25,44 @@ final class MultiSearcher(spark: SparkSession, roots: Seq[String]) {
 
   val searchers: Seq[Searcher] = roots.map(new Searcher(spark, _))
 
-  /** Run one thunk per shard on driver threads and collect in shard
-    * order: each shard's planning is driver-side dictionary point reads
-    * (no Spark job) and the construction of its lazy per-bucket frame,
-    * so running them concurrently overlaps their Parquet footer and page
-    * reads (results are order-preserved, hence identical to the
-    * sequential map).
+  /** `f` of every shard, run on driver threads and collected in shard
+    * order: a shard's planning is driver-side point reads (no Spark job)
+    * and the construction of its lazy per-bucket frame, so running them
+    * concurrently overlaps their Parquet footer and page reads.
     */
-  private def perShard[T](fs: Seq[() => T]): Seq[T] =
-    IndexBuilder.awaitAll(fs)
+  private def perShard[T](f: Searcher => T): Seq[T] =
+    IndexBuilder.awaitAll(searchers.map(se => () => f(se)))
 
   val nDocs: Long = searchers.map(_.stats.nDocs).sum
   private val totalTokens: Long = searchers.map(_.stats.totalTokens).sum
   val avgdl: Double = totalTokens.toDouble / nDocs.toDouble
 
   /** Global df per query term = sum of per-generation dfs. */
-  def globalStatsFor(terms: Seq[String]): GlobalStats = {
-    val df = perShard(searchers.map(se => () => se.termDfs(terms)))
-      .foldLeft(Map.empty[String, Long]) { (acc, m) =>
-        m.foldLeft(acc) { case (a, (t, d)) => a.updated(t, a.getOrElse(t, 0L) + d) }
-      }
-    GlobalStats(nDocs, avgdl, df)
-  }
+  def globalStatsFor(terms: Seq[String]): GlobalStats = globalStats(perShard(_.dictRows(terms)))
+
+  private def globalStats(rows: Seq[Map[String, DictRow]]) =
+    GlobalStats(nDocs, avgdl, rows.flatten.groupMapReduce(_._1)(_._2.df)(_ + _))
 
   /** The union of every shard's frame. Generations hold disjoint doc-id
     * spaces, so a union of per-shard answers loses and doubles nothing.
     */
   private def union(frame: Searcher => DataFrame): DataFrame =
-    perShard(searchers.map(se => () => frame(se))).reduce(_ union _)
+    perShard(frame).reduce(_ union _)
 
-  /** The one scatter of every scoring mode: global stats over the terms
-    * of `texts`, computed once; every shard's per-bucket partials scored
-    * with them; and ONE `merge` of their union — the merge one index
-    * runs, since the top-k of a union is the top-k of the per-bucket
-    * top-ks in the (score desc, doc_id asc) total order.
+  /** The one scatter of every scoring mode: each shard's dictionary rows
+    * of the terms of `texts`, read once, and the global stats summed from
+    * them; every shard's per-bucket partials planned with its own rows
+    * and those stats; and ONE `merge` of their union — the merge one
+    * index runs, since the top-k of a union is the top-k of the
+    * per-bucket top-ks in the (score desc, doc_id asc) total order.
     */
   private def scatter(texts: Seq[String], merge: DataFrame => DataFrame)(
-      partials: (Searcher, Option[GlobalStats]) => DataFrame): DataFrame = {
-    val g = Some(globalStatsFor(texts.flatMap(Tokenizer.tokenize).distinct.sorted))
-    merge(union(partials(_, g)))
+      partials: (Searcher, Option[Searcher.Plan]) => DataFrame): DataFrame = {
+    val rows = perShard(_.dictRows(texts.flatMap(Tokenizer.tokenize).distinct.sorted))
+    val g = globalStats(rows)
+    val plans = searchers.zip(rows)
+      .map { case (se, local) => se -> Searcher.Plan(local, g, se.stats.avgdl) }.toMap
+    merge(union(se => partials(se, plans.get(se))))
   }
 
   def search(

@@ -82,6 +82,15 @@ private[index] final class ParquetPointReader[K] private (
     })(row)
   }
 
+  /** Every row whose key k has `lo ≤ k < hiExclusive`, mapped through
+    * `row`, in file order: footer ranges choose the files, and the page
+    * index and a `gtEq/lt` record filter narrow the rows inside them.
+    */
+  def readRange[T](lo: K, hiExclusive: K)(row: PointRow => T): Seq[T] = {
+    val filter = FilterCompat.get(key.range(keyCol, lo, hiExclusive))
+    scan(files.iterator.filter(_.overlaps(lo, hiExclusive)).map(_ -> filter))(row)
+  }
+
   /** Every row of the table, mapped through `row`, in file order. */
   def readAll[T](row: PointRow => T): Seq[T] =
     scan(files.iterator.map(_ -> FilterCompat.NOOP))(row)
@@ -162,6 +171,9 @@ private[index] object ParquetPointReader {
       implicit key: PointKey[K]) {
     def covers(k: K): Boolean =
       range.forall { case (lo, hi) => key.compare(lo, k) <= 0 && key.compare(k, hi) <= 0 }
+    def overlaps(lo: K, hiExclusive: K): Boolean =
+      range.forall { case (min, max) =>
+        key.compare(min, hiExclusive) < 0 && key.compare(lo, max) <= 0 }
     def status: FileStatus = new FileStatus(length, false, 0, 0L, 0L, new Path(path))
   }
 
@@ -300,32 +312,42 @@ private[index] final class PointRow(names: Map[String, Int], values: Array[Any])
 }
 
 /** How a key type maps onto a Parquet key column: its statistics values,
-  * the column's sort order, and the `IN` predicate.
+  * the column's sort order, and the `IN` and range predicates over the
+  * column's Parquet values `C`.
   */
-private[index] sealed trait PointKey[K] extends Serializable {
+private[index] sealed abstract class PointKey[K] extends Serializable {
+  type C <: Comparable[C]
+  type Col = Operators.Column[C] with Operators.SupportsLtGt
   def fromStat(v: Any): K
   def compare(a: K, b: K): Int
-  def predicate(col: String, keys: Seq[K]): FilterPredicate
+  protected def column(col: String): Col
+  protected def value(k: K): C
+
+  final def predicate(col: String, keys: Seq[K]): FilterPredicate =
+    FilterApi.in[C, Col](column(col), keys.map(value).toSet.asJava)
+  final def range(col: String, lo: K, hiExclusive: K): FilterPredicate =
+    FilterApi.and(FilterApi.gtEq[C, Col](column(col), value(lo)),
+      FilterApi.lt[C, Col](column(col), value(hiExclusive)))
 }
 
 private[index] object PointKey {
   implicit object IntKey extends PointKey[Int] {
+    type C = Integer
     def fromStat(v: Any): Int = v.asInstanceOf[Integer].intValue
     def compare(a: Int, b: Int): Int = Integer.compare(a, b)
-    def predicate(col: String, keys: Seq[Int]): FilterPredicate =
-      FilterApi.in[Integer, Operators.IntColumn](FilterApi.intColumn(col),
-        keys.map(Integer.valueOf).toSet.asJava)
+    protected def column(col: String) = FilterApi.intColumn(col)
+    protected def value(k: Int): Integer = Integer.valueOf(k)
   }
 
   /** Parquet orders strings by unsigned UTF-8 bytes, which differs from
     * `String.compareTo` past the Basic Multilingual Plane.
     */
   implicit object StringKey extends PointKey[String] {
+    type C = Binary
     def fromStat(v: Any): String = v.asInstanceOf[Binary].toStringUsingUTF8
     def compare(a: String, b: String): Int =
       java.util.Arrays.compareUnsigned(a.getBytes(UTF_8), b.getBytes(UTF_8))
-    def predicate(col: String, keys: Seq[String]): FilterPredicate =
-      FilterApi.in[Binary, Operators.BinaryColumn](FilterApi.binaryColumn(col),
-        keys.map(Binary.fromString).toSet.asJava)
+    protected def column(col: String) = FilterApi.binaryColumn(col)
+    protected def value(k: String): Binary = Binary.fromString(k)
   }
 }

@@ -72,13 +72,14 @@ final class Searcher(spark: SparkSession, root: String, cacheHot: Boolean = fals
   val stats: IndexStats = Meta.readStats(root)
 
   // Default: every dictionary/doclen access is a PRUNED Parquet read —
-  // a footer-indexed point read of the range-partitioned term-sorted
-  // dictionary touches one file and a few pages, and at 10¹² docs the
-  // dictionary never needs to fit in RAM. `cacheHot = true` is the
-  // opt-in repeated-query serving mode (the usearch `view`/in-RAM
-  // analog): the dictionary loads ONCE into a driver-side map and the
-  // norms pin in executor memory. For bounded indexes served hot, not
-  // the scale default.
+  // a footer-indexed point or key-range read of the range-partitioned
+  // term-sorted dictionary touches one file and a few pages, and at 10¹²
+  // docs the dictionary never needs to fit in RAM. `cacheHot = true` is
+  // the opt-in repeated-query serving mode (the usearch `view`/in-RAM
+  // analog): the dictionary loads ONCE into a driver-side map, which
+  // [[dictRows]] and [[expand]] answer from, and [[searchHot]] keeps norms
+  // and postings resident on the driver. For bounded indexes served hot,
+  // not the scale default.
   private lazy val dictDS = {
     val raw = spark.read.parquet(layout.dict)
     if (!raw.columns.contains("buckets")) throw oldDictFormat
@@ -94,10 +95,7 @@ final class Searcher(spark: SparkSession, root: String, cacheHot: Boolean = fals
   // readers: a hot fill runs no Spark job
   private lazy val hotDict: Map[String, DictRow] =
     dictReader.readAll(Searcher.dictRow).map(d => d.term -> d).toMap
-  private lazy val doclensDS = {
-    val d = spark.read.parquet(layout.doclens).as[DocLenRow]
-    if (cacheHot) { val c = d.cache(); c.count(); c } else d
-  }
+  private lazy val doclensDS = spark.read.parquet(layout.doclens).as[DocLenRow]
 
   // ONE file listing per Searcher for every table: index roots are
   // immutable once their stages commit (merges write new roots;
@@ -118,8 +116,7 @@ final class Searcher(spark: SparkSession, root: String, cacheHot: Boolean = fals
   @volatile private var positionsRel: Dataset[PosRow] = _
   private def positionsDS: Dataset[PosRow] = {
     if (positionsRel == null) {
-      require(hasPositions,
-        s"index at $root has no positions sidecar — run IndexBuilder.buildPositions first")
+      requirePositions()
       positionsRel = spark.read.parquet(layout.positions).as[PosRow]
     }
     positionsRel
@@ -458,17 +455,58 @@ final class Searcher(spark: SparkSession, root: String, cacheHot: Boolean = fals
   }
 
   /** The one query planner of every scoring mode: the [[dictRows]] point
-    * read of `terms` and the statistics to score them with — the
-    * injected `globalStats` when this index is one generation of a
-    * [[MultiSearcher]] (every shard must score with the same N/df/avgdl,
-    * or the merged ranking is meaningless), else this index's own.
+    * read of `terms` and the statistics to score them with, this index's
+    * own — or the `shard` plan a [[MultiSearcher]] injects when this index
+    * is one of its generations: this index's rows of the query terms,
+    * read once by the scatter, with the global N/df/avgdl every shard
+    * must score with, or the merged ranking is meaningless.
     */
   private def plan(terms: collection.Seq[String],
-      globalStats: Option[GlobalStats] = None): Searcher.Plan = {
+      shard: Option[Searcher.Plan] = None): Searcher.Plan = shard.getOrElse {
     val local = dictRows(terms.distinct.sorted.toSeq)
-    Searcher.Plan(local, globalStats.getOrElse(
-      GlobalStats(stats.nDocs, stats.avgdl, local.map { case (t, d) => t -> d.df })), stats.avgdl)
+    Searcher.Plan(local,
+      GlobalStats(stats.nDocs, stats.avgdl, local.map { case (t, d) => t -> d.df }), stats.avgdl)
   }
+
+  /** The one dictionary expansion of every term-expanding mode: the
+    * `(term, df)` pairs that start with the literal `head` and pass
+    * `accept`, in term order, at most `limit` of them — from `hotDict`
+    * under `cacheHot`; else, for a non-empty `head`, from a key-range read
+    * of the term-sorted dictionary on the driver (no Spark job); else
+    * (a leading `*`, a regexp without a literal head, fuzzy) from one
+    * dictionary scan filtered, ordered and limited on the executors, so
+    * `accept` must not capture the Searcher.
+    */
+  private def expand(head: String, accept: String => Boolean,
+      limit: Int): Seq[(String, Long)] = {
+    def first(ts: Iterator[(String, Long)]) =
+      ts.filter(t => accept(t._1)).toSeq.sortBy(_._1).take(limit)
+    if (cacheHot)
+      first(hotDict.valuesIterator.filter(_.term.startsWith(head)).map(d => d.term -> d.df))
+    else Searcher.prefixEnd(head) match {
+      case Some(hi) =>
+        first(dictReader.readRange(head, hi)(r => (r[String]("term"), r[Long]("df"))).iterator)
+      case None =>
+        val matched = dictDS.select($"term", $"df").as[(String, Long)]
+          .filter(t => t._1.startsWith(head) && accept(t._1))
+        (if (limit == Int.MaxValue) matched else matched.orderBy($"term").limit(limit))
+          .collect().toSeq.sortBy(_._1)
+    }
+  }
+
+  /** [[expand]] under the loud `maxExpansion` bound: it reads at most one
+    * term past the bound and fails if there is one.
+    */
+  private def expandAtMost(what: String, head: String, accept: String => Boolean,
+      maxExpansion: Int): Seq[String] = {
+    val terms = expand(head, accept, math.max(maxExpansion, maxExpansion + 1)).map(_._1)
+    if (terms.size > maxExpansion) throw Searcher.tooWide(what, maxExpansion)
+    terms
+  }
+
+  /** The expansion scored as one disjunctive BM25 query by [[search]]. */
+  private def searchExpansion(terms: Seq[String], k: Int): DataFrame =
+    if (terms.isEmpty) noHits else search(terms.mkString(" "), k)
 
   private def noHits = spark.emptyDataset[Hit].toDF("doc_id", "score")
   private def noPartials = spark.emptyDataset[(Int, Long, Double)].toDF("query_id", "doc_id", "score")
@@ -533,6 +571,9 @@ final class Searcher(spark: SparkSession, root: String, cacheHot: Boolean = fals
   def hasPositions: Boolean =
     java.nio.file.Files.exists(layout.statusFile("positions"))
 
+  private def requirePositions(): Unit = require(hasPositions,
+    s"index at $root has no positions sidecar — run IndexBuilder.buildPositions first")
+
   /** Index-only PHRASE search, batched: for each (phrase_id, phrase),
     * every document containing the phrase as a verbatim token sequence,
     * with its occurrence count — answered from the positions sidecar
@@ -572,8 +613,7 @@ final class Searcher(spark: SparkSession, root: String, cacheHot: Boolean = fals
   private def positionalMany[Q, U: Encoder](qs: Seq[(Int, Array[String], Q)])(
       hits: (Int, Array[String], Q, Map[String, graft.codec.PosPostings]) => Iterator[U])
       : Dataset[U] = {
-    require(hasPositions,
-      s"index at $root has no positions sidecar — run IndexBuilder.buildPositions first")
+    requirePositions()
     val p = plan(qs.flatMap(_._2))
     val live = qs.filter { case (_, ts, _) => ts.nonEmpty && ts.forall(p.live) }
     val queryBuckets: Map[Int, Set[Int]] =
@@ -752,33 +792,25 @@ final class Searcher(spark: SparkSession, root: String, cacheHot: Boolean = fals
     * equals "count of head occurrences whose next token has the prefix"
     * — the definition a SQL oracle checks directly. INTEGERS only.
     *
-    * Plan shape: ONE startsWith-pruned dictionary read expands the
-    * prefix (loudly bounded by maxExpansion, the [[searchPrefix]]
-    * contract); the expansions ride [[phraseMany]]'s ONE batched
-    * positions sweep (decode-once per bucket across all expansions);
-    * one partial-aggregated sum per doc.
+    * Plan shape: the prefix expands by a key-range read on the driver
+    * ([[expand]], no Spark job; loudly bounded by maxExpansion, the
+    * [[searchPrefix]] contract); the expansions ride [[phraseMany]]'s ONE
+    * batched positions sweep (decode-once per bucket across all
+    * expansions); one partial-aggregated sum per doc.
     *
     * Returns DataFrame(doc_id: Long, phrase_tf: Long) ordered by doc_id.
     */
   def phrasePrefix(head: String, prefix: String, maxExpansion: Int = 1024): DataFrame = {
-    require(hasPositions,
-      s"index at $root has no positions sidecar — run IndexBuilder.buildPositions first")
+    requirePositions()
     val empty = spark.emptyDataset[(Long, Long)].toDF("doc_id", "phrase_tf")
     val headTs = Tokenizer.tokenize(head)
     require(headTs.nonEmpty, s"phrase-prefix head '$head' normalizes to nothing")
     val p = Tokenizer.tokenize(prefix)
     require(p.length == 1,
       s"phrase-prefix suffix must normalize to exactly one token, got '$prefix'")
-    val exps = dictDS.where($"term".startsWith(p.head))
-      .select($"term").orderBy($"term")
-      .limit(maxExpansion + 1).collect().map(_.getString(0)).toSeq
-    require(exps.length <= maxExpansion,
-      s"prefix '$prefix' expands past maxExpansion=$maxExpansion — refine the prefix")
+    val exps = expandAtMost(s"prefix '$prefix'", p.head, _ => true, maxExpansion)
     if (exps.isEmpty) return empty
-    val phrases = exps.zipWithIndex.map { case (e, i) =>
-      (i, (headTs :+ e).mkString(" "))
-    }
-    phraseMany(phrases)
+    phraseMany(exps.zipWithIndex.map { case (e, i) => (i, (headTs :+ e).mkString(" ")) })
       .groupBy(col("doc_id")).agg(sum(col("phrase_tf")).as("phrase_tf"))
       .orderBy(col("doc_id"))
   }
@@ -790,25 +822,18 @@ final class Searcher(spark: SparkSession, root: String, cacheHot: Boolean = fals
     * ascending term order with their document frequencies. INTEGERS +
     * strings only.
     *
-    * Scale shape: one startsWith-pruned dictionary read per prefix (the
-    * dictionary is term-range-partitioned, so the prefix filter prunes
-    * files), bounded top-n each, a union of |prefixes| tiny frames. The
-    * corpus and the postings are never touched.
+    * Scale shape: one key-range read of the dictionary per prefix on the
+    * driver ([[expand]]), the first n of each, sorted into a local frame:
+    * collecting it runs no Spark job. The corpus and the postings are
+    * never touched.
     *
     * Returns DataFrame(prefix_id: Int, term: String, df: Long) ordered
     * (prefix_id, term); an expansion-empty prefix contributes no rows.
     */
-  def termsEnum(prefixes: Seq[(Int, String)], n: Int): DataFrame = {
-    val empty = spark.emptyDataset[(Int, String, Long)]
+  def termsEnum(prefixes: Seq[(Int, String)], n: Int): DataFrame =
+    prefixes.flatMap { case (id, p) => expand(p, _ => true, n).map { case (t, df) => (id, t, df) } }
+      .sortBy(r => (r._1, r._2))
       .toDF("prefix_id", "term", "df")
-    if (prefixes.isEmpty) return empty
-    prefixes.map { case (id, p) =>
-      dictDS.where($"term".startsWith(p))
-        .select(lit(id).as("prefix_id"), $"term", $"df")
-        .orderBy($"term").limit(n)
-    }.reduce(_ unionAll _)
-      .orderBy(col("prefix_id"), col("term"))
-  }
 
   /** Index-only DOC-LENGTH PERCENTILES (the index-stats readout a corpus
     * census runs; the reference's per-level stats direction,
@@ -874,8 +899,7 @@ final class Searcher(spark: SparkSession, root: String, cacheHot: Boolean = fals
     * and contributes nothing (inner join).
     */
   def followersMany(seeds: Seq[String], n: Int): DataFrame = {
-    require(hasPositions,
-      s"index at $root has no positions sidecar — run IndexBuilder.buildPositions first")
+    requirePositions()
     val empty = spark.emptyDataset[(String, Int, String, Long)]
       .toDF("seed", "rank", "follower", "n_pairs")
     val norm = seeds.flatMap(Tokenizer.tokenize).distinct.sorted
@@ -1020,12 +1044,12 @@ final class Searcher(spark: SparkSession, root: String, cacheHot: Boolean = fals
   private[index] def minMatchManyBuckets(
       queries: Seq[(Int, String, Int)],
       k: Int,
-      globalStats: Option[GlobalStats] = None): DataFrame = {
+      shard: Option[Searcher.Plan] = None): DataFrame = {
     queries.foreach { case (id, _, m) =>
       require(m >= 1, s"minimum_should_match must be >= 1, got $m (query $id)")
     }
     val qTerms = queries.map { case (id, q, m) => (id, Tokenizer.tokenize(q).distinct.sorted, m) }
-    val p = plan(qTerms.flatMap(_._2), globalStats)
+    val p = plan(qTerms.flatMap(_._2), shard)
     // optional-clause rule: absent terms drop; a query with < m live
     // terms cannot match anything — dead at planning
     val qs = qTerms.map { case (id, ts, m) => (id, ts.filter(p.live), m) }
@@ -1055,66 +1079,40 @@ final class Searcher(spark: SparkSession, root: String, cacheHot: Boolean = fals
   }
 
   /** PREFIX-expanded top-k search (the dictionary-driven `term*` wildcard
-    * query): expand the prefix against the term dictionary — ONE pruned
-    * Parquet read, `StringStartsWith` pushed to the scan over the sorted
-    * term ranges — then score the expansion as a disjunctive BM25 query
-    * through the ordinary [[search]] path (each matched term weighted by
-    * its own idf). `maxExpansion` bounds the planning fan-out loudly: a
-    * one-letter prefix over a web-scale dictionary is a user error, not
-    * a silent full scan.
+    * query): expand the prefix by a key-range read of the dictionary on
+    * the driver ([[expand]], no Spark job), then score the expansion as a
+    * disjunctive BM25 query through [[search]] (each matched term weighted
+    * by its own idf). `maxExpansion` bounds the fan-out loudly: a
+    * one-letter prefix over a web-scale dictionary is a user error, not a
+    * silent full scan.
     */
   def searchPrefix(prefix: String, k: Int, maxExpansion: Int = 1024): DataFrame = {
     require(prefix.nonEmpty && prefix.matches("[a-z0-9]+"),
       s"prefix must be a non-empty token fragment [a-z0-9]+, got '$prefix'")
-    val expanded: Seq[String] =
-      if (cacheHot) hotDict.keysIterator.filter(_.startsWith(prefix)).toSeq.sorted
-      else dictDS.where($"term".startsWith(prefix))
-        .select("term").as[String].collect().toSeq.sorted
-    if (expanded.size > maxExpansion)
-      throw new IllegalArgumentException(
-        s"prefix '$prefix' expands to ${expanded.size} terms (> $maxExpansion) — " +
-          "narrow the prefix or raise maxExpansion")
-    if (expanded.isEmpty) return noHits
-    search(expanded.mkString(" "), k)
+    searchExpansion(expandAtMost(s"prefix '$prefix'", prefix, _ => true, maxExpansion), k)
   }
 
   /** WILDCARD top-k search (`me*ge`, `*tion`, `pre*` — `*` matches any
-    * run of characters): expand the pattern against the term dictionary,
-    * then score the expansion as a disjunctive BM25 query through the
-    * ordinary [[search]] path, each matched term weighted by its own
-    * idf (the [[searchPrefix]] contract generalized). A literal head
-    * keeps the `StringStartsWith` pushdown over the term-sorted
-    * dictionary ranges; a leading `*` is a documented full dictionary
-    * scan (Lucene's leading-wildcard caveat) — still one bounded
-    * metadata-table pass, never a postings or corpus scan.
-    * `maxExpansion` bounds the fan-out loudly, as in [[searchPrefix]].
+    * run of characters): the [[searchPrefix]] contract generalized. The
+    * literal head is the key range [[expand]] reads on the driver; a
+    * leading `*` is a documented full dictionary scan (Lucene's
+    * leading-wildcard caveat) — one bounded metadata-table pass, never a
+    * postings or corpus scan.
     */
   def searchWildcard(pattern: String, k: Int, maxExpansion: Int = 1024): DataFrame = {
     require(pattern.matches("[a-z0-9*]+") && pattern.exists(_ != '*'),
       s"wildcard pattern must be [a-z0-9*]+ with at least one literal char, got '$pattern'")
     if (!pattern.contains("*")) return search(pattern, k)
-    val rxBody = pattern.split("\\*", -1).mkString(".*")
-    val expanded: Seq[String] =
-      if (cacheHot) hotDict.keysIterator.filter(_.matches(rxBody)).toSeq.sorted
-      else {
-        val head = pattern.takeWhile(_ != '*')
-        val base = if (head.nonEmpty) dictDS.where($"term".startsWith(head)) else dictDS
-        base.where($"term".rlike("^" + rxBody + "$"))
-          .select("term").as[String].collect().toSeq.sorted
-      }
-    if (expanded.size > maxExpansion)
-      throw new IllegalArgumentException(
-        s"pattern '$pattern' expands to ${expanded.size} terms (> $maxExpansion) — " +
-          "narrow the pattern or raise maxExpansion")
-    if (expanded.isEmpty) return noHits
-    search(expanded.mkString(" "), k)
+    val rx = java.util.regex.Pattern.compile(pattern.split("\\*", -1).mkString(".*"))
+    searchExpansion(expandAtMost(s"pattern '$pattern'", pattern.takeWhile(_ != '*'),
+      t => rx.matcher(t).matches(), maxExpansion), k)
   }
 
   /** The longest literal prefix every string matching `^pattern$` must
     * start with — the pushdown anchor for [[searchRegexp]]. Conservative:
     * a top-level alternation voids it, and a trailing `*`/`?` quantifier
     * makes the last literal optional (dropped). Soundness only affects
-    * pruning, never results — the rlike filter re-checks every term.
+    * pruning, never results — the regex re-checks every term.
     */
   private def regexpLiteralHead(pattern: String): String = {
     var depth = 0
@@ -1132,36 +1130,22 @@ final class Searcher(spark: SparkSession, root: String, cacheHot: Boolean = fals
     else run
   }
 
-  /** REGEXP top-k search (the Lucene RegexpQuery analog): expand an
-    * anchored regular expression against the term dictionary, then score
-    * the expansion as a disjunctive BM25 query through the ordinary
-    * [[search]] path — [[searchWildcard]] generalized to character
-    * classes, alternation, and quantifiers. The grammar is restricted to
-    * constructs Java regex and RE2-family engines evaluate identically
-    * (`[a-z0-9]`, classes, `.`, `*`, `+`, `?`, `|`, grouping) so a
-    * cross-engine oracle can independently replay the expansion. A
-    * mandatory literal head keeps `StringStartsWith` pushdown over the
-    * term-sorted dictionary; otherwise the expansion is one bounded
-    * dictionary scan (never postings, never the corpus).
+  /** REGEXP top-k search (the Lucene RegexpQuery analog): an anchored
+    * regular expression expanded over the dictionary and scored like
+    * [[searchWildcard]], generalized to character classes, alternation
+    * and quantifiers. The grammar is restricted to constructs Java regex
+    * and RE2-family engines evaluate identically (`[a-z0-9]`, classes,
+    * `.`, `*`, `+`, `?`, `|`, grouping) so a cross-engine oracle can
+    * independently replay the expansion. A mandatory literal head is the
+    * key range [[expand]] reads on the driver; otherwise the expansion is
+    * one bounded dictionary scan.
     */
   def searchRegexp(pattern: String, k: Int, maxExpansion: Int = 1024): DataFrame = {
     require(pattern.matches("""[a-z0-9\[\]\^\-().*+?|]+"""),
       s"regexp must use only [a-z0-9], classes, grouping, '.', '*', '+', '?', '|'; got '$pattern'")
-    val anchored = "^(" + pattern + ")$"
-    val expanded: Seq[String] =
-      if (cacheHot) hotDict.keysIterator.filter(_.matches(anchored)).toSeq.sorted
-      else {
-        val head = regexpLiteralHead(pattern)
-        val base = if (head.nonEmpty) dictDS.where($"term".startsWith(head)) else dictDS
-        base.where($"term".rlike(anchored))
-          .select("term").as[String].collect().toSeq.sorted
-      }
-    if (expanded.size > maxExpansion)
-      throw new IllegalArgumentException(
-        s"regexp '$pattern' expands to ${expanded.size} terms (> $maxExpansion) — " +
-          "narrow the pattern or raise maxExpansion")
-    if (expanded.isEmpty) return noHits
-    search(expanded.mkString(" "), k)
+    val rx = java.util.regex.Pattern.compile("(" + pattern + ")")
+    searchExpansion(expandAtMost(s"regexp '$pattern'", regexpLiteralHead(pattern),
+      t => rx.matcher(t).matches(), maxExpansion), k)
   }
 
   /** SNIPPET/highlight search, batched: conjunctive BM25 top-k
@@ -1182,8 +1166,7 @@ final class Searcher(spark: SparkSession, root: String, cacheHot: Boolean = fals
     * ordered (query_id, rank); snippet_start is 0-based.
     */
   def snippetMany(queries: Seq[(Int, String)], k: Int): DataFrame = {
-    require(hasPositions,
-      s"index at $root has no positions sidecar — run IndexBuilder.buildPositions first")
+    requirePositions()
     // ONE execution of the conjunctive search: the bounded top-k rows
     // come to the driver (k per query) and re-enter the plan as a local
     // broadcast-joinable relation
@@ -1264,11 +1247,11 @@ final class Searcher(spark: SparkSession, root: String, cacheHot: Boolean = fals
       k: Int,
       exact: Boolean,
       allow: Option[Long => Boolean],
-      globalStats: Option[GlobalStats],
+      shard: Option[Searcher.Plan],
       counters: Option[SearchCounters] = None,
       negQuery: String = "",
       after: Option[(Double, Long)] = None): DataFrame =
-    planSearch(query, k, exact, globalStats, counters, negQuery, after) match {
+    planSearch(query, k, exact, shard, counters, negQuery, after) match {
       case None => noHits
       case Some((termsByBucket, kernel)) =>
         val allowB = broadcastAllow(allow)
@@ -1286,7 +1269,7 @@ final class Searcher(spark: SparkSession, root: String, cacheHot: Boolean = fals
       query: String,
       k: Int,
       exact: Boolean,
-      globalStats: Option[GlobalStats],
+      shard: Option[Searcher.Plan],
       counters: Option[SearchCounters],
       negQuery: String,
       after: Option[(Double, Long)]): Option[(Map[Int, Seq[String]], Searcher.SearchKernel)] = {
@@ -1297,7 +1280,7 @@ final class Searcher(spark: SparkSession, root: String, cacheHot: Boolean = fals
     // from the scoring list changes no surviving doc's score
     val qTerms = Tokenizer.tokenize(query).distinct.sorted
       .filterNot(negTerms.contains)
-    val p = plan(qTerms ++ negTerms, globalStats)
+    val p = plan(qTerms ++ negTerms, shard)
     val termList = qTerms.filter(p.live).toSeq
     if (termList.isEmpty) return None
     // negated terms are read only in the buckets the scoring terms touch
@@ -1545,95 +1528,39 @@ final class Searcher(spark: SparkSession, root: String, cacheHot: Boolean = fals
       exact: Boolean = false): DataFrame =
     search(query, k, exact = exact, negQuery = negQuery)
 
-  /** FUZZY-expanded top-k search (the `term~d` edit-distance query):
-    * expand the probe against the term dictionary — ONE distributed
-    * pruned read, a cheap length band plus Spark's thresholded
-    * `levenshtein` doing the work executor-side, only matches collected —
-    * then score the expansion as a disjunctive BM25 query through the
-    * ordinary [[search]] path (each matched term weighted by its own
-    * idf, exactly the [[searchPrefix]] contract). `maxExpansion` bounds
-    * the planning fan-out loudly, same as prefix search.
+  /** FUZZY-expanded top-k search (the `term~d` edit-distance query),
+    * the [[searchPrefix]] contract over an edit ball: an edit ball has
+    * no key range, so [[expand]] runs ONE dictionary scan with the
+    * bounded edit-distance DP ([[Searcher.levWithin]]) as its
+    * executor-side filter.
     */
   def searchFuzzy(probe: String, k: Int, maxDist: Int = 1,
       maxExpansion: Int = 1024): DataFrame = {
-    val toks = Tokenizer.tokenize(probe)
-    require(toks.length == 1,
-      s"fuzzy probe must normalize to exactly one token, got '$probe'")
-    require(maxDist >= 0 && maxDist <= 4, s"maxDist must be in [0,4], got $maxDist")
-    val q = toks.head
-    val expanded: Seq[String] =
-      if (cacheHot)
-        hotDict.keysIterator
-          .filter(t => Searcher.levWithin(t, q, maxDist)).toSeq.sorted
-      else
-        dictDS
-          .where(abs(length($"term") - lit(q.length)) <= lit(maxDist) &&
-            levenshtein($"term", lit(q), maxDist) >= 0)
-          .select("term").as[String].collect().toSeq.sorted
-    if (expanded.size > maxExpansion)
-      throw new IllegalArgumentException(
-        s"probe '$q'~$maxDist expands to ${expanded.size} terms (> $maxExpansion) — " +
-          "lower maxDist or raise maxExpansion")
-    if (expanded.isEmpty) return noHits
-    search(expanded.mkString(" "), k)
+    val q = Searcher.fuzzyProbe(probe, maxDist)
+    searchExpansion(expandAtMost(s"probe '$q'~$maxDist", "",
+      t => Searcher.levWithin(t, q, maxDist), maxExpansion), k)
   }
 
-  /** Batched fuzzy search: every probe expanded in ONE dictionary scan —
-    * a coarse length band over the whole batch is the pushable predicate
-    * (edit distance itself can't push down), the per-(probe, term)
-    * bounded DP runs executor-side, and only the matches are collected
-    * (bounded by `maxExpansion` per probe, loudly). The expansions then
-    * ride ONE [[searchMany]] TAAT pass, so shared hot-term postings are
-    * decoded and traversed once for the whole batch. Per-probe results
-    * are bit-identical to [[searchFuzzy]] (RetrievalModesSpec pins it):
-    * the expansion sets are equal and searchMany ≡ search is the
-    * EngineSpec gate. Returns (query_id, doc_id, score, rank) ordered
-    * (query_id, rank).
+  /** Batched fuzzy search: every probe expanded in ONE dictionary scan
+    * ([[expand]] filtered by "within d edits of any probe"), regrouped
+    * by probe on the driver, each probe loudly bounded by `maxExpansion`;
+    * the expansions ride ONE [[searchMany]] TAAT pass. Per-probe results
+    * are bit-identical to [[searchFuzzy]] (RetrievalModesSpec pins it).
+    * Returns (query_id, doc_id, score, rank) ordered (query_id, rank).
     */
   def searchFuzzyMany(probes: Seq[(Int, String, Int)], k: Int,
       maxExpansion: Int = 1024): DataFrame = {
-    val norm: Seq[(Int, String, Int)] = probes.map { case (id, p, d) =>
-      val toks = Tokenizer.tokenize(p)
-      require(toks.length == 1,
-        s"fuzzy probe must normalize to exactly one token, got '$p'")
-      require(d >= 0 && d <= 4, s"maxDist must be in [0,4], got $d")
-      (id, toks.head, d)
+    val norm = probes.map { case (id, p, d) => (id, Searcher.fuzzyProbe(p, d), d) }
+    val matched = if (norm.isEmpty) Seq.empty else expand("",
+      t => norm.exists { case (_, q, d) => Searcher.levWithin(t, q, d) }, Int.MaxValue).map(_._1)
+    val synth = norm.flatMap { case (id, q, d) =>
+      val ts = matched.filter(t => Searcher.levWithin(t, q, d))
+      if (ts.size > maxExpansion) throw Searcher.tooWide(s"probe '$q'~$d", maxExpansion)
+      if (ts.isEmpty) None else Some(id -> ts.mkString(" "))
     }
-    val emptyMany = spark.emptyDataset[(Int, Long, Double, Int)]
-      .toDF("query_id", "doc_id", "score", "rank")
-    if (norm.isEmpty) return emptyMany
-    val pairs: Seq[(Int, String)] =
-      if (cacheHot)
-        norm.flatMap { case (id, q, d) =>
-          hotDict.keysIterator.filter(t => Searcher.levWithin(t, q, d)).map(id -> _)
-        }
-      else {
-        val lenMin = norm.iterator.map { case (_, q, d) => q.length - d }.min
-        val lenMax = norm.iterator.map { case (_, q, d) => q.length + d }.max
-        val pb = spark.sparkContext.broadcast(norm.toArray)
-        dictDS
-          .where(length($"term").between(lenMin, lenMax))
-          .select("term").as[String]
-          .flatMap(t => pb.value.iterator.collect {
-            case (id, q, d) if Searcher.levWithin(t, q, d) => (id, t)
-          })
-          .collect().toSeq
-      }
-    val byProbe: Map[Int, Seq[String]] =
-      pairs.groupBy(_._1).map { case (id, ps) => id -> ps.map(_._2).distinct.sorted }
-    byProbe.foreach { case (id, ts) =>
-      if (ts.size > maxExpansion) {
-        val q = norm.find(_._1 == id).get._2
-        throw new IllegalArgumentException(
-          s"probe '$q' expands to ${ts.size} terms (> $maxExpansion) — " +
-            "lower maxDist or raise maxExpansion")
-      }
-    }
-    val synth = norm.collect {
-      case (id, _, _) if byProbe.get(id).exists(_.nonEmpty) =>
-        id -> byProbe(id).mkString(" ")
-    }
-    if (synth.isEmpty) emptyMany else searchMany(synth, k)
+    if (synth.isEmpty)
+      spark.emptyDataset[(Int, Long, Double, Int)].toDF("query_id", "doc_id", "score", "rank")
+    else searchMany(synth, k)
   }
 
   /** DID-YOU-MEAN term suggestion (the Lucene DirectSpellChecker shape;
@@ -1795,12 +1722,12 @@ final class Searcher(spark: SparkSession, root: String, cacheHot: Boolean = fals
   private[index] def searchManyBuckets(
       queries: Seq[(Int, String)],
       k: Int,
-      globalStats: Option[GlobalStats] = None,
+      shard: Option[Searcher.Plan] = None,
       counters: Option[SearchCounters] = None,
       taatBudgetBytes: Long = Searcher.DefaultTaatBudgetBytes,
       allow: Option[Long => Boolean] = None): DataFrame = {
     val qTerms = queries.map { case (id, q) => (id, Tokenizer.tokenize(q).distinct.sorted) }
-    val p = plan(qTerms.flatMap(_._2), globalStats)
+    val p = plan(qTerms.flatMap(_._2), shard)
     val qs = qTerms.map { case (id, ts) => (id, ts.filter(p.live)) }.filter(_._2.nonEmpty).toArray
     if (qs.isEmpty) return noPartials
     val liveTerms = qs.flatMap(_._2).distinct.sorted
@@ -1930,6 +1857,29 @@ object Searcher {
   private[index] def bucketNorms(bucket: Int, row: Option[DocLenRow], root: String): DocLenRow =
     row.getOrElse(throw new IllegalStateException(s"index invariant violated: bucket $bucket " +
       s"has postings but no doclens row ($root)"))
+
+  /** The least string above every string that starts with `prefix`, in
+    * Parquet's unsigned UTF-8 byte order (code point order): `prefix`
+    * with its last code point incremented. None when there is no such
+    * string of the same length (an empty prefix, or one ending in
+    * U+10FFFF), which leaves the range unbounded.
+    */
+  private[index] def prefixEnd(prefix: String): Option[String] =
+    prefix.codePoints.toArray.lastOption.filter(_ < Character.MAX_CODE_POINT).map { c =>
+      val next = if (c + 1 == Character.MIN_SURROGATE) Character.MAX_SURROGATE + 1 else c + 1
+      prefix.substring(0, prefix.offsetByCodePoints(prefix.length, -1)) + Character.toString(next)
+    }
+
+  private[index] def tooWide(what: String, maxExpansion: Int) = new IllegalArgumentException(
+    s"$what expands to more than $maxExpansion terms — narrow it or raise maxExpansion")
+
+  /** A fuzzy probe's one token, with its edit distance checked. */
+  private[index] def fuzzyProbe(probe: String, maxDist: Int): String = {
+    val toks = Tokenizer.tokenize(probe)
+    require(toks.length == 1, s"fuzzy probe must normalize to exactly one token, got '$probe'")
+    require(maxDist >= 0 && maxDist <= 4, s"maxDist must be in [0,4], got $maxDist")
+    toks.head
+  }
 
   /** Bounded Levenshtein distance: the exact edit distance if ≤ maxDist,
     * else -1 — the textbook two-row DP with the standard band cutoff,

@@ -444,7 +444,7 @@ object Fulltext {
   final val PrefixProbe = "s"
 
   /** Dictionary-driven PREFIX search (`s*`): expand the prefix over the
-    * term dictionary (one pruned read, StringStartsWith pushdown), then
+    * term dictionary (one key-range read on the driver, no Spark job), then
     * rank the expansion as a disjunctive BM25 query — each matched term
     * weighted by its own idf ([[graft.index.Searcher.searchPrefix]]).
     * The oracle derives the SAME expansion independently via `LIKE`.
@@ -489,9 +489,9 @@ object Fulltext {
     (3, "zz*zz"))
 
   /** Dictionary-driven WILDCARD search (`me*ge` / `*tion`): expand each
-    * pattern over the term dictionary (prefix pushdown when the pattern
-    * has a literal head; a leading `*` is the documented full dictionary
-    * scan), then rank each expansion as a disjunctive BM25 query
+    * pattern over the term dictionary (a key-range read on the driver
+    * when the pattern has a literal head; a leading `*` is the documented
+    * full dictionary scan), then rank each expansion as a disjunctive BM25 query
     * ([[graft.index.Searcher.searchWildcard]]). The oracle recomputes
     * every expansion itself via `LIKE`.
     */
@@ -993,8 +993,9 @@ object Fulltext {
     (3, "zzzz", 1))
 
   /** Dictionary-driven FUZZY search (`term~d`), batched: the whole probe
-    * set expands in ONE dictionary scan (length band pushed down, the
-    * bounded edit-distance DP executor-side) and the expansions ride ONE
+    * set expands in ONE dictionary scan ("within d edits of any probe",
+    * the bounded edit-distance DP executor-side), regrouped by probe on
+    * the driver, and the expansions ride ONE
     * TAAT batch pass, each matched term weighted by its own idf
     * ([[graft.index.Searcher.searchFuzzyMany]]; per-probe ≡ batched is
     * pinned in RetrievalModesSpec).

@@ -25,7 +25,10 @@ import graft.oracle.ExactScorer
   * `scoreAllMatched` (exact WAND) restricted to their gate; and a
   * [[MultiSearcher]] over the corpus split into 2–3 generations ≡ one
   * index over the whole corpus for `search`, `searchMany` and
-  * `searchConjunctiveMany`.
+  * `searchConjunctiveMany`; and every term-expanding mode (prefix,
+  * wildcard, regexp, fuzzy, batched fuzzy, terms-enum), on a default and
+  * a `cacheHot` Searcher, ≡ the brute-force expansion over the generated
+  * vocabulary fed to `search`/`searchMany`.
   * (Plain scalacheck generators sampled in a loop, as in CodecSpec; N is
   * small to keep the suite's runtime bounded.)
   */
@@ -203,6 +206,109 @@ class DifferentialPropSpec extends SparkSpec {
         }
       }
     }
+  }
+
+  /** The prefix, wildcard and regexp patterns, each a (kind, pattern)
+    * drawn from a case's vocabulary.
+    */
+  private def patternGens(vocab: Seq[String]): Seq[Gen[(String, String)]] = {
+    val term = Gen.oneOf(vocab)
+    val longTerm = Gen.oneOf(vocab.filter(_.length >= 2) :+ "w10")
+    def cut(t: String) = Gen.choose(1, t.length - 1)
+    val prefix = Gen.oneOf(
+      term.map(t => ("prefix: whole term", t)),
+      term.map(t => ("prefix: one char", t.take(1))),
+      term.map(t => ("prefix: absent", t + "q")))
+    val wildcard = Gen.oneOf(
+      longTerm.flatMap(t => cut(t).map(i => ("wildcard: leading *", "*" + t.drop(i)))),
+      longTerm.flatMap(t => cut(t).map(i => ("wildcard: inner *", t.take(i) + "*" + t.last))),
+      longTerm.flatMap(t => cut(t).map(i => ("wildcard: trailing *", t.take(i) + "*"))))
+    val regexp = Gen.oneOf(
+      for (t <- longTerm; i <- cut(t); tail <- Gen.oneOf(".", "[0-9]*", ".?", "(0|1)"))
+        yield ("regexp: literal head", t.take(i) + tail),
+      for (t <- longTerm; u <- term; form <- Gen.choose(0, 2)) yield ("regexp: no head",
+        Seq(s"[${t.head}x]${t.tail}", s".*${t.last}", s"$t|$u")(form)),
+      // "w1?0": the head "w1" loses its optional last literal, so the read is "w"
+      longTerm.map(t => ("regexp: optional last literal", t.take(2) + "?" + t.drop(2))))
+    Seq(prefix, wildcard, regexp)
+  }
+
+  /** A fuzzy probe within 0–2 edits of a vocabulary term (or absent). */
+  private def fuzzyGen(vocab: Seq[String]): Gen[(String, Int)] = for {
+    t <- Gen.oneOf(vocab :+ "zzzz")
+    d <- Gen.choose(0, 2)
+    edit <- Gen.choose(0, 3)
+    c <- Gen.oneOf('a', 'w', '1', '7')
+    i <- Gen.choose(0, t.length - 1)
+  } yield (Seq(t, t.updated(i, c), t.patch(i, Seq(c), 0), if (t.length > 1) t.patch(i, "", 1) else t)(edit), d)
+
+  test("every expansion mode, default and cacheHot ≡ brute-force expansion fed to search") {
+    var seed = org.scalacheck.rng.Seed(20261020L)
+    def draw[T](g: Gen[T]): T = {
+      val v = g.pureApply(Gen.Parameters.default, seed)
+      seed = seed.next
+      v
+    }
+    val seen = Set.newBuilder[String]
+    cases.zipWithIndex.foreach { case ((c, root), i) =>
+      val s = new Searcher(spark, root)
+      val hot = new Searcher(spark, root, cacheHot = true)
+      val docTerms = c.docs.map { case (_, d) => Tokenizer.tokenize(d).toSet }
+      val df = docTerms.flatten.groupMapReduce(identity)(_ => 1L)(_ + _)
+      val vocab = df.keys.toSeq.sorted
+      val ctx = s"run ${i + 1} (${c.docs.size} docs, ${c.width}) k=${c.k}"
+      // the brute-force expansion scored as one disjunctive query
+      def want(accept: String => Boolean): Seq[(Long, Double)] = {
+        val ts = vocab.filter(accept)
+        if (ts.isEmpty) Seq.empty else hits(s.search(ts.mkString(" "), c.k))
+      }
+      if (vocab.nonEmpty) {
+        patternGens(vocab).flatMap(g => Seq(draw(g), draw(g))).foreach { case (kind, p) =>
+          seen += kind
+          val (expected, run) = kind.takeWhile(_ != ':') match {
+            case "prefix" =>
+              (want(_.startsWith(p)), (se: Searcher) => se.searchPrefix(p, c.k))
+            case "wildcard" =>
+              (want(_.matches(p.replace("*", ".*"))), (se: Searcher) => se.searchWildcard(p, c.k))
+            case _ =>
+              (want(_.matches(p)), (se: Searcher) => se.searchRegexp(p, c.k))
+          }
+          if (expected.nonEmpty) seen += s"${kind.takeWhile(_ != ':')} hit"
+          assert(hits(run(s)) == expected, s"$kind '$p': $ctx")
+          assert(hits(run(hot)) == expected, s"$kind '$p' (cacheHot): $ctx")
+        }
+        val probes = (1 to 3).map(_ => draw(fuzzyGen(vocab))).zipWithIndex
+          .map { case ((q, d), id) => (id, q, d) }
+        probes.foreach { case (_, q, d) =>
+          seen += s"fuzzy d=$d"
+          val expected = want(t => Searcher.levWithin(t, q, d))
+          if (expected.nonEmpty) seen += "fuzzy hit"
+          assert(hits(s.searchFuzzy(q, c.k, maxDist = d)) == expected, s"fuzzy '$q'~$d: $ctx")
+          assert(hits(hot.searchFuzzy(q, c.k, maxDist = d)) == expected,
+            s"fuzzy '$q'~$d (cacheHot): $ctx")
+        }
+        val expansions = probes.map { case (id, q, d) =>
+          id -> vocab.filter(t => Searcher.levWithin(t, q, d)).mkString(" ")
+        }.filter(_._2.nonEmpty)
+        val batch = if (expansions.isEmpty) Map.empty else ranked(s.searchMany(expansions, c.k))
+        assert(ranked(s.searchFuzzyMany(probes, c.k)) == batch, s"searchFuzzyMany: $ctx")
+        assert(ranked(hot.searchFuzzyMany(probes, c.k)) == batch, s"searchFuzzyMany (cacheHot): $ctx")
+        val n = draw(Gen.choose(1, 6))
+        val prefixes = Seq(vocab.head.take(1), vocab.last, "zq").zipWithIndex.map(_.swap)
+        val enumWant = prefixes.flatMap { case (id, p) =>
+          vocab.filter(_.startsWith(p)).take(n).map(t => (id, t, df(t)))
+        }
+        for (se <- Seq(s, hot))
+          assert(se.termsEnum(prefixes, n).as[(Int, String, Long)].collect().toSeq == enumWant,
+            s"termsEnum n=$n: $ctx")
+      }
+    }
+    val missed = Set("prefix: whole term", "prefix: one char", "prefix: absent",
+      "wildcard: leading *", "wildcard: inner *", "wildcard: trailing *",
+      "regexp: literal head", "regexp: no head", "regexp: optional last literal",
+      "fuzzy d=0", "fuzzy d=1", "fuzzy d=2",
+      "prefix hit", "wildcard hit", "regexp hit", "fuzzy hit") -- seen.result()
+    assert(missed.isEmpty, s"cases never generated: $missed")
   }
 
   test("multi-generation search, searchMany and conjunctive ≡ one index over the union") {

@@ -112,6 +112,77 @@ class PointReadSpec extends SparkSpec {
     }
   }
 
+  /** The terms of each non-empty data file of the dictionary at `root`. */
+  private def dictFileTerms(root: String): Seq[Seq[String]] = {
+    val s = Files.list(Path.of(IndexBuilder.Layout(root).dict))
+    val files = try s.iterator().asScala.filter(_.toString.endsWith(".parquet")).toList
+    finally s.close()
+    files.map(f => spark.read.parquet(f.toString).select("term").as[String].collect().sorted.toSeq)
+      .filter(_.nonEmpty)
+  }
+
+  test("the dictionary key-range read equals the Spark startsWith read, with no job") {
+    // the builder's dictionary layout, cut into 4 range partitions
+    val multi = copyIndex(root)
+    val dictPath = IndexBuilder.Layout(multi).dict
+    rewrite(dictPath, spark.read.parquet(dictPath).repartitionByRange(4, col("term"))
+      .sortWithinPartitions(col("term")))
+    val s = new Searcher(spark, multi)
+    val dict = spark.read.parquet(dictPath)
+    val files = dictFileTerms(multi)
+    assert(files.size == 4, "fixture: the dictionary should span 4 files")
+    // a prefix of both the last term of one file and the first of another
+    val crossing = files.flatMap(a => files.map(b => (a.last, b.head)))
+      .map { case (x, y) => x.zip(y).takeWhile(c => c._1 == c._2).map(_._1).mkString }
+      .find(p => p.nonEmpty && files.count(_.exists(_.startsWith(p))) > 1)
+      .getOrElse(fail("fixture: no prefix crosses a file boundary"))
+    val terms = files.flatten.sorted
+    val whole = terms.find(t => terms.exists(u => u != t && u.startsWith(t)))
+      .getOrElse(fail("fixture: no term is a prefix of another"))
+    for (p <- Seq(crossing, whole, "zzq", terms.head, terms.last)) {
+      val want = dict.where(col("term").startsWith(p)).select("term", "df").as[(String, Long)]
+        .collect().sortBy(_._1).toSeq
+      var got = Seq.empty[(String, Long)]
+      val jobs = jobsOf {
+        got = s.termsEnum(Seq(0 -> p), Int.MaxValue).as[(Int, String, Long)].collect()
+          .map(r => (r._2, r._3)).toSeq
+      }
+      assert(got == want, s"prefix '$p'")
+      assert(jobs == 0, s"termsEnum('$p') ran $jobs Spark jobs")
+    }
+  }
+
+  test("a headed prefix, wildcard or regexp search runs one job; termsEnum runs none") {
+    val dir = Files.createTempDirectory("graft-point-expand-").toString
+    val docs = Seq("merge the scan", "make a sort", "spark stream mode", "merge sort scan", "mere slow")
+    IndexBuilder.build(spark, docs.zipWithIndex.map { case (d, i) => (i.toLong, d) }
+      .toDF("doc_id", "content"), dir, targetBuckets = 2)
+    val s = new Searcher(spark, dir)
+    Seq[(String, () => DataFrame)](
+      "searchPrefix(s)" -> (() => s.searchPrefix("s", 10)),
+      "searchWildcard(m*e)" -> (() => s.searchWildcard("m*e", 10)),
+      "searchRegexp(s(can|ort|park))" -> (() => s.searchRegexp("s(can|ort|park)", 10))
+    ).foreach { case (what, q) =>
+      assert(q().count() > 0, s"fixture: $what finds nothing")
+      val n = jobsOf(q().collect())
+      assert(n == 1, s"$what ran $n jobs")
+    }
+    val n = jobsOf(s.termsEnum(Seq(0 -> "s", 1 -> "ma"), 8).collect())
+    assert(n == 0, s"termsEnum ran $n jobs")
+  }
+
+  test("an old-format dictionary raises the rebuild message from the expanding modes") {
+    val old = copyIndex(root)
+    val dictPath = IndexBuilder.Layout(old).dict
+    rewrite(dictPath, spark.read.parquet(dictPath).drop("buckets"))
+    val s = new Searcher(spark, old)
+    Seq[() => Any](() => s.searchPrefix("de", 10), () => s.searchWildcard("*ef", 10),
+      () => s.termsEnum(Seq(0 -> "d"), 5)).foreach { f =>
+      val e = intercept[IllegalStateException](f())
+      assert(e.getMessage.contains("delete the index root and rebuild"), e.getMessage)
+    }
+  }
+
   test("a bucket without its doclens row fails search, searchMany and searchBool loudly") {
     val damaged = copyIndex(root)
     val dlPath = IndexBuilder.Layout(damaged).doclens
