@@ -58,11 +58,12 @@ final class MultiSearcher(spark: SparkSession, roots: Seq[String]) {
     */
   private def scatter(texts: Seq[String], merge: DataFrame => DataFrame)(
       partials: (Searcher, Option[Searcher.Plan]) => DataFrame): DataFrame = {
-    val rows = perShard(_.dictRows(texts.flatMap(Tokenizer.tokenize).distinct.sorted))
+    val terms = texts.flatMap(Tokenizer.tokenize).distinct.sorted
+    val rows = perShard(_.dictRows(terms))
     val g = globalStats(rows)
-    val plans = searchers.zip(rows)
-      .map { case (se, local) => se -> Searcher.Plan(local, g, se.stats.avgdl) }.toMap
-    merge(union(se => partials(se, plans.get(se))))
+    merge(IndexBuilder.awaitAll(searchers.zip(rows).map { case (se, local) =>
+      () => partials(se, Some(Searcher.Plan(terms.toSet, local, g, se.stats.avgdl)))
+    }).reduce(_ union _))
   }
 
   def search(

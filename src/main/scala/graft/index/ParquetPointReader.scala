@@ -82,13 +82,23 @@ private[index] final class ParquetPointReader[K] private (
     })(row)
   }
 
-  /** Every row whose key k has `lo ≤ k < hiExclusive`, mapped through
-    * `row`, in file order: footer ranges choose the files, and the page
-    * index and a `gtEq/lt` record filter narrow the rows inside them.
+  /** The first `limit` rows, mapped through `row`, that `keep` accepts
+    * among those whose key k has `lo ≤ k < hiExclusive`. Footer ranges
+    * choose the files; the page index and a `gtEq/lt` record filter
+    * narrow the rows. Files with disjoint ranges (a range-partitioned,
+    * key-sorted table, as the dictionary is written) are read in key
+    * order, and the read stops at the `limit`-th kept row; otherwise
+    * every kept row is read, in file order, for the caller to sort.
     */
-  def readRange[T](lo: K, hiExclusive: K)(row: PointRow => T): Seq[T] = {
+  def readRange[T](lo: K, hiExclusive: K, limit: Int)(row: PointRow => T)(
+      keep: T => Boolean): Seq[T] = {
     val filter = FilterCompat.get(key.range(keyCol, lo, hiExclusive))
-    scan(files.iterator.filter(_.overlaps(lo, hiExclusive)).map(_ -> filter))(row)
+    val overlapping = files.filter(_.overlaps(lo, hiExclusive))
+    val ranged = overlapping.flatMap(f => f.range.map(f -> _)).sortBy(_._2._1)(key)
+    val ordered = ranged.length == overlapping.length &&
+      ranged.zip(ranged.drop(1)).forall { case ((_, (_, max)), (_, (min, _))) => key.lt(max, min) }
+    if (ordered) scan(ranged.iterator.map(_._1 -> filter))(row, keep, limit)
+    else scan(overlapping.iterator.map(_ -> filter))(row, keep)
   }
 
   /** Every row of the table, mapped through `row`, in file order. */
@@ -96,9 +106,9 @@ private[index] final class ParquetPointReader[K] private (
     scan(files.iterator.map(_ -> FilterCompat.NOOP))(row)
 
   private def scan[T](reads: Iterator[(PointFile[K], FilterCompat.Filter)])(
-      row: PointRow => T): Seq[T] = {
+      row: PointRow => T, keep: T => Boolean = (_: T) => true, limit: Int = Int.MaxValue): Seq[T] = {
     val out = mutable.ArrayBuffer.empty[T]
-    for ((f, filter) <- reads) {
+    for ((f, filter) <- reads if out.size < limit) {
       val reader = open(f, filter)
       try {
         val schema = reader.getFooter.getFileMetaData.getSchema
@@ -108,12 +118,13 @@ private[index] final class ParquetPointReader[K] private (
         while (pages != null) {
           val records = io.getRecordReader(pages, new RowMaterializer(schema), filter)
           var i = 0L
-          while (i < pages.getRowCount) {
+          while (i < pages.getRowCount && out.size < limit) {
             val r = records.read()
-            if (r != null && !records.shouldSkipCurrentRecord) out += row(new PointRow(names, r))
+            if (r != null && !records.shouldSkipCurrentRecord)
+              Some(row(new PointRow(names, r))).filter(keep).foreach(out += _)
             i += 1
           }
-          pages = reader.readNextFilteredRowGroup()
+          pages = if (out.size < limit) reader.readNextFilteredRowGroup() else null
         }
       } finally reader.close()
     }
@@ -312,14 +323,13 @@ private[index] final class PointRow(names: Map[String, Int], values: Array[Any])
 }
 
 /** How a key type maps onto a Parquet key column: its statistics values,
-  * the column's sort order, and the `IN` and range predicates over the
-  * column's Parquet values `C`.
+  * the column's sort order (the Ordering), and the `IN` and range
+  * predicates over the column's Parquet values `C`.
   */
-private[index] sealed abstract class PointKey[K] extends Serializable {
+private[index] sealed abstract class PointKey[K] extends Ordering[K] {
   type C <: Comparable[C]
   type Col = Operators.Column[C] with Operators.SupportsLtGt
   def fromStat(v: Any): K
-  def compare(a: K, b: K): Int
   protected def column(col: String): Col
   protected def value(k: K): C
 

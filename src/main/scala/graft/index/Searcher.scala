@@ -92,9 +92,10 @@ final class Searcher(spark: SparkSession, root: String, cacheHot: Boolean = fals
     s"index at $root was built by an older graft version (dictionary has " +
       "no per-term bucket lists) — delete the index root and rebuild")
   // the serving-mode tables load on the driver through the point
-  // readers: a hot fill runs no Spark job
-  private lazy val hotDict: Map[String, DictRow] =
-    dictReader.readAll(Searcher.dictRow).map(d => d.term -> d).toMap
+  // readers: a hot fill runs no Spark job. Term-sorted, so an expansion
+  // walks just its key range, in order.
+  private lazy val hotDict: collection.immutable.TreeMap[String, DictRow] =
+    collection.immutable.TreeMap.from(dictReader.readAll(Searcher.dictRow).map(d => d.term -> d))
   private lazy val doclensDS = spark.read.parquet(layout.doclens).as[DocLenRow]
 
   // ONE file listing per Searcher for every table: index roots are
@@ -459,39 +460,43 @@ final class Searcher(spark: SparkSession, root: String, cacheHot: Boolean = fals
     * own — or the `shard` plan a [[MultiSearcher]] injects when this index
     * is one of its generations: this index's rows of the query terms,
     * read once by the scatter, with the global N/df/avgdl every shard
-    * must score with, or the merged ranking is meaningless.
+    * must score with, or the merged ranking is meaningless. It must have
+    * read every term asked of it, or an unread one drops out silently.
     */
   private def plan(terms: collection.Seq[String],
-      shard: Option[Searcher.Plan] = None): Searcher.Plan = shard.getOrElse {
-    val local = dictRows(terms.distinct.sorted.toSeq)
-    Searcher.Plan(local,
-      GlobalStats(stats.nDocs, stats.avgdl, local.map { case (t, d) => t -> d.df }), stats.avgdl)
+      shard: Option[Searcher.Plan] = None): Searcher.Plan = shard match {
+    case Some(p) =>
+      require(terms.forall(p.read), s"shard plan did not read every term of ${terms.mkString(" ")}")
+      p
+    case None =>
+      val ts = terms.distinct.sorted.toSeq
+      val local = dictRows(ts)
+      Searcher.Plan(ts.toSet, local,
+        GlobalStats(stats.nDocs, stats.avgdl, local.map { case (t, d) => t -> d.df }), stats.avgdl)
   }
 
   /** The one dictionary expansion of every term-expanding mode: the
     * `(term, df)` pairs that start with the literal `head` and pass
     * `accept`, in term order, at most `limit` of them — from `hotDict`
-    * under `cacheHot`; else, for a non-empty `head`, from a key-range read
-    * of the term-sorted dictionary on the driver (no Spark job); else
-    * (a leading `*`, a regexp without a literal head, fuzzy) from one
-    * dictionary scan filtered, ordered and limited on the executors, so
-    * `accept` must not capture the Searcher.
+    * under `cacheHot`, walking the head's key range in order; else, for a
+    * non-empty `head`, from a key-range read of the term-sorted dictionary
+    * on the driver (no Spark job) that stops at the `limit`-th accepted
+    * term; else (a leading `*`, a regexp without a literal head, fuzzy)
+    * from one dictionary scan filtered, ordered and limited on the
+    * executors, so `accept` must not capture the Searcher.
     */
   private def expand(head: String, accept: String => Boolean,
-      limit: Int): Seq[(String, Long)] = {
-    def first(ts: Iterator[(String, Long)]) =
-      ts.filter(t => accept(t._1)).toSeq.sortBy(_._1).take(limit)
-    if (cacheHot)
-      first(hotDict.valuesIterator.filter(_.term.startsWith(head)).map(d => d.term -> d.df))
-    else Searcher.prefixEnd(head) match {
-      case Some(hi) =>
-        first(dictReader.readRange(head, hi)(r => (r[String]("term"), r[Long]("df"))).iterator)
-      case None =>
-        val matched = dictDS.select($"term", $"df").as[(String, Long)]
-          .filter(t => t._1.startsWith(head) && accept(t._1))
-        (if (limit == Int.MaxValue) matched else matched.orderBy($"term").limit(limit))
-          .collect().toSeq.sortBy(_._1)
-    }
+      limit: Int): Seq[(String, Long)] = Searcher.prefixEnd(head) match {
+    case hi if cacheHot =>
+      hi.fold(hotDict.rangeFrom(head))(hotDict.range(head, _)).valuesIterator
+        .filter(d => accept(d.term)).map(d => d.term -> d.df).take(limit).toSeq
+    case Some(hi) =>
+      dictReader.readRange(head, hi, limit)(r => (r[String]("term"), r[Long]("df")))(
+        t => accept(t._1)).sortBy(_._1).take(limit)
+    case None =>
+      val matched = dictDS.select($"term", $"df").as[(String, Long)].filter(t => accept(t._1))
+      (if (limit == Int.MaxValue) matched else matched.orderBy($"term").limit(limit))
+        .collect().toSeq.sortBy(_._1)
   }
 
   /** [[expand]] under the loud `maxExpansion` bound: it reads at most one
@@ -499,7 +504,8 @@ final class Searcher(spark: SparkSession, root: String, cacheHot: Boolean = fals
     */
   private def expandAtMost(what: String, head: String, accept: String => Boolean,
       maxExpansion: Int): Seq[String] = {
-    val terms = expand(head, accept, math.max(maxExpansion, maxExpansion + 1)).map(_._1)
+    val past = if (maxExpansion == Int.MaxValue) maxExpansion else maxExpansion + 1
+    val terms = expand(head, accept, past).map(_._1)
     if (terms.size > maxExpansion) throw Searcher.tooWide(what, maxExpansion)
     terms
   }
@@ -805,10 +811,8 @@ final class Searcher(spark: SparkSession, root: String, cacheHot: Boolean = fals
     val empty = spark.emptyDataset[(Long, Long)].toDF("doc_id", "phrase_tf")
     val headTs = Tokenizer.tokenize(head)
     require(headTs.nonEmpty, s"phrase-prefix head '$head' normalizes to nothing")
-    val p = Tokenizer.tokenize(prefix)
-    require(p.length == 1,
-      s"phrase-prefix suffix must normalize to exactly one token, got '$prefix'")
-    val exps = expandAtMost(s"prefix '$prefix'", p.head, _ => true, maxExpansion)
+    val p = Searcher.oneToken("phrase-prefix suffix", prefix)
+    val exps = expandAtMost(s"prefix '$prefix'", p, _ => true, maxExpansion)
     if (exps.isEmpty) return empty
     phraseMany(exps.zipWithIndex.map { case (e, i) => (i, (headTs :+ e).mkString(" ")) })
       .groupBy(col("doc_id")).agg(sum(col("phrase_tf")).as("phrase_tf"))
@@ -832,8 +836,7 @@ final class Searcher(spark: SparkSession, root: String, cacheHot: Boolean = fals
     */
   def termsEnum(prefixes: Seq[(Int, String)], n: Int): DataFrame =
     prefixes.flatMap { case (id, p) => expand(p, _ => true, n).map { case (t, df) => (id, t, df) } }
-      .sortBy(r => (r._1, r._2))
-      .toDF("prefix_id", "term", "df")
+      .sortBy(r => (r._1, r._2)).toDF("prefix_id", "term", "df")
 
   /** Index-only DOC-LENGTH PERCENTILES (the index-stats readout a corpus
     * census runs; the reference's per-level stats direction,
@@ -1369,12 +1372,10 @@ final class Searcher(spark: SparkSession, root: String, cacheHot: Boolean = fals
     * (boost and all); duplicate terms are an error, not a silent merge.
     */
   def searchBoosted(weights: Seq[(String, Double)], k: Int): DataFrame = {
-    val norm: Seq[(String, Double)] = weights.map { case (t, w) =>
-      val toks = Tokenizer.tokenize(t)
-      require(toks.length == 1,
-        s"boosted entry must normalize to exactly one token, got '$t'")
+    val norm = weights.map { case (t, w) =>
+      val tok = Searcher.oneToken("boosted entry", t)
       require(!w.isNaN && w > 0.0, s"boost for '$t' must be a positive double, got $w")
-      (toks.head, w)
+      (tok, w)
     }
     require(norm.map(_._1).distinct.size == norm.size,
       s"boosted terms must be distinct, got $weights")
@@ -1399,12 +1400,7 @@ final class Searcher(spark: SparkSession, root: String, cacheHot: Boolean = fals
     * [[searchGroupsWeighted]]).
     */
   def searchDisMax(terms: Seq[String], tie: Double, k: Int): DataFrame = {
-    val norm = terms.map { t =>
-      val toks = Tokenizer.tokenize(t)
-      require(toks.length == 1,
-        s"dis-max entry must normalize to exactly one token, got '$t'")
-      toks.head
-    }
+    val norm = terms.map(Searcher.oneToken("dis-max entry", _))
     require(norm.distinct.size == norm.size, s"dis-max terms must be distinct, got $terms")
     require(tie >= 0.0 && tie <= 1.0, s"tie breaker must be in [0, 1], got $tie")
     searchGroupsWeighted(
@@ -1581,12 +1577,7 @@ final class Searcher(spark: SparkSession, root: String, cacheHot: Boolean = fals
   def suggestMany(probes: Seq[(Int, String)], n: Int,
       maxDist: Int = 2): DataFrame = {
     require(maxDist >= 0 && maxDist <= 4, s"maxDist must be in [0,4], got $maxDist")
-    val norm: Seq[(Int, String)] = probes.map { case (id, p) =>
-      val toks = Tokenizer.tokenize(p)
-      require(toks.length == 1,
-        s"suggest probe must normalize to exactly one token, got '$p'")
-      (id, toks.head)
-    }
+    val norm = probes.map { case (id, p) => (id, Searcher.oneToken("suggest probe", p)) }
     val empty = spark.emptyDataset[(Int, Int, String, Int, Long)]
       .toDF("query_id", "rank", "term", "dist", "df")
     if (norm.isEmpty) return empty
@@ -1661,9 +1652,7 @@ final class Searcher(spark: SparkSession, root: String, cacheHot: Boolean = fals
       .distinct.sorted.filterNot(negTerms.contains)
     if (mustTerms.isEmpty && phraseToks.isEmpty)
       return search(scoring.mkString(" "), k, negQuery = negTerms.mkString(" "))
-    if (phraseToks.nonEmpty)
-      require(hasPositions,
-        s"bool query with a phrase clause needs the positions sidecar at $root")
+    if (phraseToks.nonEmpty) requirePositions()
     val p = plan(scoring ++ negTerms)
     val gateTerms = (mustTerms ++ phraseToks).distinct
     if (!gateTerms.forall(p.live)) return noHits
@@ -1776,12 +1765,12 @@ object Searcher {
     PosRow(r("term"), bucket, r("df"), r[Array[PointRow]]("blocks")
       .map(b => PosBlock(b("first"), b("last"), b("count"), b("bytes"))))
 
-  /** A query plan ([[Searcher.plan]]): the dictionary rows of the query
-    * terms in this index, the statistics `g` they score with, and the
-    * rules every scoring mode plans by.
+  /** A query plan ([[Searcher.plan]]): the terms it `read`, their
+    * dictionary rows in this index, the statistics `g` they score with,
+    * and the rules every scoring mode plans by.
     */
-  private[index] final case class Plan(local: Map[String, DictRow], g: GlobalStats,
-      localAvgdl: Double) {
+  private[index] final case class Plan(read: Set[String], local: Map[String, DictRow],
+      g: GlobalStats, localAvgdl: Double) {
     /** The term has postings in this index. */
     def posts(t: String): Boolean = local.get(t).exists(_.df > 0L)
 
@@ -1858,27 +1847,29 @@ object Searcher {
     row.getOrElse(throw new IllegalStateException(s"index invariant violated: bucket $bucket " +
       s"has postings but no doclens row ($root)"))
 
-  /** The least string above every string that starts with `prefix`, in
-    * Parquet's unsigned UTF-8 byte order (code point order): `prefix`
-    * with its last code point incremented. None when there is no such
-    * string of the same length (an empty prefix, or one ending in
-    * U+10FFFF), which leaves the range unbounded.
+  /** The least string above every string that starts with a non-empty
+    * `prefix`: its last char incremented. Terms are ASCII [a-z0-9]
+    * ([[Tokenizer]]), where char order is Parquet's UTF-8 byte order; a
+    * head with any other char matches no term, whatever the bound.
     */
   private[index] def prefixEnd(prefix: String): Option[String] =
-    prefix.codePoints.toArray.lastOption.filter(_ < Character.MAX_CODE_POINT).map { c =>
-      val next = if (c + 1 == Character.MIN_SURROGATE) Character.MAX_SURROGATE + 1 else c + 1
-      prefix.substring(0, prefix.offsetByCodePoints(prefix.length, -1)) + Character.toString(next)
-    }
+    Option.when(prefix.nonEmpty)(prefix.init + (prefix.last + 1).toChar)
 
   private[index] def tooWide(what: String, maxExpansion: Int) = new IllegalArgumentException(
     s"$what expands to more than $maxExpansion terms — narrow it or raise maxExpansion")
 
+  /** The one token `s` (named `what` in the error) normalizes to. */
+  private[index] def oneToken(what: String, s: String): String = {
+    val toks = Tokenizer.tokenize(s)
+    require(toks.length == 1, s"$what must normalize to exactly one token, got '$s'")
+    toks.head
+  }
+
   /** A fuzzy probe's one token, with its edit distance checked. */
   private[index] def fuzzyProbe(probe: String, maxDist: Int): String = {
-    val toks = Tokenizer.tokenize(probe)
-    require(toks.length == 1, s"fuzzy probe must normalize to exactly one token, got '$probe'")
+    val q = oneToken("fuzzy probe", probe)
     require(maxDist >= 0 && maxDist <= 4, s"maxDist must be in [0,4], got $maxDist")
-    toks.head
+    q
   }
 
   /** Bounded Levenshtein distance: the exact edit distance if ≤ maxDist,

@@ -28,7 +28,8 @@ import graft.oracle.ExactScorer
   * `searchConjunctiveMany`; and every term-expanding mode (prefix,
   * wildcard, regexp, fuzzy, batched fuzzy, terms-enum), on a default and
   * a `cacheHot` Searcher, ≡ the brute-force expansion over the generated
-  * vocabulary fed to `search`/`searchMany`.
+  * vocabulary fed to `search`/`searchMany`, a small `maxExpansion`
+  * failing exactly when the expansion is wider.
   * (Plain scalacheck generators sampled in a loop, as in CodecSpec; N is
   * small to keep the suite's runtime bounded.)
   */
@@ -265,17 +266,27 @@ class DifferentialPropSpec extends SparkSpec {
       if (vocab.nonEmpty) {
         patternGens(vocab).flatMap(g => Seq(draw(g), draw(g))).foreach { case (kind, p) =>
           seen += kind
-          val (expected, run) = kind.takeWhile(_ != ':') match {
-            case "prefix" =>
-              (want(_.startsWith(p)), (se: Searcher) => se.searchPrefix(p, c.k))
-            case "wildcard" =>
-              (want(_.matches(p.replace("*", ".*"))), (se: Searcher) => se.searchWildcard(p, c.k))
-            case _ =>
-              (want(_.matches(p)), (se: Searcher) => se.searchRegexp(p, c.k))
+          val (accept, run) = kind.takeWhile(_ != ':') match {
+            case "prefix" => ((t: String) => t.startsWith(p),
+              (se: Searcher, m: Int) => se.searchPrefix(p, c.k, m))
+            case "wildcard" => ((t: String) => t.matches(p.replace("*", ".*")),
+              (se: Searcher, m: Int) => se.searchWildcard(p, c.k, m))
+            case _ => ((t: String) => t.matches(p),
+              (se: Searcher, m: Int) => se.searchRegexp(p, c.k, m))
           }
+          val expected = want(accept)
           if (expected.nonEmpty) seen += s"${kind.takeWhile(_ != ':')} hit"
-          assert(hits(run(s)) == expected, s"$kind '$p': $ctx")
-          assert(hits(run(hot)) == expected, s"$kind '$p' (cacheHot): $ctx")
+          assert(hits(run(s, 1024)) == expected, s"$kind '$p': $ctx")
+          assert(hits(run(hot, 1024)) == expected, s"$kind '$p' (cacheHot): $ctx")
+          // the loud bound: a small maxExpansion fails iff the expansion is wider
+          val m = draw(Gen.choose(1, 3))
+          for (se <- Seq(s, hot)) {
+            if (vocab.count(accept) > m) {
+              seen += "bound exceeded"
+              val e = intercept[IllegalArgumentException](run(se, m))
+              assert(e.getMessage.contains("expands to"), s"$kind '$p' m=$m: ${e.getMessage}")
+            } else assert(hits(run(se, m)) == expected, s"$kind '$p' m=$m: $ctx")
+          }
         }
         val probes = (1 to 3).map(_ => draw(fuzzyGen(vocab))).zipWithIndex
           .map { case ((q, d), id) => (id, q, d) }
@@ -307,7 +318,7 @@ class DifferentialPropSpec extends SparkSpec {
       "wildcard: leading *", "wildcard: inner *", "wildcard: trailing *",
       "regexp: literal head", "regexp: no head", "regexp: optional last literal",
       "fuzzy d=0", "fuzzy d=1", "fuzzy d=2",
-      "prefix hit", "wildcard hit", "regexp hit", "fuzzy hit") -- seen.result()
+      "prefix hit", "wildcard hit", "regexp hit", "fuzzy hit", "bound exceeded") -- seen.result()
     assert(missed.isEmpty, s"cases never generated: $missed")
   }
 

@@ -149,6 +149,29 @@ class PointReadSpec extends SparkSpec {
       }
       assert(got == want, s"prefix '$p'")
       assert(jobs == 0, s"termsEnum('$p') ran $jobs Spark jobs")
+      // the read stops at the limit: in the first file, at its end, past it
+      val inFirst = files.sortBy(_.head).map(_.count(_.startsWith(p))).find(_ > 0).getOrElse(0)
+      for (n <- Seq(1, inFirst, inFirst + 1).distinct if n > 0 && n <= want.size) {
+        val firstN = s.termsEnum(Seq(0 -> p), n).as[(Int, String, Long)].collect()
+          .map(r => (r._2, r._3)).toSeq
+        assert(firstN == want.take(n), s"prefix '$p', first $n")
+      }
+    }
+    // files with overlapping key ranges: no key order to stop in, so the
+    // whole range is read and the first `n` terms are still the least
+    rewrite(dictPath, spark.read.parquet(dictPath).repartition(4, col("df"))
+      .sortWithinPartitions(col("term")))
+    val ranges = dictFileTerms(multi).map(f => (f.head, f.last)).sorted
+    assert(ranges.zip(ranges.drop(1)).exists { case (a, b) => a._2 >= b._1 },
+      "fixture: the rewritten dictionary files should overlap")
+    val overlapping = new Searcher(spark, multi)
+    val p = crossing.take(1)
+    val want = spark.read.parquet(dictPath).where(col("term").startsWith(p)).select("term", "df").as[(String, Long)]
+      .collect().sortBy(_._1).toSeq
+    for (n <- Seq(1, 3, want.size, Int.MaxValue)) {
+      val got = overlapping.termsEnum(Seq(0 -> p), n).as[(Int, String, Long)].collect()
+        .map(r => (r._2, r._3)).toSeq
+      assert(got == want.take(n), s"overlapping files, prefix '$p', first $n")
     }
   }
 
