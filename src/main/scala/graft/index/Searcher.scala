@@ -92,10 +92,11 @@ final class Searcher(spark: SparkSession, root: String, cacheHot: Boolean = fals
     s"index at $root was built by an older graft version (dictionary has " +
       "no per-term bucket lists) — delete the index root and rebuild")
   // the serving-mode tables load on the driver through the point
-  // readers: a hot fill runs no Spark job. Term-sorted, so an expansion
-  // walks just its key range, in order.
-  private lazy val hotDict: collection.immutable.TreeMap[String, DictRow] =
-    collection.immutable.TreeMap.from(dictReader.readAll(Searcher.dictRow).map(d => d.term -> d))
+  // readers: a hot fill runs no Spark job
+  private lazy val hotDict: Map[String, DictRow] =
+    dictReader.readAll(Searcher.dictRow).map(d => d.term -> d).toMap
+  // hotDict's terms in order (sorted on the first expansion)
+  private lazy val hotTerms: IndexedSeq[String] = hotDict.keys.toIndexedSeq.sorted
   private lazy val doclensDS = spark.read.parquet(layout.doclens).as[DocLenRow]
 
   // ONE file listing per Searcher for every table: index roots are
@@ -477,8 +478,8 @@ final class Searcher(spark: SparkSession, root: String, cacheHot: Boolean = fals
 
   /** The one dictionary expansion of every term-expanding mode: the
     * `(term, df)` pairs that start with the literal `head` and pass
-    * `accept`, in term order, at most `limit` of them — from `hotDict`
-    * under `cacheHot`, walking the head's key range in order; else, for a
+    * `accept`, in term order, at most `limit` of them — under `cacheHot`,
+    * from a walk of the sorted hot terms over the head's run; else, for a
     * non-empty `head`, from a key-range read of the term-sorted dictionary
     * on the driver (no Spark job) that stops at the `limit`-th accepted
     * term; else (a leading `*`, a regexp without a literal head, fuzzy)
@@ -487,9 +488,9 @@ final class Searcher(spark: SparkSession, root: String, cacheHot: Boolean = fals
     */
   private def expand(head: String, accept: String => Boolean,
       limit: Int): Seq[(String, Long)] = Searcher.prefixEnd(head) match {
-    case hi if cacheHot =>
-      hi.fold(hotDict.rangeFrom(head))(hotDict.range(head, _)).valuesIterator
-        .filter(d => accept(d.term)).map(d => d.term -> d.df).take(limit).toSeq
+    case _ if cacheHot =>
+      Iterator.range(hotTerms.search(head).insertionPoint, hotTerms.length).map(hotTerms)
+        .takeWhile(_.startsWith(head)).filter(accept).take(limit).map(t => t -> hotDict(t).df).toSeq
     case Some(hi) =>
       dictReader.readRange(head, hi, limit)(r => (r[String]("term"), r[Long]("df")))(
         t => accept(t._1)).sortBy(_._1).take(limit)
@@ -499,8 +500,8 @@ final class Searcher(spark: SparkSession, root: String, cacheHot: Boolean = fals
         .collect().toSeq.sortBy(_._1)
   }
 
-  /** [[expand]] under the loud `maxExpansion` bound: it reads at most one
-    * term past the bound and fails if there is one.
+  /** [[expand]] under the loud `maxExpansion` bound: it asks for at most
+    * one term past the bound and fails if there is one.
     */
   private def expandAtMost(what: String, head: String, accept: String => Boolean,
       maxExpansion: Int): Seq[String] = {
@@ -836,7 +837,8 @@ final class Searcher(spark: SparkSession, root: String, cacheHot: Boolean = fals
     */
   def termsEnum(prefixes: Seq[(Int, String)], n: Int): DataFrame =
     prefixes.flatMap { case (id, p) => expand(p, _ => true, n).map { case (t, df) => (id, t, df) } }
-      .sortBy(r => (r._1, r._2)).toDF("prefix_id", "term", "df")
+      .sortBy(r => (r._1, r._2))
+      .toDF("prefix_id", "term", "df")
 
   /** Index-only DOC-LENGTH PERCENTILES (the index-stats readout a corpus
     * census runs; the reference's per-level stats direction,
